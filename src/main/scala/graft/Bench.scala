@@ -20,21 +20,14 @@ import org.apache.spark.sql.SparkSession
   *     and after the last pass; if the two disagree by >2x the whole run was
   *     contended and the output says so ("contended": true) — r4 burned judge
   *     cycles adjudicating six phantom regressions from one loaded machine.
-  *     Triage protocol for any suspicious per-query delta: QBench it 3x
-  *     (`runMain graft.tools.QBench <query>`) before treating it as real.
+  *     Triage protocol for any suspicious per-query delta: re-time it 3x
+  *     (`runMain graft.tools.QProf <query>`) before treating it as real.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local("graft-bench", cpus)
 
     // noop sink: executes the full plan (incl. top-level sorts/projects that
     // a count() would let Catalyst drop) without writing anything.

@@ -29,8 +29,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * is a signed 64-bit, and the hash divides evenly into the 4×15-bit
   * Hamming bands the candidate join buckets on.
   *
-  * Registered per-session (`Pipeline.registerNativeFns`) and via
-  * `GraftExtensions.injectFunction`.
+  * Registered through `GraftExtensions.injectFunction` (see [[Natives]]).
   */
 case class AHash60(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType

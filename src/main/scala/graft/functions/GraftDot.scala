@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -122,9 +121,9 @@ case class GraftDotLong(left: Expression, right: Expression) extends BinaryExpre
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-level registration of the repo's native expressions, for sessions
-  * not built with GraftExtensions (e.g. the driver's Verify/Bench sessions).
-  * Idempotent. */
+/** The repo's native expressions by SQL name. `GraftExtensions` injects
+  * each into every session `Sessions.local` builds, so queries call them
+  * from `expr(...)` strings without any per-query registration. */
 object Natives {
   import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
   import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -152,8 +151,4 @@ object Natives {
     }),
     ("graft_might_contain", classOf[BloomFilterMightContain].getName,
       exprs => BloomFilterMightContain(exprs(0), exprs(1))))
-
-  def register(s: SparkSession): Unit = all.foreach { case (name, _, builder) =>
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
 }

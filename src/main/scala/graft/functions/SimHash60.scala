@@ -24,8 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * signature scan is the dominant cost of simhash dedup — this is the stage
   * worth a native expression, and nothing else is.
   *
-  * Registered per-session (`Pipeline.registerNativeFns`) and via
-  * `GraftExtensions.injectFunction`.
+  * Registered through `GraftExtensions.injectFunction` (see [[Natives]]).
   */
 case class SimHash60(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType

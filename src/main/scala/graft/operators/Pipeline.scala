@@ -39,11 +39,6 @@ object Pipeline {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
-  /** Register the repo's native Catalyst expressions on a session that was
-    * not built with GraftExtensions (e.g. the driver's Verify/Bench
-    * sessions). Idempotent. */
-  def registerNativeFns(s: SparkSession): Unit = graft.functions.Natives.register(s)
-
   /** q_importance_resample's corpus-side gram stream (doc, lang, hashed
     * bucket) — factored so the PlanSpec pin and the public query share
     * ONE definition. */
@@ -659,7 +654,6 @@ object Pipeline {
     // reaches the output — the verdict column comes from exact fp equality,
     // which the oracle recomputes join-only.
     "q_dedup_incremental" -> { (s, dir) =>
-      graft.functions.Natives.register(s)
       val d = docs(s, dir).withColumn("fp",
         md5(concat_ws(" ", slice(split(col("text"), " "), 1, 8))))
       val history = d.filter(col("doc_id") % 10 =!= 0).select("fp")
@@ -1263,7 +1257,6 @@ object Pipeline {
     // (doc_id, shingles) projection, which AQE turns into broadcast joins at
     // runtime.
     "q_minhash_lsh" -> { (s, dir) =>
-      registerNativeFns(s)
       val mh = docsPar(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 3)
@@ -1314,7 +1307,6 @@ object Pipeline {
     // ∝ |delta| · bucket occupancy; the index is touched only on the
     // probed (band, bkey) keys.
     "q_minhash_incremental" -> { (s, dir) =>
-      registerNativeFns(s)
       val mh = docsPar(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 3)
@@ -1378,7 +1370,6 @@ object Pipeline {
     // (same reasoning as q_minhash_lsh); oversized buckets dropped at
     // BucketCap.
     "q_simhash" -> { (s, dir) =>
-      registerNativeFns(s)
       val sh = docsPar(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .select(col("doc_id"),
@@ -1420,7 +1411,6 @@ object Pipeline {
     // construction (bucketed candidates only), one shuffle per band join
     // side.
     "q_image_neardup" -> { (s, dir) =>
-      registerNativeFns(s)
       // near-dup fixture: every 10th blob gets a SAME-LENGTH perturbed
       // variant (every 'e' byte bumped to 'f' — the byte-grid analog of a
       // re-encode that nudges pixel values), the case a perceptual hash
@@ -2093,7 +2083,6 @@ object Pipeline {
     // scale.
     "q_substring_dedup" -> { (s, dir) =>
       val W = 8
-      registerNativeFns(s)
       val spans = docsPar(s, dir)
         .withColumn("w", split(col("text"), " "))
         .filter(size(col("w")) >= W)
@@ -4107,7 +4096,6 @@ object Pipeline {
     // ACCURACY (the ER evaluation number), plus the exact-decimal mean
     // best score.
     "q_entity_match" -> { (s, dir) =>
-      registerNativeFns(s)
       val pairs = erCandidates(s, dir)
         .withColumn("jw",
           round(expr("graft_jaro_winkler(dirty_name, clean_name)"), 6)
@@ -4154,7 +4142,6 @@ object Pipeline {
     // the recall knob a linker tunes w by. Both engines compute the
     // neighborhood with lead(k) over the identical total order.
     "q_sorted_neighborhood" -> { (s, dir) =>
-      registerNativeFns(s)
       val c = Tables.load(s, dir, "customer")
       val clean = c.select(col("c_custkey").as("k"), col("c_name").as("nm"),
         col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"))
@@ -4231,7 +4218,6 @@ object Pipeline {
     // the erCandidates composed-key equi-join (never all-pairs) +
     // map-side threshold grid + ≤5-row rollup.
     "q_er_threshold_sweep" -> { (s, dir) =>
-      registerNativeFns(s)
       val pairs = erCandidates(s, dir)
         .withColumn("jw",
           round(expr("graft_jaro_winkler(dirty_name, clean_name)"), 6)
@@ -4696,7 +4682,6 @@ object Pipeline {
     // (never all-pairs); the estimate is a 1-row sufficient-stat agg
     // unpivoted to 2 field rows.
     "q_fellegi_sunter" -> { (s, dir) =>
-      registerNativeFns(s)
       val a = erCandidates(s, dir)
         .withColumn("mt", col("dirty_key") === col("clean_key"))
         .withColumn("agn",
@@ -4747,7 +4732,6 @@ object Pipeline {
     // the erCandidates blocked join is the only corpus-sized work; EM
     // runs on 4 cells.
     "q_fs_em" -> { (s, dir) =>
-      registerNativeFns(s)
       val cells = erCandidates(s, dir)
         .select(
           when(round(expr("graft_jaro_winkler(dirty_name, clean_name)"), 6)

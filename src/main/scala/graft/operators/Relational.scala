@@ -1536,14 +1536,9 @@ object Relational {
 
     // directJoin analog through a custom Rule[LogicalPlan] (SURVEY.md §7.2
     // step 5): a tiny literal key list joined against customer becomes a
-    // pushed IN-filter point read on the key — see graft.plans.DirectJoinRule.
-    // Registered via experimental.extraOptimizations so it also fires under
-    // externally-built sessions; Sessions.local additionally installs it via
-    // SparkSessionExtensions (GraftExtensions).
+    // pushed IN-filter point read on the key — see graft.plans.DirectJoinRule,
+    // which every session gets from Sessions.local (GraftExtensions).
     "q_direct_join" -> { (s, dir) =>
-      if (!s.experimental.extraOptimizations.contains(graft.plans.DirectJoinRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.DirectJoinRule
       // a driver-local list → LocalRelation, the shape the rule matches
       val keys = s.createDataFrame(
         java.util.Arrays.asList(Seq(7L, 42L, 101L).map(org.apache.spark.sql.Row(_)): _*),
@@ -1561,9 +1556,6 @@ object Relational {
     // (asserted in PlanSpec), just a point-read scan; the purest form of
     // the connector's key-routed lookup.
     "q_direct_semi_join" -> { (s, dir) =>
-      if (!s.experimental.extraOptimizations.contains(graft.plans.DirectJoinRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.DirectJoinRule
       val keys = s.createDataFrame(
         java.util.Arrays.asList(Seq(7L, 42L, 101L, 42L).map(org.apache.spark.sql.Row(_)): _*),
         StructType(Seq(StructField("lookup_key", LongType, nullable = false))))

@@ -38,7 +38,6 @@ object Similarity {
     * work; on a real cluster the scan already has many splits and
     * Tables.spread adds no shuffle). */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Natives.register(s)
     Tables.spread(Tables.load(s, dir, "embeddings"))
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -951,7 +950,6 @@ object Similarity {
     // direction (deterministic, |q| = 8 exactly). The global-rank window
     // runs over ≤ splits×k = 100 candidate rows, never the corpus.
     "q_kv_ann_topk" -> { (s, dir) =>
-      graft.functions.Natives.register(s)
       val name = s"embed_ann:$dir"
       graft.sources.KeyGroupedRegistry.stageMulti(name,
         Tables.load(s, dir, "embeddings")
@@ -986,7 +984,6 @@ object Similarity {
     // at 100 TB the filter cuts the candidate scoring, not just the final
     // result.
     "q_kv_ann_filtered" -> { (s, dir) =>
-      graft.functions.Natives.register(s)
       val name = s"embed_annf:$dir"
       graft.sources.KeyGroupedRegistry.stageMulti(name,
         Tables.load(s, dir, "embeddings")

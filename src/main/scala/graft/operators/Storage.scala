@@ -621,18 +621,16 @@ object Storage {
     // re-expressed Dataset-first — r9 verdict item 6): a TYPED driver-side
     // key set (Dataset[Long] via its Encoder, the `RDD[K]` of the RDD API)
     // inner-joined against the KV table on its partition key. DirectJoinRule
-    // rewrites the join into a pushed `c_nationkey IN (...)` point read, so
-    // only the splits owning the requested keys are planned (PlanSpec
-    // asserts planned < ring size) — exactly joinWithCassandraTable's
+    // (installed by Sessions.local through GraftExtensions) rewrites the
+    // join into a pushed `c_nationkey IN (...)` point read, so only the
+    // splits owning the requested keys are planned (PlanSpec asserts
+    // planned < ring size) — exactly joinWithCassandraTable's
     // contract: per-left-element point lookups, left multiplicity preserved
     // (key 3 appears twice → its matches appear twice), keys with no
     // partition (99) yield nothing. At 100 TB the key list must stay
     // driver-sized — the rule's MaxKeys guard — or the plan correctly stays
     // a join; that mirrors the connector's directJoinSizeRatio gate.
     "q_kv_typed_join" -> { (s, dir) =>
-      if (!s.experimental.extraOptimizations.contains(graft.plans.DirectJoinRule))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.DirectJoinRule
       val (_, cName) = stageKv(s, dir)
       import s.implicits._
       val keys = Seq(1L, 3L, 3L, 7L, 99L).toDS().toDF("k")

@@ -23,13 +23,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * handling); it runs over the filtered scan.
   *
   * Semantically a pure optimization — plans that don't match are untouched,
-  * and the rewrite never changes results. Registered two ways:
-  *   - `GraftExtensions` via `SparkSessionBuilder.withExtensions` (used by
-  *     `Sessions.local`) — the SparkSessionExtensions path;
-  *   - appended to `spark.experimental.extraOptimizations` inside
-  *     `Relational.queries("q_direct_join")` so the rewrite also fires under
-  *     externally-built sessions (the driver's Verify/Bench).
-  * Both hooks run inside/after the fixed-point optimizer batch, so the rule
+  * and the rewrite never changes results. Installed once per session by
+  * `GraftExtensions` (`SparkSessionBuilder.withExtensions` in
+  * `Sessions.local`, which builds every session in this repo). The injected
+  * rule runs inside the fixed-point operator-optimization batch, so it
   * guards its own idempotence.
   *
   * Scale note: this is the right plan only when the key list is genuinely
@@ -116,7 +113,8 @@ object DirectJoinRule extends Rule[LogicalPlan] {
 }
 
 /** SparkSessionExtensions entry point: `.withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * or `spark.sql.extensions=graft.plans.GraftExtensions`. The one mechanism
+  * that installs the repo's optimizer rule and native functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => DirectJoinRule)

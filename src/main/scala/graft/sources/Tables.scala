@@ -61,17 +61,7 @@ object Tables {
     // wall-flat from 8→32). Half the cores, floor 4, keeps the parallel win
     // without the contention tax, and tracks the driver's lower-core bench
     // runs. Cluster scans have ≥cores splits, so this never fires there.
-    // env honored VERBATIM (clamped to [1, cores]) so A/B runs can restore
-    // width 1-3; the floor of 4 applies only to the cores/2 default
-    val p = sys.env.get("SPARK_GRAFT_SPREAD") match {
-      case Some(v) =>
-        val n = try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SPREAD must be an integer, got '$v'")
-        }
-        math.max(1, math.min(cores, n))
-      case None => math.min(cores, math.max(4, cores / 2))
-    }
+    val p = math.min(cores, math.max(4, cores / 2))
     if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p)
     else {
       // A split count ≥ p can still hide a serial scan: a parquet split

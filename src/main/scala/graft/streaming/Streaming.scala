@@ -233,9 +233,8 @@ object Streaming {
     * drain-to-completion bench. Results are trigger-count-invariant: every
     * query's output is the watermark-flushed final table (verified against
     * the batch-SQL oracle for all 37 streaming queries), never a per-batch
-    * history. Env knob restores the old reading for A/B. */
-  private val FilesPerTrigger =
-    sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "4")
+    * history. */
+  private val FilesPerTrigger = 4L
 
   private def stageRoot(tag: String, dir: String): String = {
     val safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -353,10 +352,9 @@ object Streaming {
   // State/shuffle partition count for the micro-batch pipelines: each
   // micro-batch commits one state file per partition per stateful operator
   // (a stream-stream join commits FOUR), so at KB-scale state the commit
-  // fan-out IS the per-trigger floor. Env-tunable because on a real cluster
-  // this knob is sized to state volume, never to cores.
-  private val StreamShuffle =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+  // fan-out IS the per-trigger floor. On a real cluster this is sized to
+  // state volume, never to cores; here 8, 4 and 2 measured the same.
+  private val StreamShuffle = "8"
 
   private def withStreamConf[T](s: SparkSession,
       provider: String = HdfsProvider)(body: => T): T = {
@@ -465,13 +463,10 @@ object Streaming {
           unix_micros(min(col("ts")).cast("timestamp"))) /
           (86400L * 1000000L)) + lit(1L)).as("d")).head().getLong(0)
       // chunks scale with FilesPerTrigger (2·FPT per base month) so each
-      // micro-batch covers ~half a month of event-time REGARDLESS of the
-      // trigger-batch knob — otherwise raising FilesPerTrigger widens the
-      // per-batch event-time span and the reported peak state re-couples
-      // to batch sizing instead of the watermark bound (r18 advice)
-      val fpt = math.max(1, FilesPerTrigger.toInt)
+      // micro-batch covers ~half a month of event-time — the reported peak
+      // state then tracks the watermark bound, not batch sizing
       math.max(Chunks,
-        math.min(64, math.ceil(2.0 * fpt * spanDays / 31.0).toInt))
+        math.min(64, math.ceil(2.0 * FilesPerTrigger * spanDays / 31.0).toInt))
     }
     val ded = eventStream(s, dir, "probe-dedup", chunks = probeChunks)
       .withWatermark("ts", "1 hour")
@@ -1569,7 +1564,6 @@ object Streaming {
     // O(nations·batches), never O(entities); the final readout sums the
     // partials to the exact q_entity_match answer.
     "q_stream_entity_match" -> { (s, dir) =>
-      graft.operators.Pipeline.registerNativeFns(s)
       val cleanIdx = graft.operators.Pipeline.erCleanIndex(s, dir)
         .drop("clean_acct")
       val matches = dirtyCustStream(s, dir, "ermatch")

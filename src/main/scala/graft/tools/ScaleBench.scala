@@ -231,7 +231,7 @@ object ScaleBench {
     val x100Dir = args.lift(2)
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val reps = graft.Sessions.envPositiveInt("SPARK_GRAFT_REPS", 2)
     val spark = graft.Sessions.local("graft-scalebench")
     spark.conf.set("spark.sql.files.maxPartitionBytes", 32L * 1024 * 1024)
 

@@ -7,8 +7,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Relational
-
 /** Property tests for graft.plans.DirectJoinRule (SURVEY.md §2.2 directJoin
   * analog): for ANY driver-known key list joined against a big table on its
   * key, the rule must
@@ -64,9 +62,6 @@ class DirectJoinSpec extends AnyFunSuite with SparkFixture {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), p)
     assert(res.passed, res.status)
   }
-
-  // Install the rule on the shared session (idempotent guard inside).
-  Relational.queries("q_direct_join")(spark, sfDir).collect()
 
   private val custkeys: Array[Long] = graft.sources.Tables
     .load(spark, sfDir, "customer").select("c_custkey")

@@ -60,7 +60,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
 
   test("native SimHash60 expression matches the SQL-HOF formulation") {
     import org.apache.spark.sql.functions._
-    Pipeline.registerNativeFns(spark)
     val hw = graft.sources.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         expr("transform(split(text, ' '), wd -> cast(conv(substring(md5(wd),1,15),16,10) as bigint))").as("hw"))
@@ -75,7 +74,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
 
   test("native MinHash32 expression matches the SQL-HOF formulation") {
     import org.apache.spark.sql.functions._
-    Pipeline.registerNativeFns(spark)
     val xs = graft.sources.Tables.load(spark, sfDir, "documents")
       .select(expr("transform(split(text, ' '), s -> cast(conv(substring(md5(s),1,8),16,10) as bigint))").as("xs"))
     val mismatches = xs.select(
@@ -89,7 +87,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
 
   test("native SpanHash8 expression matches the SQL-HOF formulation") {
     import org.apache.spark.sql.functions._
-    Pipeline.registerNativeFns(spark)
     val hofSh = (2 to 8).foldLeft("slice(hw, 1, size(hw)-7)") { (acc, k) =>
       s"zip_with($acc, slice(hw, $k, size(hw)-7), " +
         "(a, b) -> (a * 1000003 + b) % 2147483647)"
@@ -117,7 +114,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
 
   test("native SignLsh expression matches the SQL-HOF formulation") {
     import org.apache.spark.sql.functions._
-    Pipeline.registerNativeFns(spark)
     val v = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .select(col("embedding").cast("array<double>").as("v"))
     val mismatches = v.select(
@@ -135,7 +131,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
 
   test("native GraftDotLong matches the zip_with/aggregate formulation") {
     import org.apache.spark.sql.functions._
-    Pipeline.registerNativeFns(spark)
     val v = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .select(expr("transform(embedding, x -> cast(floor(x * 100) as bigint))").as("q"))
     val mismatches = v.crossJoin(v.limit(3).select(col("q").as("p")))
@@ -147,7 +142,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("SignLsh yields NULL for short or null-element vectors") {
-    Pipeline.registerNativeFns(spark)
     // id-dependent inputs defeat constant folding so the codegen path runs
     val r = spark.range(1).selectExpr(
       "graft_signlsh(array(cast(id as double))) AS short_v",
@@ -159,7 +153,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
 
   test("native GraftDot expression matches the zip_with/aggregate formulation") {
     import org.apache.spark.sql.functions._
-    Pipeline.registerNativeFns(spark)
     val v = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .select(col("embedding").cast("array<double>").as("v"))
     val mismatches = v.crossJoin(v.limit(3).select(col("v").as("qv")))
@@ -306,7 +299,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_ahash60: perceptual robustness, interpreted == codegen, edge cases") {
-    graft.operators.Pipeline.registerNativeFns(spark)
     import org.apache.spark.sql.functions.{col, expr}
     def hash(s: String): Long =
       spark.sql(s"SELECT graft_ahash60(encode('${s}', 'UTF-8'))").head().getLong(0)
@@ -347,7 +339,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bloom natives: members always hit, non-members mostly miss") {
-    graft.functions.Natives.register(spark)
     import org.apache.spark.sql.functions.{call_function, col, lit, xxhash64}
     import spark.implicits._
     val members = (0 until 1000).map(i => s"member_$i").toDF("s")
@@ -1556,7 +1547,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_jaro_winkler: published vectors, edges, interpreted == codegen") {
-    graft.operators.Pipeline.registerNativeFns(spark)
     def jw(a: String, b: String): Double =
       spark.sql(s"SELECT graft_jaro_winkler('$a', '$b')").head().getDouble(0)
     // Winkler's published vectors (also DuckDB's)
@@ -5166,7 +5156,6 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
     val r = Pipeline.queries("q_fs_em")(spark, emDir).collect().head
     // recover the 4-pattern histogram exactly as the query builds it:
     // composed (nk, seg, sorted-digit) block key + the BucketCap guard
-    Pipeline.registerNativeFns(spark)
     val c = spark.read.parquet(s"$emDir/customer.parquet")
     val pairs = {
       import org.apache.spark.sql.functions._

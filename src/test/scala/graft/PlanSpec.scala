@@ -180,7 +180,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // rewrites the planted In to InSet in the same fixed-point batch; the
     // rule must recognize the rewritten form or it re-adds the filter every
     // iteration (optimizer churn + stacked duplicate filters).
-    Relational.queries("q_direct_join")(spark, sfDir).collect() // installs rule
     val keys = spark.createDataFrame(
       java.util.Arrays.asList((1L to 20L).map(org.apache.spark.sql.Row(_)): _*),
       org.apache.spark.sql.types.StructType(Seq(

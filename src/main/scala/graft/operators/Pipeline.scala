@@ -5029,13 +5029,16 @@ object Pipeline {
 
   /** q_kcore's oracle: wordGraph's CTE chain + the symmetrized edge set +
     * the same 8 peeling rounds unrolled (node set n0..n8, induced edges
-    * per round), then the final induced-degree readout. */
+    * per round), then the final induced-degree readout. Each node set is
+    * `AS MATERIALIZED`: inlined, every round re-expands all earlier rounds
+    * (each n$i is read twice by the next), which DuckDB cannot finish in
+    * bounded memory even at sf0.001. */
   private def kcoreOracle: String = {
     val rounds = (1 to 8).map { i =>
       s"""e$i AS (
          |  SELECT u.w1, u.w2 FROM und u
          |  JOIN n${i - 1} a ON u.w1 = a.w JOIN n${i - 1} b ON u.w2 = b.w),
-         |n$i AS (
+         |n$i AS MATERIALIZED (
          |  SELECT w1 AS w FROM e$i GROUP BY w1 HAVING COUNT(*) >= 3)"""
         .stripMargin
     }.mkString(",\n")

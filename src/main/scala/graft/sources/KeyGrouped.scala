@@ -56,9 +56,9 @@ object KeyGroupedRegistry {
   /** One staged table: schema, the partition-key columns (each integral or
     * string — the CQL partition-key types this demo carries), the rows
     * grouped by key tuple — one entry per distinct tuple = one input
-    * split — and any number of clustering columns (integral, timestamp,
-    * date or string; temporal cells stored in their internal long
-    * encoding). With clustering columns the table models Cassandra's full
+    * split, sorted by [[keyOrder]] — and any number of clustering columns
+    * (integral, timestamp, date or string; temporal cells stored in their
+    * internal long encoding). With clustering columns the table models Cassandra's full
     * `((pk...), ck1, ck2, ...)` primary key: rows are kept sorted by the
     * ck TUPLE inside each partition, predicates following the CQL prefix
     * rule (equality on a ck prefix, range on the next) read one
@@ -283,6 +283,40 @@ object KeyGroupedRegistry {
     * should fail loudly at staging, not OOM the driver. */
   val StagingRowCap = 5000000
 
+  /** The order of every `Entry.parts`: ascending by this string, ties in
+    * commit order (stable). Staging establishes it and every commit keeps
+    * it, which is what lets a scan find a key — and an upsert its partition
+    * — by binary search. Integral cells stringify alike whatever their
+    * boxing width, so a staged Int key and a written Long key agree. */
+  private[sources] def keyOrder(k: Seq[Any]): String =
+    k.map(String.valueOf).mkString("\u0000")
+
+  /** First index of `parts` whose key sorts after `s` (strict) or at/after
+    * it, by [[keyOrder]]. */
+  private def searchKey(parts: Array[(Vector[Any], Array[Array[Any]])], s: String,
+      strict: Boolean): Int = {
+    var lo = 0; var hi = parts.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      val c = keyOrder(parts(mid)._1).compareTo(s)
+      if (c < 0 || (strict && c == 0)) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Index of key `k` in `parts` (key tuples compare by `==`, under which
+    * integral cells of any boxing width are equal). */
+  private[sources] def indexOfKey(parts: Array[(Vector[Any], Array[Array[Any]])],
+      k: Vector[Any]): Option[Int] = {
+    val s = keyOrder(k)
+    var i = searchKey(parts, s, strict = false)
+    while (i < parts.length && keyOrder(parts(i)._1) == s) {
+      if (parts(i)._1 == k) return Some(i)
+      i += 1
+    }
+    None
+  }
+
   /** Collect a (small) DataFrame into the registry grouped by the key tuple.
     * Driver-side by design: the registry emulates the external cluster that
     * owns the data; at real scale rows never pass through the driver. */
@@ -355,7 +389,7 @@ object KeyGroupedRegistry {
       }
       .groupBy(a => kis.map(a(_)).toVector)
       .toArray
-      .sortBy(_._1.map(String.valueOf).mkString("\u0000")) // any stable order
+      .sortBy(kv => keyOrder(kv._1)) // the lookup order every commit keeps
       .map { case (k, rows) =>
         k -> (if (cks.isEmpty) rows
               else rows.sorted(ckTupleOrdering(cks, descFlags)))
@@ -383,15 +417,25 @@ object KeyGroupedRegistry {
   /** INSERT-as-upsert commit (CQL write semantics, SURVEY §2.2 write row):
     * each incoming row replaces the row with the same primary key — the
     * whole partition for a key-only table, the matching `(pk..., ck)` row
-    * when a clustering column is declared — and new keys append. Partitions
-    * stay ck-sorted so range slicing remains valid after a write. */
+    * when a clustering column is declared — and new keys are inserted.
+    * The commit costs what the batch touches: `parts` is copied, only the
+    * touched partitions are rewritten (and re-sorted by ck, so range
+    * slicing remains valid), and each new key is spliced in at its
+    * binary-searched [[keyOrder]] position, after any equal-ordered key
+    * already there, new keys in first-seen order. The result is exactly
+    * the full rebuild's (UpsertSpec checks it against one). */
   def applyUpsert(name: String, rows: Array[(Vector[Any], Array[Any])]): Unit = synchronized {
     val e = get(name)
     val cks = e.ckIdxs
-    val byPk = scala.collection.mutable.LinkedHashMap(
-      e.parts.map { case (k, rs) => k -> rs.toBuffer }.toIndexedSeq: _*)
+    val touched = scala.collection.mutable.LinkedHashMap
+      .empty[Int, scala.collection.mutable.Buffer[Array[Any]]]
+    val fresh = scala.collection.mutable.LinkedHashMap
+      .empty[Vector[Any], scala.collection.mutable.Buffer[Array[Any]]]
     rows.foreach { case (pk, row) =>
-      val buf = byPk.getOrElseUpdate(pk, scala.collection.mutable.Buffer.empty)
+      val buf = indexOfKey(e.parts, pk) match {
+        case Some(i) => touched.getOrElseUpdate(i, e.parts(i)._2.toBuffer)
+        case None => fresh.getOrElseUpdate(pk, scala.collection.mutable.Buffer.empty)
+      }
       if (cks.nonEmpty) {
         val i = buf.indexWhere(r =>
           cks.forall(c => compareCkCell(r(c), row(c)) == 0))
@@ -400,11 +444,22 @@ object KeyGroupedRegistry {
         buf.clear(); buf += row
       }
     }
-    val parts = byPk.toArray.map { case (k, buf) =>
-      val arr = buf.toArray
-      k -> (if (cks.isEmpty) arr
-            else arr.sorted(ckTupleOrdering(cks, e.ckDescFlags)))
-    }.sortBy(_._1.map(String.valueOf).mkString("\u0000"))
+    def sortedRows(buf: scala.collection.mutable.Buffer[Array[Any]]): Array[Array[Any]] =
+      if (cks.isEmpty) buf.toArray
+      else buf.toArray.sorted(ckTupleOrdering(cks, e.ckDescFlags))
+    val base = e.parts.clone()
+    touched.foreach { case (i, buf) => base(i) = base(i)._1 -> sortedRows(buf) }
+    val adds = fresh.toArray.map { case (k, buf) => k -> sortedRows(buf) }
+      .sortBy(kv => keyOrder(kv._1))
+    val parts = new Array[(Vector[Any], Array[Array[Any]])](base.length + adds.length)
+    var from = 0
+    adds.iterator.zipWithIndex.foreach { case (kv, n) =>
+      val at = searchKey(base, keyOrder(kv._1), strict = true)
+      System.arraycopy(base, from, parts, from + n, at - from)
+      parts(at + n) = kv
+      from = at
+    }
+    System.arraycopy(base, from, parts, from + adds.length, base.length - from)
     // static cells: any write carrying a non-null static value updates the
     // PARTITION's cell (a null is untouched, like the cellwise UPDATE rule)
     val sis = e.staticIdxs
@@ -1034,7 +1089,8 @@ class KVDataWriter(schema: StructType, keyIxs: Array[Int], ckIxs: Array[Int])
   * COUNT(*) is answered from the registry's per-key row counts without
   * materializing a single row — the `cassandraCount` analog at the source
   * level (the connector pushes counts to Cassandra's local count rather
-  * than shipping rows). Partial pushdown: each split returns its own count
+  * than shipping rows). Partial pushdown: the per-key counts fold into one
+  * count per replica set, one split each (the connector's split shape),
   * and Spark's final aggregate sums them, the same shape as parquet footer
   * counts — at 100 TB no row bytes cross the wire either way. */
 /** CQL's refusal of a filtered full scan (`Cannot execute this query as it
@@ -1194,10 +1250,11 @@ class KVScanBuilder(tname: String, entry: KeyGroupedRegistry.Entry,
 
   /** CQL `LIMIT n` analog: the limit reaches each split, which returns at
     * most n rows (per-partition limit — exactly CQL's PER PARTITION LIMIT
-    * shape, since one split = one partition); Spark applies the global
-    * limit over the per-split prefixes (isPartiallyPushed stays true). At
-    * 100 TB a LIMIT 10 probe reads ≤10 rows per partition instead of
-    * materializing the ring. */
+    * shape, since one split = one partition), and a plain limit plans only
+    * the splits, in Spark's read order, that serve the first n rows; Spark
+    * applies the global limit over the per-split prefixes
+    * (isPartiallyPushed stays true). At 100 TB a LIMIT 10 probe reads a
+    * few partitions instead of materializing the ring. */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
 
   /** True when the pushed filters pin EVERY partition-key column by
@@ -1275,10 +1332,10 @@ class KVScanBuilder(tname: String, entry: KeyGroupedRegistry.Entry,
     * reads, no row materialization; with pushed ck bounds, the edges of the
     * binary-searched slice). Value-column SUM/MIN/MAX/COUNT/AVG are CQL's
     * native aggregates (CQL 2.2+ `SELECT sum(x) ...` computed replica-side):
-    * one pass over the split's served rows, ONE aggregate row shipped per
-    * split instead of the rows themselves — at 100 TB the difference between
-    * a metadata-sized result and the corpus. None = some aggregate isn't
-    * servable. */
+    * one pass over each key's served rows, ONE aggregate row shipped per
+    * group split (ungrouped: per replica set) instead of the rows
+    * themselves — at 100 TB the difference between a metadata-sized result
+    * and the corpus. None = some aggregate isn't servable. */
   private def aggSpecs(agg: Aggregation): Option[Seq[KVScan.PushedAgg]] = {
     def isCk(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
       e match {
@@ -1364,8 +1421,9 @@ class KVScanBuilder(tname: String, entry: KeyGroupedRegistry.Entry,
     // metadata, ck-sorted partition edges and contiguous ck runs (the
     // cassandraCount analog, extended to ck extrema and CQL's
     // GROUP BY pk, ck-prefix). Ungrouped and subset groupings return
-    // per-split partials Spark re-aggregates (sum of counts, min of mins,
-    // max of maxes); groupings containing the full key tuple are complete
+    // partials Spark re-aggregates (sum of counts, min of mins, max of
+    // maxes) — ungrouped, one per replica set, subset groupings one per
+    // split; groupings containing the full key tuple are complete
     // (supportCompletePushDown). Not offered through an MV read: those
     // metadata live on base splits.
     if (mvPushed) return false
@@ -1403,7 +1461,7 @@ object KVScan {
   case object AggCount extends PushedAgg
   case object AggMinCk extends PushedAgg
   case object AggMaxCk extends PushedAgg
-  // CQL native aggregates over a value column (one-pass fold per split)
+  // CQL native aggregates over a value column (one-pass fold per key)
   final case class AggSumCol(col: String) extends PushedAgg
   final case class AggMinCol(col: String) extends PushedAgg
   final case class AggMaxCol(col: String) extends PushedAgg
@@ -1592,6 +1650,12 @@ object KVScan {
       case _ => None
     }
   }
+
+  /** Rows a planned split serves. */
+  def rowCount(p: InputPartition): Long = p match {
+    case kp: KVPartition => kp.rows.length.toLong
+    case mp: KVMultiPartition => mp.rows.length.toLong
+  }
 }
 
 class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
@@ -1771,12 +1835,14 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
     }
   }
 
+  private val at: Map[String, Int] = entry.keyCols.zipWithIndex.toMap
+  private def runtimeOk(k: Vector[Any], sets: Map[String, Set[Any]]): Boolean =
+    sets.forall { case (col, vs) => vs.exists(v => cellEq(k(at(col)), v)) }
+
+  /** Whether split `k` survives the pushed predicates (runtime key sets are
+    * applied on top, see [[plan]]). */
   private def keepKey(k: Vector[Any]): Boolean = {
-    val at = entry.keyCols.zipWithIndex.toMap
-    containsKeys.forall(_.contains(k)) &&
-    runtimeSets.forall { case (col, vs) =>
-      vs.exists(v => cellEq(k(at(col)), v))
-    } && pushed.forall {
+    containsKeys.forall(_.contains(k)) && pushed.forall {
       case EqualTo(a, v) if at.contains(a) => cellEq(k(at(a)), v)
       case In(a, vs) if at.contains(a) => vs.exists(v => cellEq(k(at(a)), v))
       // token-arc bounds (pushFilters admits these only under
@@ -1974,9 +2040,44 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
       case None => rows
     }
 
-  // partition COUNT is needed by outputPartitioning during planning —
-  // computed from keys alone, without projecting any rows
-  private lazy val keptKeys: Array[Vector[Any]] = entry.parts.map(_._1).filter(keepKey)
+  /** Key lookup: when every partition-key column has a pushed EqualTo/In
+    * whose values all carry the column's cell family (integral boxes for an
+    * integral column, strings for a string column), the candidate key
+    * tuples are the cross product of one value list per column — each found
+    * by binary search over `parts` (sorted by [[KeyGroupedRegistry.keyOrder]])
+    * instead of a filter over the ring. None = no such predicate set, or
+    * more candidates than keys (then the filter is no dearer). */
+  private lazy val lookupKeys: Option[Seq[Vector[Any]]] = {
+    val perCol = entry.keyCols.zip(entry.keyTypes).map { case (c, dt) =>
+      val family: Any => Boolean = dt match {
+        case StringType => _.isInstanceOf[String]
+        case _ => {
+          case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
+              _: java.lang.Long => true
+          case _ => false
+        }
+      }
+      pushed.toSeq.collect {
+        case EqualTo(a, v) if a == c => Seq(v)
+        case In(a, vs) if a == c => vs.toSeq
+      }.filter(_.forall(family)).minByOption(_.length)
+    }
+    if (perCol.exists(_.isEmpty) ||
+        perCol.foldLeft(1L)((n, vs) => (n * vs.get.length).min(Int.MaxValue)) >
+          entry.parts.length) None
+    else Some(perCol.foldLeft(Seq(Vector.empty[Any])) { (acc, vs) =>
+      for (k <- acc; v <- vs.get) yield k :+ v
+    })
+  }
+
+  /** Indices into `entry.parts` of the splits surviving the pushed
+    * predicates, ascending (= `parts` order). */
+  private lazy val keptIdx: Array[Int] = lookupKeys match {
+    case Some(ks) =>
+      ks.flatMap(KeyGroupedRegistry.indexOfKey(entry.parts, _))
+        .filter(i => keepKey(entry.parts(i)._1)).distinct.sorted.toArray
+    case None => entry.parts.indices.filter(i => keepKey(entry.parts(i)._1)).toArray
+  }
 
   /** MV route: the first pushed equality on a declared MV column. The scan
     * then reads the write-through projection keyed on that column — ONE MV
@@ -1986,18 +2087,20 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
     case EqualTo(a, v) if entry.mvCols.contains(a) => a -> v
   }
 
+  // key-grouped only while every key column survives column pruning —
+  // otherwise the grouping is unobservable by the query and unreportable
+  // (an MV read is keyed by the VIEW column, so it never reports the base
+  // grouping). A size-coalesced read packs many keys per split, so it
+  // cannot report per-key grouping either.
+  private def keyGrouped: Boolean = !aggPushed && mvPred.isEmpty &&
+    splitTargetRows.isEmpty && entry.keyCols.forall(required.fieldNames.contains)
+
   override def outputPartitioning(): Partitioning =
-    // key-grouped only while every key column survives column pruning —
-    // otherwise the grouping is unobservable by the query and unreportable
-    // (an MV read is keyed by the VIEW column, so it never reports the
-    // base grouping). A size-coalesced read packs many keys per split, so
-    // it cannot report per-key grouping either.
-    if (!aggPushed && mvPred.isEmpty && splitTargetRows.isEmpty &&
-        entry.keyCols.forall(required.fieldNames.contains))
+    if (keyGrouped)
       new KeyGroupedPartitioning(
         entry.keyCols.map(Expressions.identity).toArray[org.apache.spark.sql.connector.expressions.Expression],
-        keptKeys.length)
-    else new UnknownPartitioning(keptKeys.length)
+        basePlan.length)
+    else new UnknownPartitioning(basePlan.length)
 
   /** External key values → the internal form `HasPartitionKey` must carry
     * (UTF8String for strings; integral values ride as-is). */
@@ -2060,7 +2163,8 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
 
   /** MV read: all rows owning the queried view-key value, residual-filtered
     * exactly by every other pushed predicate and the runtime key sets. */
-  private def mvPartitions(c: String, v: Any): Array[InputPartition] = {
+  private def mvPartitions(c: String, v: Any,
+      sets: Map[String, Set[Any]]): Array[InputPartition] = {
     val fi: String => Int = entry.schema.fieldIndex
     // NOTE: the routing equality is NOT special-cased — every pushed
     // predicate re-checks exactly, so a second, different-valued equality
@@ -2082,7 +2186,7 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
           KeyGroupedRegistry.compareCkCell(r(fi(a)), hi) <= 0)
       case IsNotNull(a) => r(fi(a)) != null
       case _ => true
-    } && runtimeSets.forall { case (a, vs) => vs.exists(v2 => cellEq(r(fi(a)), v2)) }
+    } && sets.forall { case (a, vs) => vs.exists(v2 => cellEq(r(fi(a)), v2)) }
     val rows0 = entry.mvs(c)
       .getOrElse(KeyGroupedRegistry.normCell(v), Array.empty[Array[Any]])
     val filtered = rows0.filter(rowOk)
@@ -2100,6 +2204,55 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
       capped.map { r => val o = overlayStatic(r); idx.map(o(_)) }))
   }
 
+  /** A plain pushed LIMIT n — no top-n, ANN, split target, aggregate or MV
+    * route: the scan plans splits in the order Spark reads them and stops
+    * once n rows are served, so Spark's own limit takes the same prefix it
+    * would have taken from the whole ring. */
+  private def plainLimit: Option[Int] = limit.filter(_ => topN.isEmpty &&
+    ann.isEmpty && splitTargetRows.isEmpty && !aggPushed && mvPred.isEmpty)
+
+  /** `idx` in the order Spark reads the planned splits: it sorts a
+    * key-grouped scan's splits by natural ascending key (`groupPartitions`,
+    * under v2 bucketing) and reads any other scan in planned (`parts`)
+    * order. A heap, so a LIMIT that needs the first few splits builds it in
+    * O(keys) and never sorts the ring. */
+  private def readOrder(idx: Array[Int]): Iterator[Int] =
+    if (keyGrouped && org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled) {
+      val keys = idx.map(i =>
+        InternalRow.fromSeq(internalKey(entry.parts(i)._1).toIndexedSeq))
+      val heap = scala.collection.mutable.PriorityQueue.empty[Int](
+        org.apache.spark.sql.catalyst.expressions.RowOrdering
+          .createNaturalAscendingOrdering(entry.keyTypes).on[Int](keys(_)).reverse)
+      heap ++= idx.indices
+      Iterator.continually(heap).takeWhile(_.nonEmpty).map(h => idx(h.dequeue()))
+    } else idx.iterator
+
+  /** (index into `parts`, served rows) of every split to plan: the kept
+    * splits that also match the runtime key `sets`, cut to the splits a
+    * plain LIMIT needs. */
+  private def servedSplits(sets: Map[String, Set[Any]]): Array[(Int, Array[Array[Any]])] = {
+    val idx = keptIdx.filter(i => runtimeOk(entry.parts(i)._1, sets))
+    plainLimit match {
+      case Some(n) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Array[Any]])]
+        var served = 0L
+        val it = readOrder(idx)
+        while (served < n && it.hasNext) {
+          val i = it.next()
+          val rows = servedRows(entry.parts(i)._2)
+          out += i -> rows
+          served += rows.length
+        }
+        out.toArray
+      case None => idx.map(i => i -> servedRows(entry.parts(i)._2))
+    }
+  }
+
+  // the planning-time splits (no runtime key sets yet), shared by
+  // outputPartitioning, estimateStatistics and planInputPartitions
+  private lazy val baseServed = servedSplits(Map.empty)
+  private lazy val basePlan: Array[InputPartition] = plan(Map.empty)
+
   /** Post-pushdown statistics (SupportsReportStatistics): without these a
     * DSv2 relation sizes as `defaultSizeInBytes` (effectively infinite), so
     * Catalyst would NEVER auto-broadcast a small KV table and every
@@ -2111,23 +2264,18 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
     * (Cassandra's system.size_estimates — what the production connector
     * reads); here the registry holds them exactly. */
   override def estimateStatistics(): Statistics = {
-    val servedPerSplit = entry.parts.iterator
-      .filter { case (k, _) => keepKey(k) }
-      .map { case (_, rows) => servedRows(rows).length.toLong }
+    def served = baseServed.iterator.map(_._2.length.toLong)
     val nRows =
-      if (mvPred.nonEmpty) {
-        val (c, v) = mvPred.get
-        mvPartitions(c, v).iterator
-          .map(_.asInstanceOf[KVPartition].rows.length.toLong).sum
-      } else if (aggPushed) {
-        // one metadata row per surviving split (grouped forms omit emptied
-        // splits, exactly as planInputPartitions will); ck-prefix
-        // groupings emit one row per run — bounded above by the served
-        // rows, a safe (conservative, anti-broadcast) estimate
-        if (groupCols.exists(entry.clusteringCols.contains)) servedPerSplit.sum
-        else if (groupCols.nonEmpty) servedPerSplit.count(_ > 0).toLong
-        else servedPerSplit.length.toLong
-      } else servedPerSplit.sum
+      if (mvPred.nonEmpty) basePlan.iterator.map(KVScan.rowCount).sum
+      else if (aggPushed) {
+        // grouped forms emit one metadata row per non-empty split, or per
+        // ck run — bounded above by the served rows, a safe (conservative,
+        // anti-broadcast) estimate; the ungrouped form one partial row per
+        // replica set
+        if (groupCols.exists(entry.clusteringCols.contains)) served.sum
+        else if (groupCols.nonEmpty) served.count(_ > 0).toLong
+        else basePlan.length.toLong
+      } else plainLimit.foldLeft(served.sum)((n, l) => n.min(l.toLong))
     val width = readSchema().defaultSize.toLong.max(1L)
     new Statistics {
       override def sizeInBytes: java.util.OptionalLong =
@@ -2138,197 +2286,241 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // One split per key, or — with 'split_target_rows' — token-order
-    // packing into multi-key splits (see the Scaladoc at the packing
-    // below). Applied to BOTH the data-row and pushed-aggregate branches:
-    // metadata rows are rows too, and a million-key ring would otherwise
-    // still schedule a million tasks for a pushed COUNT. (The MV branch is
-    // exempt: an MV read serves ONE view partition already.)
-    def emit(perKey: Array[(Vector[Any], Array[Array[Any]])]): Array[InputPartition] =
-      splitTargetRows match {
-        case None => perKey.map { case (k, rs) =>
-          KVPartition(internalKey(k), KVRing.replicasOf(k).toArray,
-            rs): InputPartition
-        }
-        // Size-targeted split coalescing (the connector's
-        // `input.split.sizeInMB` driven by system.size_estimates): the
-        // per-key row groups — what size_estimates counts — are walked
-        // in TOKEN order and packed into multi-key splits of ~target
-        // rows. Two Cassandra rules shape the packing: ranges coalesce
-        // only while their REPLICA SET is unchanged (a split must have
-        // well-defined preferredLocations — the token-aware read), and
-        // a PARTITION never splits across Spark tasks (the key is the
-        // atomic unit; one oversized partition yields one oversized
-        // split, exactly the connector's behavior). At 100 TB this is
-        // what turns a ring of millions of tiny vnode ranges into ~64 MB
-        // tasks instead of a task per key.
-        case Some(target) =>
-          val ordered = perKey.sortBy { case (k, _) => KVRing.tokenOf(k) }
-          val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-          var curHosts: Seq[String] = null
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-          def flush(): Unit = if (buf.nonEmpty) {
-            out += KVMultiPartition(curHosts.toArray, buf.toArray)
-            buf.clear()
-          }
-          ordered.foreach { case (k, rs) =>
-            val hosts = KVRing.replicasOf(k)
-            if (curHosts == null || hosts != curHosts ||
-                buf.length >= target) flush()
-            curHosts = hosts
-            buf ++= rs
-          }
-          flush()
-          out.toArray
-      }
-    val parts: Array[InputPartition] =
-      if (mvPred.nonEmpty) {
-        val (c, v) = mvPred.get
-        mvPartitions(c, v)
-      } else if (aggPushed) {
-        // one metadata row per split: [group-values..., agg-values...] — a
-        // count from the served-row length, MIN/MAX(ck) from the EDGES of
-        // the split's ck-sorted (and possibly ck-sliced) rows — the
-        // full-key grouping is final as-is; ungrouped / subset groupings
-        // are partials Spark re-aggregates (no data row materialized
-        // either way)
-        val gIdx = groupCols.map(entry.schema.fieldIndex)
-        val gTypes = groupCols.map(entry.schema(_).dataType)
-        val ckGrouped = groupCols.exists(entry.clusteringCols.contains)
-        def internalG(vals: Seq[Any]): Seq[Any] = vals.zip(gTypes).map {
-          case (s: String, StringType) => UTF8String.fromString(s)
-          case (v, _) => v
-        }
-        // with ck1 declared DESC the physical head holds the MAX
-        val headDesc = entry.ckDescFlags.headOption.getOrElse(false)
-        // value-column folds (CQL native aggregates): SQL null semantics —
-        // SUM/MIN/MAX/AVG skip nulls and are NULL over no surviving value,
-        // COUNT(col) counts non-nulls. Floating columns fold in DOUBLE;
-        // integral in LONG (exact). MIN/MAX compare in the fold's own width
-        // (cells of one column share a type); ts/date cells are stored as
-        // their epoch encodings, so the long compare is the time order.
-        def floating(c: String): Boolean = entry.schema(c).dataType match {
-          case FloatType | DoubleType => true
-          case _ => false
-        }
-        def cells(run: Array[Array[Any]], c: String): Iterator[Any] = {
-          val i = entry.schema.fieldIndex(c)
-          run.iterator.map(_(i)).filter(_ != null)
-        }
-        def sumOf(run: Array[Array[Any]], c: String): Any = {
-          var any = false
-          if (floating(c)) {
-            var s = 0.0
-            cells(run, c).foreach { v =>
-              s += v.asInstanceOf[Number].doubleValue; any = true }
-            if (any) s else null
-          } else {
-            var s = 0L
-            cells(run, c).foreach { v =>
-              s = Math.addExact(s, v.asInstanceOf[Number].longValue); any = true }
-            if (any) s else null
-          }
-        }
-        def extremum(run: Array[Array[Any]], c: String, wantMax: Boolean): Any = {
-          val fl = floating(c)
-          cells(run, c).reduceOption { (a, b) =>
-            val cmp =
-              if (fl) java.lang.Double.compare(
-                a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
-              else java.lang.Long.compare(
-                a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
-            if ((cmp >= 0) == wantMax) a else b
-          }.orNull
-        }
-        def aggValsOf(run: Array[Array[Any]]): Seq[Any] = pushedAggs.map {
-          case AggCount => run.length.toLong: Any
-          case AggMinCk =>
-            if (run.isEmpty) null
-            else if (headDesc) run.last(ckIdxs.head)
-            else run.head(ckIdxs.head)
-          case AggMaxCk =>
-            if (run.isEmpty) null
-            else if (headDesc) run.head(ckIdxs.head)
-            else run.last(ckIdxs.head)
-          case AggSumCol(c) => sumOf(run, c)
-          case AggMinCol(c) => extremum(run, c, wantMax = false)
-          case AggMaxCol(c) => extremum(run, c, wantMax = true)
-          case AggCountCol(c) => cells(run, c).size.toLong: Any
-          case AggAvgCol(c) =>
-            val n = cells(run, c).size
-            if (n == 0) null
-            else sumOf(run, c) match {
-              case l: java.lang.Long => l.toDouble / n: Any
-              case d: java.lang.Double => d / n: Any
-              case _ => null
-            }
-        }
-        emit(entry.parts.iterator.filter { case (k, _) => keepKey(k) }
-          .flatMap { case (k, rows) =>
-            val served = servedRows(rows)
-            // a GROUPED aggregate must OMIT splits whose pushed
-            // ck-range/index predicates leave zero surviving rows: SQL
-            // semantics drop empty groups, and under complete pushdown
-            // Spark would surface a phantom [key..., 0] row verbatim. The
-            // ungrouped form keeps every split — a 0 count still sums
-            // correctly and a NULL min/max is ignored by the final
-            // aggregate.
-            if (groupCols.nonEmpty && served.isEmpty) None
-            else if (ckGrouped) {
-              // CQL GROUP BY pk, ck-prefix: the ck-sorted split's groups
-              // are CONTIGUOUS RUNS of the grouped tuple — one pass, one
-              // metadata row per run, no hashing, no data row served
-              val runRows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-              var start = 0
-              var i = 1
-              def tupleAt(r: Array[Any]): Vector[Any] =
-                gIdx.map(ix => KeyGroupedRegistry.normCell(r(ix))).toVector
-              while (start < served.length) {
-                while (i < served.length &&
-                  tupleAt(served(i)) == tupleAt(served(start))) i += 1
-                val run = served.slice(start, i)
-                runRows += (internalG(gIdx.map(run.head(_))) ++ aggValsOf(run))
-                  .toArray[Any]
-                start = i
-                i = start + 1
-              }
-              Some((k, runRows.toArray))
-            } else {
-              val groupVals = internalG(gIdx.map(rows.head(_)))
-              Some((k, Array((groupVals ++ aggValsOf(served)).toArray[Any])))
-            }
-          }.toArray)
-      } else {
-        // per-field getters: schema columns read the stored cell, metadata
-        // columns (_token/_replica — SupportsMetadataColumns) compute from
-        // the split's KEY, constant per partition and never stored
-        val getters: Array[(Vector[Any], Array[Any]) => Any] =
-          required.fieldNames.map {
-            case "_token" =>
-              (k: Vector[Any], _: Array[Any]) => KVRing.tokenOf(k): Any
-            case "_replica" =>
-              (k: Vector[Any], _: Array[Any]) =>
-                KVRing.replicasOf(k).head: Any
-            case f =>
-              val i = entry.schema.fieldIndex(f)
-              (_: Vector[Any], o: Array[Any]) => o(i)
-          }
-        emit(entry.parts.collect {
-          case (k, rows) if keepKey(k) =>
-            (k, servedRows(rows).map { r =>
-              val o = overlayStatic(r)
-              getters.map(g => g(k, o))
-            })
-        })
-      }
+    val parts = if (runtimeSets.isEmpty) basePlan else plan(runtimeSets)
     KeyGroupedRegistry.lastPlanned.put(tname, parts.length)
-    KeyGroupedRegistry.lastScanRows.put(tname,
-      parts.map {
-        case kp: KVPartition => kp.rows.length.toLong
-        case mp: KVMultiPartition => mp.rows.length.toLong
-      }.sum)
+    KeyGroupedRegistry.lastScanRows.put(tname, parts.iterator.map(KVScan.rowCount).sum)
     parts
   }
+
+  private def plan(sets: Map[String, Set[Any]]): Array[InputPartition] =
+    mvPred match {
+      case Some((c, v)) => mvPartitions(c, v, sets)
+      case None =>
+        val served = if (sets.isEmpty) baseServed else servedSplits(sets)
+        if (aggPushed) aggPartitions(served) else dataPartitions(served)
+    }
+
+  /** One split per key, or — with 'split_target_rows' — token-order
+    * packing into multi-key splits. Applied to the data rows and to grouped
+    * aggregate rows: metadata rows are rows too, and a million-key ring
+    * would otherwise still schedule a million tasks for a grouped COUNT. */
+  private def emit(perKey: Array[(Vector[Any], Array[Array[Any]])]): Array[InputPartition] =
+    splitTargetRows match {
+      case None => perKey.map { case (k, rs) =>
+        KVPartition(internalKey(k), KVRing.replicasOf(k).toArray,
+          rs): InputPartition
+      }
+      // Size-targeted split coalescing (the connector's
+      // `input.split.sizeInMB` driven by system.size_estimates): the
+      // per-key row groups — what size_estimates counts — are walked
+      // in TOKEN order and packed into multi-key splits of ~target
+      // rows. Two Cassandra rules shape the packing: ranges coalesce
+      // only while their REPLICA SET is unchanged (a split must have
+      // well-defined preferredLocations — the token-aware read), and
+      // a PARTITION never splits across Spark tasks (the key is the
+      // atomic unit; one oversized partition yields one oversized
+      // split, exactly the connector's behavior). At 100 TB this is
+      // what turns a ring of millions of tiny vnode ranges into ~64 MB
+      // tasks instead of a task per key.
+      case Some(target) =>
+        val ordered = perKey.sortBy { case (k, _) => KVRing.tokenOf(k) }
+        val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+        var curHosts: Seq[String] = null
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
+        def flush(): Unit = if (buf.nonEmpty) {
+          out += KVMultiPartition(curHosts.toArray, buf.toArray)
+          buf.clear()
+        }
+        ordered.foreach { case (k, rs) =>
+          val hosts = KVRing.replicasOf(k)
+          if (curHosts == null || hosts != curHosts ||
+              buf.length >= target) flush()
+          curHosts = hosts
+          buf ++= rs
+        }
+        flush()
+        out.toArray
+    }
+
+  private def dataPartitions(served: Array[(Int, Array[Array[Any]])]): Array[InputPartition] = {
+    // per-field getters: schema columns read the stored cell, metadata
+    // columns (_token/_replica — SupportsMetadataColumns) compute from
+    // the split's KEY, constant per partition and never stored
+    val getters: Array[(Vector[Any], Array[Any]) => Any] =
+      required.fieldNames.map {
+        case "_token" =>
+          (k: Vector[Any], _: Array[Any]) => KVRing.tokenOf(k): Any
+        case "_replica" =>
+          (k: Vector[Any], _: Array[Any]) =>
+            KVRing.replicasOf(k).head: Any
+        case f =>
+          val i = entry.schema.fieldIndex(f)
+          (_: Vector[Any], o: Array[Any]) => o(i)
+      }
+    emit(served.map { case (i, rows) =>
+      val k = entry.parts(i)._1
+      (k, rows.map { r =>
+        val o = overlayStatic(r)
+        getters.map(g => g(k, o))
+      })
+    })
+  }
+
+  // value-column folds (CQL native aggregates): SQL null semantics —
+  // SUM/MIN/MAX/AVG skip nulls and are NULL over no surviving value,
+  // COUNT(col) counts non-nulls. Floating columns fold in DOUBLE;
+  // integral in LONG (exact). MIN/MAX compare in the fold's own width
+  // (cells of one column share a type); ts/date cells are stored as
+  // their epoch encodings, so the long compare is the time order.
+  private def floating(c: String): Boolean = entry.schema(c).dataType match {
+    case FloatType | DoubleType => true
+    case _ => false
+  }
+  private def cells(run: Array[Array[Any]], c: String): Iterator[Any] = {
+    val i = entry.schema.fieldIndex(c)
+    run.iterator.map(_(i)).filter(_ != null)
+  }
+  private def addSums(c: String, a: Any, b: Any): Any =
+    if (floating(c)) Double.box(
+      a.asInstanceOf[Number].doubleValue + b.asInstanceOf[Number].doubleValue)
+    else Long.box(
+      Math.addExact(a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue))
+  private def sumOf(run: Array[Array[Any]], c: String): Any = {
+    val zero: Any = if (floating(c)) Double.box(0.0) else Long.box(0L)
+    cells(run, c).foldLeft(null: Any) { (s, v) =>
+      addSums(c, if (s == null) zero else s, v)
+    }
+  }
+  /** The larger (wantMax) or smaller of two cells of value column `c`. */
+  private def pick(c: String, a: Any, b: Any, wantMax: Boolean): Any = {
+    val cmp =
+      if (floating(c)) java.lang.Double.compare(
+        a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
+      else java.lang.Long.compare(
+        a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
+    if ((cmp >= 0) == wantMax) a else b
+  }
+  /** The larger (wantMax) or smaller of two clustering cells, in Spark's
+    * order for the column type (what its final MIN/MAX over the per-key
+    * partials compared with). */
+  private def pickCk(a: Any, b: Any, wantMax: Boolean): Any = {
+    val cmp = (a, b) match {
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case _ => KeyGroupedRegistry.compareCkCell(a, b)
+    }
+    if ((cmp >= 0) == wantMax) a else b
+  }
+  /** The pushed aggregates over one run of served rows: a count from the
+    * run length, MIN/MAX(ck) from the EDGES of the ck-sorted (and possibly
+    * ck-sliced) run — with ck1 declared DESC the physical head holds the
+    * MAX — and value columns by a one-pass fold. */
+  private def aggValsOf(run: Array[Array[Any]]): Seq[Any] = {
+    val headDesc = entry.ckDescFlags.headOption.getOrElse(false)
+    pushedAggs.map {
+      case AggCount => run.length.toLong: Any
+      case AggMinCk =>
+        if (run.isEmpty) null
+        else if (headDesc) run.last(ckIdxs.head)
+        else run.head(ckIdxs.head)
+      case AggMaxCk =>
+        if (run.isEmpty) null
+        else if (headDesc) run.head(ckIdxs.head)
+        else run.last(ckIdxs.head)
+      case AggSumCol(c) => sumOf(run, c)
+      case AggMinCol(c) => cells(run, c).reduceOption(pick(c, _, _, wantMax = false)).orNull
+      case AggMaxCol(c) => cells(run, c).reduceOption(pick(c, _, _, wantMax = true)).orNull
+      case AggCountCol(c) => cells(run, c).size.toLong: Any
+      case AggAvgCol(c) =>
+        val n = cells(run, c).size
+        if (n == 0) null
+        else sumOf(run, c) match {
+          case l: java.lang.Long => l.toDouble / n: Any
+          case d: java.lang.Double => d / n: Any
+          case _ => null
+        }
+    }
+  }
+  /** Two partial rows of an ungrouped aggregate folded into one — the
+    * re-aggregation Spark's final aggregate applies to partials: counts
+    * and sums add, extrema keep the winner, NULL (no value) yields. */
+  private def foldPartials(a: Array[Any], b: Array[Any]): Array[Any] =
+    pushedAggs.indices.map { i =>
+      (pushedAggs(i), a(i), b(i)) match {
+        case (_, null, y) => y
+        case (_, x, null) => x
+        case (AggCount | AggCountCol(_), x, y) =>
+          x.asInstanceOf[Long] + y.asInstanceOf[Long]: Any
+        case (AggSumCol(c), x, y) => addSums(c, x, y)
+        case (AggMinCol(c), x, y) => pick(c, x, y, wantMax = false)
+        case (AggMaxCol(c), x, y) => pick(c, x, y, wantMax = true)
+        case (AggMinCk, x, y) => pickCk(x, y, wantMax = false)
+        case (AggMaxCk, x, y) => pickCk(x, y, wantMax = true)
+        case (agg, _, _) => throw new IllegalStateException(
+          s"${aggLabel(agg)} is never pushed ungrouped")
+      }
+    }.toArray
+
+  /** Metadata rows only — no data row is materialized. Grouped: one row
+    * per split, [group-values..., agg-values...], or one per contiguous ck
+    * run; the full-key grouping is final as-is, subset groupings are
+    * partials Spark re-aggregates. Ungrouped (the cassandraCount analog):
+    * the per-key partials fold into ONE partial row per replica set, one
+    * split each, with that set as its preferred locations — the
+    * connector's split shape, so a whole-ring COUNT is a few tasks. */
+  private def aggPartitions(served: Array[(Int, Array[Array[Any]])]): Array[InputPartition] =
+    if (groupCols.isEmpty) {
+      // every kept split contributes, even an emptied one: a 0 count still
+      // sums correctly and a NULL min/max is ignored by the final aggregate
+      val byReplicas = scala.collection.mutable.LinkedHashMap.empty[Seq[String], Array[Any]]
+      served.foreach { case (i, rows) =>
+        val partial = aggValsOf(rows).toArray
+        val hosts = KVRing.replicasOf(entry.parts(i)._1)
+        byReplicas(hosts) = byReplicas.get(hosts).fold(partial)(foldPartials(_, partial))
+      }
+      byReplicas.iterator.map { case (hosts, row) =>
+        KVMultiPartition(hosts.toArray, Array(row)): InputPartition
+      }.toArray
+    } else {
+      val gIdx = groupCols.map(entry.schema.fieldIndex)
+      val gTypes = groupCols.map(entry.schema(_).dataType)
+      val ckGrouped = groupCols.exists(entry.clusteringCols.contains)
+      def internalG(vals: Seq[Any]): Seq[Any] = vals.zip(gTypes).map {
+        case (s: String, StringType) => UTF8String.fromString(s)
+        case (v, _) => v
+      }
+      emit(served.flatMap { case (i, served) =>
+        val (k, rows) = entry.parts(i)
+        // a GROUPED aggregate must OMIT splits whose pushed
+        // ck-range/index predicates leave zero surviving rows: SQL
+        // semantics drop empty groups, and under complete pushdown
+        // Spark would surface a phantom [key..., 0] row verbatim.
+        if (served.isEmpty) None
+        else if (ckGrouped) {
+          // CQL GROUP BY pk, ck-prefix: the ck-sorted split's groups
+          // are CONTIGUOUS RUNS of the grouped tuple — one pass, one
+          // metadata row per run, no hashing, no data row served
+          val runRows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
+          var start = 0
+          var j = 1
+          def tupleAt(r: Array[Any]): Vector[Any] =
+            gIdx.map(ix => KeyGroupedRegistry.normCell(r(ix))).toVector
+          while (start < served.length) {
+            while (j < served.length &&
+              tupleAt(served(j)) == tupleAt(served(start))) j += 1
+            val run = served.slice(start, j)
+            runRows += (internalG(gIdx.map(run.head(_))) ++ aggValsOf(run))
+              .toArray[Any]
+            start = j
+            j = start + 1
+          }
+          Some((k, runRows.toArray))
+        } else {
+          val groupVals = internalG(gIdx.map(rows.head(_)))
+          Some((k, Array((groupVals ++ aggValsOf(served)).toArray[Any])))
+        }
+      })
+    }
   override def createReaderFactory(): PartitionReaderFactory = new KVReaderFactory
 }
 
@@ -2344,9 +2536,10 @@ case class KVPartition(keyInternal: Array[Any], hosts: Array[String],
   override def preferredLocations(): Array[String] = hosts
 }
 
-/** A size-coalesced split: the rows of SEVERAL token-adjacent keys sharing
-  * one replica set (see the SplitTarget packing in planInputPartitions).
-  * No `HasPartitionKey` — the split spans keys — but `preferredLocations`
+/** A split spanning SEVERAL keys that share one replica set: a
+  * size-coalesced read's token-adjacent keys (the SplitTarget packing), or
+  * the one folded partial row of an ungrouped aggregate. No
+  * `HasPartitionKey` — the split spans keys — but `preferredLocations`
   * still carries the common replica set, so the token-aware read survives
   * coalescing. */
 case class KVMultiPartition(hosts: Array[String], rows: Array[Array[Any]])

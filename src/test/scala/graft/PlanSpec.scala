@@ -549,13 +549,18 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ungrouped value aggregates are partial pushdown: one partial row per split") {
+    import graft.sources.{KeyGroupedRegistry, KVRing}
     val df = Storage.queries("q_kv_value_agg_partial")(spark, sfDir)
     val rows = df.collect()
     assert(rows.length == 1)
     val name = s"orders_vagg:$sfDir"
-    val splits = graft.sources.KeyGroupedRegistry.get(name).parts.length
-    val served = graft.sources.KeyGroupedRegistry.lastScanRows(name)
-    assert(served == splits.toLong, s"served $served from $splits splits")
+    val planned = KeyGroupedRegistry.lastPlanned(name)
+    val served = KeyGroupedRegistry.lastScanRows(name)
+    assert(served == planned.toLong, s"served $served from $planned splits")
+    // the per-key partials fold into one split per replica set
+    val replicaSets = KeyGroupedRegistry.get(name).parts
+      .map(kv => KVRing.replicasOf(kv._1)).distinct.length
+    assert(planned == replicaSets, s"planned $planned splits for $replicaSets replica sets")
     val plan = planOf(df)
     assert(plan.contains("SUM(cents)"), plan)
     // AVG decomposed to SUM+COUNT by Spark before the partial push — the
@@ -563,6 +568,69 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(!plan.contains("AVG("), plan)
     // partial pushdown: Spark still plans the final re-aggregation
     assert(plan.contains("HashAggregate"), plan)
+  }
+
+  test("plain pushed LIMIT plans only the splits it needs, in Spark's read order") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import graft.sources.KeyGroupedRegistry
+    // 150 keys of 10 rows each: natural key order (0, 1, 2, ...) and the
+    // registry's string order (0, 1, 10, ...) part at the third split
+    val name = s"plan_limit:$sfDir"
+    KeyGroupedRegistry.stage(name, graft.sources.Tables.load(spark, sfDir, "orders")
+      .select(expr("o_orderkey % 150").as("pk"), col("o_orderkey").as("ck"),
+        col("o_totalprice").as("price")), "pk", clusteringCol = Some("ck"))
+    def src = spark.read.format("graft.sources.KVDataSource").option("table", name).load()
+    def limited(df: org.apache.spark.sql.DataFrame, n: Int, off: Int = 0) = {
+      val q = if (off == 0) df.limit(n) else df.limit(n).offset(off)
+      assert(planOf(q).contains(s"PushedLimit: $n"), planOf(q))
+      val got = q.collect().toSeq
+      val planned = KeyGroupedRegistry.lastPlanned(name)
+      assert(planned <= 3, s"planned $planned splits for LIMIT $n")
+      assert(got == df.collect().toSeq.slice(off, n))
+      got
+    }
+    // all columns: key-grouped, so Spark reads the splits in key order
+    val all = limited(src, 21)
+    assert(all.map(_.getLong(0)).distinct == Seq(0L, 1L, 2L))
+    // key pruned: no grouping to report, splits read in registry order
+    val pruned = limited(src.select("ck", "price"), 21)
+    assert(pruned.map(_.getLong(0) % 150).distinct == Seq(0L, 1L, 10L))
+    limited(src, 30, off = 9)
+  }
+
+  test("ungrouped count/sum/min/max fold per replica set and match parquet across writes") {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+    import graft.sources.KeyGroupedRegistry
+    val name = s"plan_fold:$sfDir"
+    val orders = graft.sources.Tables.load(spark, sfDir, "orders")
+      .select(col("o_custkey").as("pk"), col("o_orderkey").as("ck"),
+        col("o_totalprice").as("price"))
+    KeyGroupedRegistry.stage(name, orders, "pk", clusteringCol = Some("ck"))
+    def aggs(df: org.apache.spark.sql.DataFrame) = df.agg(count(lit(1)), sum("ck"),
+      min("ck"), max("ck"), sum("price"), min("price"), max("price"))
+    // DOUBLE sums to 9 significant digits (tools/check.py's normalisation):
+    // the fold adds the per-key partials in a different order
+    def norm(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+      case d: Double => BigDecimal(d).round(new java.math.MathContext(9))
+      case v => v
+    }
+    def check(expected: org.apache.spark.sql.DataFrame): Unit = {
+      val kv = aggs(spark.read.format("graft.sources.KVDataSource")
+        .option("table", name).load())
+      assert(planOf(kv).contains(
+        "PushedAggregation: [COUNT(*),SUM(ck),MIN(ck),MAX(ck),SUM(price),MIN(price),MAX(price)]"),
+        planOf(kv))
+      assert(norm(kv.head()) == norm(aggs(expected).head()))
+    }
+    check(orders)
+    val fresh = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1000000L, 99999L, 12345.67)), orders.schema)
+    fresh.write.format("graft.sources.KVDataSource").option("table", name)
+      .mode("append").save()
+    check(orders.union(fresh))
+    val victim = KeyGroupedRegistry.get(name).parts.head._1
+    KeyGroupedRegistry.applyDelete(name, Set(victim))
+    check(orders.union(fresh).filter(col("pk") =!= victim.head))
   }
 
   test("GROUP BY pk + ck-prefix counts are complete pushdown: one run row, no aggregate") {

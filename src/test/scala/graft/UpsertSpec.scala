@@ -646,6 +646,120 @@ class UpsertSpec extends AnyFunSuite with SparkFixture {
     assert(spark.table("graftcat.proptest.bb").collect()(0).getLong(1) == 100L)
   }
 
+  test("splice upsert commit equals the full rebuild under random batches and deletes") {
+    import scala.collection.mutable
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.sources.KeyGroupedRegistry
+    import KeyGroupedRegistry.{Entry, LogBatch}
+    type Parts = Array[(Vector[Any], Array[Array[Any]])]
+    sealed trait Op
+    final case class Up(rows: Seq[(Vector[Any], Array[Any])]) extends Op
+    final case class Del(keys: Set[Vector[Any]]) extends Op
+    // keys and clustering cells are boxed as Int in some commits and as
+    // Long in others; a small key and ck space makes duplicates inside a
+    // batch, and new keys that sort before, between and after the stored
+    // ones, common
+    def box(n: Int, asInt: Boolean): Any = if (asInt) Int.box(n) else Long.box(n.toLong)
+    val genUp: Gen[Op] = for {
+      asInt <- Gen.oneOf(true, false)
+      n <- Gen.choose(1, 6)
+      rows <- Gen.listOfN(n, for {
+        pk <- Gen.choose(0, 40); ck <- Gen.choose(0, 4)
+        st <- Gen.option(Gen.oneOf("s1", "s2")); v <- Gen.alphaLowerStr.map(_.take(3))
+      } yield {
+        val k = box(pk, asInt)
+        Vector[Any](k) -> Array[Any](k, box(ck, asInt), st.orNull, v)
+      })
+    } yield Up(rows)
+    val genDel: Gen[Op] = for {
+      asInt <- Gen.oneOf(true, false)
+      ks <- Gen.nonEmptyListOf(Gen.choose(0, 40))
+    } yield Del(ks.map(k => Vector[Any](box(k, asInt))).toSet)
+    val genOps: Gen[List[Op]] = Gen.listOfN(12, Gen.frequency(4 -> genUp, 1 -> genDel))
+
+    val schema = StructType(Seq(StructField("pk", LongType), StructField("ck", LongType),
+      StructField("st", StringType), StructField("v", StringType)))
+    def norm(k: Vector[Any]): Vector[Any] = k.map {
+      case i: java.lang.Integer => i.longValue: Any
+      case x => x
+    }
+    def keyStr(k: Vector[Any]): String = k.map(String.valueOf).mkString("\u0000")
+    // cells with their boxing class, so an Int/Long mix-up is a difference
+    def cells(xs: Seq[Any]): Seq[(Any, Option[Class[_]])] =
+      xs.map(c => (c, Option(c).map(_.getClass)))
+    def deep(p: Parts): Seq[Any] =
+      p.toSeq.map { case (k, rs) => (cells(k), rs.toSeq.map(r => cells(r.toSeq))) }
+    val placed = mutable.Map("before" -> 0, "between" -> 0, "after" -> 0, "reboxed" -> 0)
+
+    Seq(("flat", Nil, Nil), ("ck", Seq("ck"), Nil), ("static", Seq("ck"), Seq("st")))
+      .foreach { case (shape, cks, statics) =>
+        val name = s"splice_$shape"
+        val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100),
+          Prop.forAll(genOps) { ops =>
+            KeyGroupedRegistry.put(name, Entry(schema, Seq("pk"), Array.empty,
+              clusteringCols = cks, staticCols = statics))
+            KeyGroupedRegistry.changelog.put(name, mutable.ArrayBuffer.empty[LogBatch])
+            // the reference: today's commit semantics, rebuilt from scratch
+            var parts: Parts = Array.empty
+            var staticVals = Map.empty[Vector[Any], Map[Int, Any]]
+            ops.foreach { op =>
+              val expectLog: (Seq[Seq[Any]], Boolean) = op match {
+                case Up(rows) =>
+                  val strs = parts.map(kv => keyStr(kv._1))
+                  rows.foreach { case (pk, _) =>
+                    parts.find(_._1 == pk) match {
+                      case Some((k, _)) =>
+                        if (k.head.getClass != pk.head.getClass) placed("reboxed") += 1
+                      case None if strs.nonEmpty =>
+                        val s = keyStr(pk)
+                        placed(if (strs.forall(s < _)) "before"
+                          else if (strs.forall(s > _)) "after" else "between") += 1
+                      case None => ()
+                    }
+                  }
+                  val byPk = mutable.LinkedHashMap(
+                    parts.map { case (k, rs) => k -> rs.toBuffer }.toIndexedSeq: _*)
+                  rows.foreach { case (pk, row) =>
+                    val buf = byPk.getOrElseUpdate(pk, mutable.Buffer.empty)
+                    if (cks.nonEmpty) {
+                      val i = buf.indexWhere(r => r(1).asInstanceOf[Number].longValue ==
+                        row(1).asInstanceOf[Number].longValue)
+                      if (i >= 0) buf(i) = row else buf += row
+                    } else { buf.clear(); buf += row }
+                  }
+                  parts = byPk.toArray.map { case (k, buf) =>
+                    k -> (if (cks.isEmpty) buf.toArray
+                          else buf.toArray.sortBy(_(1).asInstanceOf[Number].longValue))
+                  }.sortBy(kv => keyStr(kv._1))
+                  if (statics.nonEmpty) staticVals = rows.foldLeft(staticVals) {
+                    case (acc, (pk, row)) if row(2) != null =>
+                      acc.updated(norm(pk), acc.getOrElse(norm(pk), Map.empty) + (2 -> row(2)))
+                    case (acc, _) => acc
+                  }
+                  KeyGroupedRegistry.applyUpsert(name, rows.toArray)
+                  (rows.map(_._2.toSeq), false)
+                case Del(keys) =>
+                  parts = parts.filterNot { case (k, _) => keys(k) }
+                  staticVals = staticVals -- keys.map(norm)
+                  KeyGroupedRegistry.applyDelete(name, keys)
+                  (keys.toSeq.map(k => Seq[Any](k.head, null, null, null)), true)
+              }
+              val got = KeyGroupedRegistry.get(name)
+              assert(deep(got.parts) == deep(parts), s"$shape after $op")
+              assert(got.staticVals == staticVals, s"$shape after $op")
+              val log = KeyGroupedRegistry.changelog(name).last
+              assert(log.tombstone == expectLog._2 &&
+                log.rows.toSeq.map(r => cells(r.toSeq)) == expectLog._1.map(cells),
+                s"$shape after $op")
+            }
+            true
+          })
+        assert(res.passed, s"$shape: ${res.status}")
+      }
+    // the generator reached every splice position and the boxing case
+    assert(placed.values.forall(_ > 0), placed)
+  }
+
   test("static columns are one shared cell per partition") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import graft.sources.KeyGroupedRegistry

@@ -804,14 +804,6 @@ object Pipeline {
         .orderBy("doc_id")
     },
 
-    // Duplicate clustering: candidate pairs → connected components →
-    // cluster id (= min doc_id in the component) — the step that turns
-    // pairwise near-dup hits into keep/delete lists. Iterative min-label
-    // propagation: each round is one equi-join + min-aggregate, repeated to
-    // the component diameter (driver loop with a cheap monotone convergence
-    // check; prefix-blocked components have tiny diameters — a planet-scale
-    // graph would switch to the large-star/small-star variant, same
-    // join-per-round shape). Every round's shuffle is on doc_id.
     // TextRank keyword extraction: PageRank over the word co-occurrence
     // (bigram) graph — the graph-iteration operator beyond connected
     // components (q_dup_clusters). All arithmetic is EXACT integer (rank
@@ -852,10 +844,9 @@ object Pipeline {
         .localCheckpoint(true)
       val nNodes = ed.select("w1").distinct().count()
       val base = (15L * (Scale / nNodes)) / 100L
-      var rank = ed.select(col("w1").as("w")).distinct()
-        .withColumn("r", lit(Scale / nNodes))
-      for (_ <- 1 to 5) {
-        rank = ed.join(rank, ed("w1") === rank("w"))
+      val rank = (1 to 5).foldLeft(ed.select(col("w1").as("w")).distinct()
+          .withColumn("r", lit(Scale / nNodes))) { (rank, _) =>
+        ed.join(rank, ed("w1") === rank("w"))
           .select(col("w2"), expr("r div deg").as("c"))
           .groupBy("w2").agg(sum("c").as("s"))
           .select(col("w2").as("w"),
@@ -882,19 +873,16 @@ object Pipeline {
       val nodes = e0.select(col("w1").as("w"))
         .unionByName(e0.select(col("w2").as("w")))
         .distinct().localCheckpoint(true)
-      // Each half-step's ≤V-row score table is localCheckpoint'd (eager):
-      // lazily chained, the 8 half-steps nest into one 124-Exchange plan
-      // (measured r18: 1,556 plan lines, 41 jobs, 32 s task time for a
-      // ≤V-row iteration) — Catalyst re-plans and re-executes the whole
-      // chain per step. The checkpoint pins each step to its materialized
-      // rows; integer (div-scaled) scores make the result partition-
-      // independent, so nothing numeric changes. The half-step itself is
-      // the factored [[hitsHalfStep]] (BHJ-only, pinned in PlanSpec).
-      var h = nodes.withColumn("v", lit(HitsScale))
-      var a: DataFrame = null
-      for (_ <- 1 to 4) {
-        a = hitsHalfStep(nodes, e0, h, "w1", "w2").localCheckpoint(true)
-        h = hitsHalfStep(nodes, e0, a, "w2", "w1").localCheckpoint(true)
+      // Each half-step's ≤V-row score table is checkpointed (the
+      // [[Iterate]] discipline; r18 measured the lazy chain). The
+      // half-step itself is the factored [[hitsHalfStep]] (BHJ-only,
+      // pinned in PlanSpec).
+      val (a, h) = Iterate.upTo(4,
+          (null: DataFrame, nodes.withColumn("v", lit(HitsScale)))) {
+        case (_, h) =>
+          val a = hitsHalfStep(nodes, e0, h, "w1", "w2").localCheckpoint(true)
+          ((a, hitsHalfStep(nodes, e0, a, "w2", "w1").localCheckpoint(true)),
+            false)
       }
       a.select(col("w"), col("v").as("authority_scaled"))
         .join(h.select(col("w"), col("v").as("hub_scaled")), "w")
@@ -972,23 +960,18 @@ object Pipeline {
         "q_shortest_path: empty vocabulary (degenerate corpus)")
       val src = srcRow.head.getString(0)
       import s.implicits._
-      var dist = Seq((src, 0L)).toDF("w", "dist").localCheckpoint(true)
-      var frontier = dist.select("w")
-      var d = 0L
-      var go = true
-      while (go && d < 32) {
-        val next = edges
-          .join(frontier.select(col("w").as("w1")), "w1")
-          .select(col("w2").as("w")).distinct()
-          .join(dist.select("w"), Seq("w"), "left_anti")
-          .localCheckpoint(true) // eager: one evaluation per round
-        if (next.isEmpty) go = false
-        else {
-          d += 1
-          dist = dist.unionByName(next.withColumn("dist", lit(d)))
-            .localCheckpoint(true)
-          frontier = next
-        }
+      val dist0 = Seq((src, 0L)).toDF("w", "dist").localCheckpoint(true)
+      // state: (dist, frontier, depth); an empty frontier ends the BFS
+      val (dist, _, _) = Iterate.upTo(32, (dist0, dist0.select("w"), 0L)) {
+        case st @ (dist, frontier, d) =>
+          val next = edges
+            .join(frontier.select(col("w").as("w1")), "w1")
+            .select(col("w2").as("w")).distinct()
+            .join(dist.select("w"), Seq("w"), "left_anti")
+            .localCheckpoint(true) // eager: one evaluation per round
+          if (next.isEmpty) (st, true)
+          else ((dist.unionByName(next.withColumn("dist", lit(d + 1)))
+            .localCheckpoint(true), next, d + 1), false)
       }
       vocab.select("w").join(dist, Seq("w"), "left")
         .select(col("w"), coalesce(col("dist"), lit(-1L)).as("dist"))
@@ -1205,6 +1188,14 @@ object Pipeline {
         .orderBy("w")
     },
 
+    // Duplicate clustering: candidate pairs → connected components →
+    // cluster id (= min doc_id in the component) — the step that turns
+    // pairwise near-dup hits into keep/delete lists. Iterative min-label
+    // propagation: each round is one equi-join + min-aggregate, repeated to
+    // the component diameter (driver loop with a cheap monotone convergence
+    // check; prefix-blocked components have tiny diameters — a planet-scale
+    // graph would switch to the large-star/small-star variant, same
+    // join-per-round shape). Every round's shuffle is on doc_id.
     "q_dup_clusters" -> { (s, dir) =>
       val pairs = docs(s, dir)
         .withColumn("fp", md5(concat_ws(" ", slice(split(col("text"), " "), 1, 8))))
@@ -1220,24 +1211,20 @@ object Pipeline {
         .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
       val edges = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var labels = edges.select(col("src").as("doc_id")).distinct()
+      def labelSum(l: DataFrame): Long = l.agg(sum("label")).head().getLong(0)
+      val labels0 = edges.select(col("src").as("doc_id")).distinct()
         .withColumn("label", col("doc_id"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var sum = labels.agg(org.apache.spark.sql.functions.sum("label")).head().getLong(0)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < 20) {
-        val next = labels.join(edges, col("doc_id") === col("src"))
-          .select(col("dst").as("doc_id"), col("label"))
-          .unionByName(labels)
-          .groupBy("doc_id").agg(min("label").as("label"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val nextSum = next.agg(org.apache.spark.sql.functions.sum("label")).head().getLong(0)
-        labels.unpersist()
-        labels = next
-        converged = nextSum == sum // labels only ever decrease
-        sum = nextSum
-        iter += 1
+      val (labels, _) = Iterate.upTo(20, (labels0, labelSum(labels0))) {
+        case (labels, prev) =>
+          val next = labels.join(edges, col("doc_id") === col("src"))
+            .select(col("dst").as("doc_id"), col("label"))
+            .unionByName(labels)
+            .groupBy("doc_id").agg(min("label").as("label"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val n = labelSum(next)
+          labels.unpersist()
+          ((next, n), n == prev) // labels only ever decrease
       }
       labels.select(col("doc_id"), col("label").as("cluster_id"))
         .orderBy("doc_id")
@@ -4621,20 +4608,13 @@ object Pipeline {
     // set equality). All joins are equi-joins between the ≤32²-row edge
     // frame and ≤32-row node frames (wordGraph's one corpus-sized bigram
     // extraction is shared + checkpointed). Each round references the
-    // survivor set TWICE (once per edge endpoint), so a lazy unroll
-    // doubles the plan tree per round (~2⁸ subtree copies by round 8 —
-    // 21.8 s of pure Catalyst work in r13); the textrank single-reference
-    // discipline can't apply, so each round's ≤32-row survivor frame is
-    // localCheckpoint'd instead — plan size CONSTANT per round, which is
-    // also the Pregel shape this peel runs as at real graph sizes: one
-    // materialized frontier per superstep, state linear in nodes.
+    // survivor set TWICE (once per edge endpoint), so each round's
+    // ≤32-row survivor frame is checkpointed (the [[Iterate]] discipline).
     "q_kcore" -> { (s, dir) =>
       val (vocab, e0) = wordGraph(s, dir, 32)
       val und = e0.union(
         e0.select(col("w2").as("w1"), col("w1").as("w2"))).distinct()
         .localCheckpoint(true)
-      var nodes = vocab.select(col("w"))
-      var edges = und
       // r19 early-exit (the q_mst_boruvka discipline): the peel is
       // MONOTONE — nodes_k ⊆ nodes_{k-1} (survivors are edge endpoints
       // inside the previous survivor set) — so count-equal ⇒ set-equal ⇒
@@ -4643,20 +4623,18 @@ object Pipeline {
       // The count is a one-task job on a checkpointed ≤32-row frame;
       // QProf before: 55 jobs for 8 unrolled rounds on a peel that
       // converges in 2-3.
-      var prevN = -1L
-      var converged = false
-      (1 to 8).foreach { _ =>
-        if (!converged) {
-          edges = und
-            .join(nodes.select(col("w").as("w1")), "w1")
-            .join(nodes.select(col("w").as("w2")), "w2")
-            .select("w1", "w2")
-          nodes = edges.groupBy("w1").agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= 3L).select(col("w1").as("w"))
-            .localCheckpoint(true)
-          val n = nodes.count()
-          if (n == prevN) converged = true else prevN = n
-        }
+      // state: (survivors, their induced edges, survivor count)
+      val (nodes, edges, _) = Iterate.upTo(8,
+          (vocab.select(col("w")), und, -1L)) { case (nodes, _, prevN) =>
+        val edges = und
+          .join(nodes.select(col("w").as("w1")), "w1")
+          .join(nodes.select(col("w").as("w2")), "w2")
+          .select("w1", "w2")
+        val next = edges.groupBy("w1").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= 3L).select(col("w1").as("w"))
+          .localCheckpoint(true)
+        val n = next.count()
+        ((next, edges, n), n == prevN)
       }
       edges
         .join(nodes.select(col("w").as("w1")), "w1")
@@ -4889,7 +4867,7 @@ object Pipeline {
       val und = etop
         .union(etop.select(col("w2").as("w1"), col("w1").as("w2")))
         .distinct().localCheckpoint(true)
-      var lbl = vocab.select(col("w"), col("w").as("lbl"))
+      val lbl0 = vocab.select(col("w"), col("w").as("lbl"))
         .localCheckpoint(true)
       // r19 early-exit TRIED AND REVERTED: a per-round label-frame
       // equality check (join + isEmpty on ≤32-row ckpt frames) would let
@@ -4898,7 +4876,7 @@ object Pipeline {
       // paid and zero rounds saved (measured: 36 → 50 jobs, wall 1.99 →
       // 3.31 s). Unlike the monotone k-core peel, LPA here never reaches
       // fixpoint inside its declared 4 rounds.
-      (1 to 4).foreach { _ =>
+      val lbl = Iterate.upTo(4, lbl0) { lbl =>
         val votes = und
           .join(broadcast(lbl.select(col("w").as("w2"), col("lbl"))), "w2")
           .groupBy(col("w1").as("w"), col("lbl"))
@@ -4908,9 +4886,9 @@ object Pipeline {
             Window.partitionBy("w")
               .orderBy(col("c").desc, col("lbl").asc)))
           .filter(col("rn") === 1).select(col("w"), col("lbl").as("nl"))
-        lbl = lbl.join(broadcast(best), Seq("w"), "left")
+        (lbl.join(broadcast(best), Seq("w"), "left")
           .select(col("w"), coalesce(col("nl"), col("lbl")).as("lbl"))
-          .localCheckpoint(true)
+          .localCheckpoint(true), false)
       }
       val sz = lbl.groupBy("lbl").agg(count(lit(1)).as("community_size"))
       lbl.join(broadcast(sz), "lbl")

@@ -4802,16 +4802,13 @@ object Relational {
     // the graph is the supplier–part bipartite week (who supplied what
     // in the first week of 1995-03) — sparse by construction, hundreds
     // of small components (the co-purchase graph is one giant blob; a
-    // CC query needs real components to say anything). Each round
-    // references the ≤|nodes|-row label frame twice (own + neighbor)
-    // and the jump references the round's min frame twice, so BOTH are
-    // localCheckpoint'd per round (the q_kcore discipline — constant
-    // plan size, and exactly the materialized-frontier shape a Pregel
-    // run has at real graph sizes; the DuckDB oracle needs MATERIALIZED
-    // CTEs for the same reason). 8 jump rounds cover diameter ~2⁸;
-    // fixpoint-vs-brute-union-find is asserted in OperatorSpec. Scale:
-    // edges shuffle once on each endpoint per round, state is one row
-    // per node — the textbook 100 TB CC layout.
+    // CC query needs real components to say anything). The rounds are
+    // [[Iterate.minLabelJump]] (both half-steps checkpointed per round;
+    // the DuckDB oracle needs MATERIALIZED CTEs for the same reason).
+    // 8 jump rounds cover diameter ~2⁸; fixpoint-vs-brute-union-find is
+    // asserted in OperatorSpec. Scale: edges shuffle once on each
+    // endpoint per round, state is one row per node — the textbook
+    // 100 TB CC layout.
     "q_connected_components" -> { (s, dir) =>
       val e0 = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= ts("1995-03-01 00:00:00") &&
@@ -4830,19 +4827,9 @@ object Relational {
       // join: 68 → 79 jobs, 2.69 → 3.16 s. Two checkpoints per round is
       // the minimal-recompute shape when both half-steps are referenced
       // twice.
-      var lbl = und.select(col("w1").as("w")).distinct()
-        .select(col("w"), col("w").as("comp")).localCheckpoint(true)
-      (1 to 8).foreach { _ =>
-        val m = lbl.union(
-            und.join(lbl.select(col("w").as("w2"), col("comp")), "w2")
-              .select(col("w1").as("w"), col("comp")))
-          .groupBy("w").agg(min("comp").as("comp"))
-          .localCheckpoint(true)
-        val j = m.select(col("w").as("jw"), col("comp").as("jc"))
-        lbl = m.join(j, m("comp") === col("jw"))
-          .select(m("w").as("w"), col("jc").as("comp"))
-          .localCheckpoint(true)
-      }
+      val lbl = Iterate.minLabelJump(und, und.select(col("w1").as("w"))
+        .distinct().select(col("w"), col("w").as("comp"))
+        .localCheckpoint(true), 8)
       val sz = lbl.groupBy("comp").agg(count(lit(1)).as("comp_size"))
       lbl.join(sz, "comp")
         .select(col("w").as("node"), col("comp"), col("comp_size"))
@@ -4925,11 +4912,14 @@ object Relational {
     // between the first and last observation, missing days filled by
     // LOCF + next-observation windows (IGNORE NULLS — one forward and
     // one backward window pass, no per-gap join) and the linear blend
-    // py + (ny−py)·(d−pd)/(nd−pd) in one shared tree. Edges can't
-    // dangle: the spine is clamped to known endpoints. Scale: the
-    // spine is per-ENTITY (bounded by the entity's span); at corpus
-    // scale the same two windows run partitioned by entity key —
-    // nothing here is corpus-wide except the one rollup.
+    // (py·(nd−d) + ny·(d−pd))/(nd−pd) in EXACT integer cents, rounded
+    // half-up as (2·num + den) div (2·den) — both engines walk the same
+    // positive BIGINTs (a double blend rounded differently across them,
+    // by one cent at sf0.1). Edges can't dangle: the spine is clamped
+    // to known endpoints. Scale: the spine is per-ENTITY (bounded by
+    // the entity's span); at corpus scale the same two windows run
+    // partitioned by entity key — nothing here is corpus-wide except
+    // the one rollup.
     "q_gap_fill" -> { (s, dir) =>
       val o = t(s, dir, "orders")
       val top = o.groupBy(col("o_custkey").as("c"))
@@ -4956,8 +4946,9 @@ object Relational {
           ignoreNulls = true).over(wf))
         .select(col("d").as("day_index"),
           round(expr("CASE WHEN y IS NOT NULL THEN CAST(y AS DOUBLE) " +
-            "ELSE CAST(py AS DOUBLE) + (CAST(ny AS DOUBLE) - py) * " +
-            "(d - pd) / (nd - pd) END / 100"), 2).as("value_usd"),
+            "ELSE CAST((2L * (py * (nd - d) + ny * (d - pd)) + (nd - pd)) " +
+            "div (2L * (nd - pd)) AS DOUBLE) END / 100"), 2)
+            .as("value_usd"),
           when(col("y").isNotNull, lit("actual"))
             .otherwise(lit("interpolated")).as("status"))
         .orderBy("day_index")
@@ -5295,19 +5286,8 @@ object Relational {
       // still changing at round 8), so the declared output IS the 8-round
       // trajectory, and any restructuring of the iteration would change
       // results. Kept exactly as r18 built it.
-      var lbl = dense.select(col("w"), col("w").as("comp"))
-        .localCheckpoint(true)
-      (1 to 8).foreach { _ =>
-        val m = lbl.union(
-            und.join(lbl.select(col("w").as("w2"), col("comp")), "w2")
-              .select(col("w1").as("w"), col("comp")))
-          .groupBy("w").agg(min("comp").as("comp"))
-          .localCheckpoint(true)
-        val j = m.select(col("w").as("jw"), col("comp").as("jc"))
-        lbl = m.join(j, m("comp") === col("jw"))
-          .select(m("w").as("w"), col("jc").as("comp"))
-          .localCheckpoint(true)
-      }
+      val lbl = Iterate.minLabelJump(und,
+        dense.select(col("w"), col("w").as("comp")).localCheckpoint(true), 8)
       val sz = lbl.groupBy("comp").agg(count(lit(1)).as("n_cells"))
       val noise = cells.filter(col("n") < 4L)
         .agg(coalesce(sum("n"), lit(0L)).as("n_noise_points"))
@@ -5573,11 +5553,11 @@ object Relational {
     // driver union-find; a measured join-based doubling chain spent
     // ~10× this query's runtime on per-job fixed costs. Frames are
     // ckptCut per round (localCheckpoint ALONE telescopes lazy
-    // sizeInBytes stats — see ckptCut). At unbounded component counts
-    // the map row is replaced by the E172 pointer-jump kernel — the
-    // same round structure, distributed f. OperatorSpec proves the
-    // edge SET equals Kruskal's. Scale: one corpus rollup; rounds
-    // touch ≤2&#124;E&#124;-row frames; O(log V) supersteps.
+    // sizeInBytes stats — see [[Iterate.ckptCut]]). At unbounded
+    // component counts the map row is replaced by the E172 pointer-jump
+    // kernel — the same round structure, distributed f. OperatorSpec
+    // proves the edge SET equals Kruskal's. Scale: one corpus rollup;
+    // rounds touch ≤2&#124;E&#124;-row frames; O(log V) supersteps.
     "q_mst_boruvka" -> { (s, dir) =>
       val custNation = t(s, dir, "orders")
         .join(broadcast(t(s, dir, "customer")
@@ -5597,14 +5577,11 @@ object Relational {
             .as("b"))
         .agg(sum((money(col("l_extendedprice")) * 100).cast(LongType))
           .as("cents"))
-      val edges = ckptCut(pair
+      val edges = Iterate.ckptCut(pair
         .select(col("a"), col("b"), (-col("cents")).as("w"),
           col("a").as("u"), col("b").as("v"))
         .union(pair.select(col("a"), col("b"), (-col("cents")).as("w"),
           col("b").as("u"), col("a").as("v"))))
-      var lbl = ckptCut(edges.select(col("u")).distinct()
-        .select(col("u"), col("u").as("comp")))
-      var mst = ckptCut(edges.select("a", "b", "w").limit(0))
       // r19: fixpoint early-exit — once no cross-component edge remains,
       // sel is empty and every later round is a no-op (mst.union(∅),
       // identity contraction map), so skipping them leaves the result
@@ -5613,36 +5590,36 @@ object Relational {
       // (it was a third eager checkpoint per round; referenced once, its
       // subtree cannot duplicate). Cap stays 5 — the declared O(log V)
       // bound.
-      var done = false
-      (1 to 5).foreach { _ =>
-        if (!done) {
-          val cand = edges
-            .join(lbl.select(col("u"), col("comp").as("cu")), "u")
-            .join(lbl.select(col("u").as("v"), col("comp").as("cv")), "v")
-            .filter(col("cu") =!= col("cv"))
-          val sel = ckptCut(cand
-            .withColumn("rn", row_number().over(
-              Window.partitionBy("cu").orderBy(col("w"), col("a"), col("b"))))
-            .filter(col("rn") === 1)
-            .select("cu", "cv", "w", "a", "b"))
-          if (sel.isEmpty) done = true
-          else {
-            mst = mst.union(sel.select("a", "b", "w"))
-            val mrow = lbl.select(col("comp")).distinct()
-              .join(sel.select(col("cu"), col("cv")),
-                col("comp") === col("cu"), "left")
-              .agg(map_from_entries(sort_array(collect_list(struct(
-                col("comp"), coalesce(col("cv"), col("comp"))))))
-                .as("fm"))
-            val chase = (1 to 30)
-              .foldLeft("comp")((e, _) => s"element_at(fm, $e)")
-            lbl = ckptCut(lbl.crossJoin(broadcast(mrow))
-              .select(col("u"),
-                expr(s"least($chase, element_at(fm, $chase))").as("comp")))
-          }
+      val lbl0 = Iterate.ckptCut(edges.select(col("u")).distinct()
+        .select(col("u"), col("u").as("comp")))
+      val mst0 = Iterate.ckptCut(edges.select("a", "b", "w").limit(0))
+      val (_, mst) = Iterate.upTo(5, (lbl0, mst0)) { case (lbl, mst) =>
+        val cand = edges
+          .join(lbl.select(col("u"), col("comp").as("cu")), "u")
+          .join(lbl.select(col("u").as("v"), col("comp").as("cv")), "v")
+          .filter(col("cu") =!= col("cv"))
+        val sel = Iterate.ckptCut(cand
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("cu").orderBy(col("w"), col("a"), col("b"))))
+          .filter(col("rn") === 1)
+          .select("cu", "cv", "w", "a", "b"))
+        if (sel.isEmpty) ((lbl, mst), true)
+        else {
+          val mrow = lbl.select(col("comp")).distinct()
+            .join(sel.select(col("cu"), col("cv")),
+              col("comp") === col("cu"), "left")
+            .agg(map_from_entries(sort_array(collect_list(struct(
+              col("comp"), coalesce(col("cv"), col("comp"))))))
+              .as("fm"))
+          val chase = (1 to 30)
+            .foldLeft("comp")((e, _) => s"element_at(fm, $e)")
+          ((Iterate.ckptCut(lbl.crossJoin(broadcast(mrow))
+            .select(col("u"),
+              expr(s"least($chase, element_at(fm, $chase))").as("comp"))),
+            mst.union(sel.select("a", "b", "w"))), false)
         }
       }
-      val mstD = ckptCut(mst.distinct())
+      val mstD = Iterate.ckptCut(mst.distinct())
       val tot = mstD.agg(sum(-col("w")).as("tree_cents"),
         count(lit(1)).as("n_edges"))
       mstD.crossJoin(broadcast(tot))
@@ -5745,7 +5722,7 @@ object Relational {
           sum(cents.cast(DecimalType(18, 0)) *
             cents.cast(DecimalType(18, 0))).as("syy"))
         .localCheckpoint(true)
-      val cums = ckptCut(cells.select(col("x").as("t"),
+      val cums = Iterate.ckptCut(cells.select(col("x").as("t"),
         sum("n").over(Window.orderBy("x")
           .rowsBetween(Window.unboundedPreceding, 0)).as("nl"),
         sum("sy").over(Window.orderBy("x")
@@ -5755,7 +5732,7 @@ object Relational {
         struct(col("t"), col("nl"))))).as("nm"))
       val lst = cells.agg(sort_array(collect_list(struct(col("x"),
         col("n"), col("sy"), col("syy")))).as("l"))
-      var params = ckptCut(g0
+      var params = Iterate.ckptCut(g0
         .crossJoin(broadcast(maps)).crossJoin(broadcast(lst))
         .select(expr("CAST(syg AS DOUBLE) / CAST(ng AS DOUBLE)").as("f0"),
           col("ng"), col("syg"), col("nm"), col("l")))
@@ -5778,7 +5755,7 @@ object Relational {
           .select(col("t").as(s"t$m"),
             expr("rl / CAST(nl AS DOUBLE)").as(s"l$m"),
             expr("rr / CAST(nr AS DOUBLE)").as(s"r$m"))
-        params = ckptCut(params.crossJoin(broadcast(win)))
+        params = Iterate.ckptCut(params.crossJoin(broadcast(win)))
       }
       val mses = (1 to 3).map { m =>
         val f = boostF(m)
@@ -6220,14 +6197,14 @@ object Relational {
           struct(col("i"), col("j"), col("r")))).as("cl")))
         .withColumn("vm0", expr(
           "map_from_entries(transform(jkeys, x -> struct(x, 1.0D)))"))
-      var st = ckptCut(base)
+      var st = Iterate.ckptCut(base)
       for (r <- 1 to 3) {
-        st = ckptCut(st
+        st = Iterate.ckptCut(st
           .withColumn(s"um$r", expr(newmap("ikeys", "rowm",
             if (r == 1) "vm0" else s"vm${r - 1}", "j")))
           .withColumn(s"vm$r", expr(newmap("jkeys", "colm", s"um$r", "i"))))
       }
-      val fin = ckptCut(st
+      val fin = Iterate.ckptCut(st
         .withColumn("un", expr(
           """sqrt(aggregate(transform(ikeys, k ->
             |  element_at(um3, k) * element_at(um3, k)), 0D,
@@ -6905,24 +6882,6 @@ object Relational {
           round(expr("(n_extreme + 1) / CAST(201 AS DOUBLE)"), 6)
             .as("p_value"))
     })
-
-  /** localCheckpoint + CUT THE LAZY STATS LINEAGE. A checkpointed
-    * Dataset's LogicalRDD keeps the ORIGINAL plan's sizeInBytes stats
-    * lazily, so a pointer-jump SQUARING chain (g ⋈ g per jump) doubles
-    * the BigInt digit count per jump — measured 6→94 digits across 5
-    * jumps; nested inside 5 Boruvka rounds the estimate reaches millions
-    * of digits and the driver burns minutes inside BigInteger.multiply
-    * in SizeInBytesOnlyStatsPlanVisitor (observed: q_mst_boruvka >15 min
-    * before this fix, all of it driver-side stats arithmetic). The RDD
-    * round-trip re-wraps the SAME materialized partitions with fresh
-    * default stats — no recompute, constant-size estimates. The plain
-    * per-round kernels (q_connected_components, q_dbscan_grid) only
-    * double digits ONCE per round and stay fast without this; any query
-    * that SQUARES a checkpointed frame per step needs it. */
-  private def ckptCut(df: DataFrame): DataFrame = {
-    val m = df.localCheckpoint(true)
-    m.sparkSession.createDataFrame(m.rdd, m.schema)
-  }
 
   /** q_quantile_regression's 3-column projection (rf, quantity, price
     * cents) — factored so the public query can persist it and PlanSpec
@@ -11342,7 +11301,7 @@ object Relational {
         |FROM top CROSS JOIN st""".stripMargin,
 
     // same top-entity series, same IGNORE NULLS forward/backward
-    // windows, same linear-blend tree
+    // windows, same integer-cent blend rounded half-up
     "q_gap_fill" ->
       """WITH top AS (
         |  SELECT o_custkey AS c FROM orders GROUP BY 1
@@ -11372,7 +11331,8 @@ object Relational {
         |  FROM j)
         |SELECT d AS day_index,
         |  round(CASE WHEN y IS NOT NULL THEN y::DOUBLE
-        |    ELSE py::DOUBLE + (ny::DOUBLE - py) * (d - pd) / (nd - pd)
+        |    ELSE ((2 * (py * (nd - d) + ny * (d - pd)) + (nd - pd)) //
+        |      (2 * (nd - pd)))::DOUBLE
         |    END / 100, 2) AS value_usd,
         |  CASE WHEN y IS NOT NULL THEN 'actual' ELSE 'interpolated' END
         |    AS status
@@ -12504,10 +12464,11 @@ object Relational {
          |FROM conf""".stripMargin
     })
 
-  /** q_dbscan_grid's oracle: the cell rollup + 8-neighborhood edges +
-    * the q_connected_components pointer-jump rounds on dense cells. */
-  private def dbscanOracle: String = {
-    val rounds = (1 to 8).map { i =>
+  /** [[Iterate.minLabelJump]] as DuckDB CTEs over `und` (w1, w2) and the
+    * initial label CTE `l0` (w, comp): round i's min frame `m$i` and
+    * jumped labels `l$i`, both MATERIALIZED (each is referenced twice). */
+  private def minLabelJumpSql(rounds: Int): String =
+    (1 to rounds).map { i =>
       s"""m$i AS MATERIALIZED (SELECT w, MIN(comp) AS comp FROM (
          |  SELECT w, comp FROM l${i - 1}
          |  UNION ALL
@@ -12517,6 +12478,10 @@ object Relational {
          |l$i AS MATERIALIZED (SELECT a.w, b.comp
          |  FROM m$i a JOIN m$i b ON a.comp = b.w)""".stripMargin
     }.mkString(",\n")
+
+  /** q_dbscan_grid's oracle: the cell rollup + 8-neighborhood edges +
+    * the q_connected_components pointer-jump rounds on dense cells. */
+  private def dbscanOracle: String = {
     s"""WITH pts AS (
        |  SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT)
        |    AS x, COALESCE(t.sp, 0) AS y
@@ -12541,7 +12506,7 @@ object Relational {
        |  JOIN dense b ON a0.nx = b.cx AND a0.ny = b.cy
        |  JOIN dense a ON a.w = a0.w),
        |l0 AS (SELECT w, w AS comp FROM dense),
-       |$rounds,
+       |${minLabelJumpSql(8)},
        |sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS n_cells
        |       FROM l8 GROUP BY 1),
        |noise AS (SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT)
@@ -12709,16 +12674,6 @@ object Relational {
   /** q_connected_components's oracle: the symmetrized bipartite week +
     * the same 8 unrolled min-label + pointer-jump rounds. */
   private def connectedComponentsOracle: String = {
-    val rounds = (1 to 8).map { i =>
-      s"""m$i AS MATERIALIZED (SELECT w, MIN(comp) AS comp FROM (
-         |  SELECT w, comp FROM l${i - 1}
-         |  UNION ALL
-         |  SELECT u.w1 AS w, p.comp FROM und u
-         |  JOIN l${i - 1} p ON u.w2 = p.w
-         |) GROUP BY w),
-         |l$i AS MATERIALIZED (SELECT a.w, b.comp
-         |  FROM m$i a JOIN m$i b ON a.comp = b.w)""".stripMargin
-    }.mkString(",\n")
     s"""WITH e0 AS (
        |  SELECT DISTINCT 's' || l_suppkey AS w1, 'p' || l_partkey AS w2
        |  FROM lineitem
@@ -12728,7 +12683,7 @@ object Relational {
        |  UNION SELECT w2 AS w1, w1 AS w2 FROM e0),
        |nodes AS (SELECT DISTINCT w1 AS w FROM und),
        |l0 AS (SELECT w, w AS comp FROM nodes),
-       |$rounds,
+       |${minLabelJumpSql(8)},
        |sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS comp_size
        |       FROM l8 GROUP BY 1)
        |SELECT w AS node, comp, comp_size FROM l8 JOIN sz USING (comp)

@@ -767,8 +767,8 @@ object Similarity {
     //     Per-round work is |Q|·B·M rows — INDEPENDENT of corpus size,
     //     which is the entire point of graph ANN at 100 TB (IVF scans
     //     nprobe·cell; the graph walks a constant-size beam). Each round's
-    //     ≤|Q|·B frontier is localCheckpoint'd (referenced twice: union +
-    //     expansion — the q_kcore plan-doubling rule).
+    //     ≤|Q|·B frontier is checkpointed (referenced twice: union +
+    //     expansion — the [[Iterate]] discipline).
     // Readout: the beam's top-3 per query vs the brute-force truth
     // (q_cosine_topk's kernel) with a hit flag — the recall@3 readout an
     // index build ships. Deterministic: raw-double cosine ranks with id
@@ -817,7 +817,7 @@ object Similarity {
           col("nrm").as("qn"))
         .localCheckpoint(true)
       // entry: best hub per query (16-row broadcast scan)
-      var frontier = broadcast(qs)
+      val entry = broadcast(qs)
         .crossJoin(hubIds.select(col("vec_id").as("node"), col("v"),
           col("nrm")))
         .withColumn("cos", expr(dot) / (col("qn") * col("nrm")))
@@ -830,9 +830,8 @@ object Similarity {
       // vector table is ever shuffled inside the loop (per-round work
       // stays |Q|·B·M, independent of corpus size; BHJ-only shape pinned
       // in PlanSpec via the factored [[graphAnnRound]]).
-      (1 to rounds).foreach { _ =>
-        frontier = graphAnnRound(vb, edges, qs, frontier, beam)
-          .localCheckpoint(true)
+      val frontier = Iterate.upTo(rounds, entry) { f =>
+        (graphAnnRound(vb, edges, qs, f, beam).localCheckpoint(true), false)
       }
       val truth = queries("q_cosine_topk")(s, dir)
         .select(col("q_id"), col("match_id"), lit(true).as("in_exact_top3"))
@@ -1383,13 +1382,15 @@ object Similarity {
       |WHERE cosine >= 0.2 ORDER BY vec_a, vec_b""".stripMargin
 
   /** q_graph_ann's oracle: the same hub clique + capped banded top-M graph
-    * and the same 4 unrolled beam rounds (frontier ∪ expansion → top-B by
-    * the identical raw-double cosine order). */
+    * and the same 6 unrolled beam rounds (frontier ∪ expansion → top-B by
+    * the identical raw-double cosine order). `e`, `ed` and each `f$r` are
+    * MATERIALIZED: each is referenced more than once (every beam round
+    * reads the previous one twice), and inlined they ran out of memory. */
   private val graphAnnSql: String = {
     val dotQN = "list_sum(list_transform(range(1, 65), " +
       "i -> q.v[i] * n.v[i])) / (q.nrm * n.nrm)"
     val roundsSql = (1 to 6).map { r =>
-      s"""f$r AS (
+      s"""f$r AS MATERIALIZED (
          |  SELECT q_id, node, cos FROM (
          |    SELECT s.*, row_number() OVER (PARTITION BY q_id
          |      ORDER BY cos DESC, node ASC) AS rn
@@ -1404,7 +1405,7 @@ object Similarity {
          |      JOIN q ON q.q_id = u.q_id
          |      WHERE u.node <> u.q_id) s) WHERE rn <= 16)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS ($vecsSql),
+    s"""WITH e AS MATERIALIZED ($vecsSql),
        |h AS (
        |  SELECT vec_id, band,
        |    list_sum(list_transform(range(0, 16), j ->
@@ -1436,7 +1437,7 @@ object Similarity {
        |    JOIN e a ON a.vec_id = c.src
        |    JOIN e b ON b.vec_id = c.dst) WHERE rn <= 8),
        |hub AS (SELECT vec_id FROM e WHERE vec_id >= 100 AND vec_id < 116),
-       |ed AS (
+       |ed AS MATERIALIZED (
        |  SELECT src, dst FROM (
        |    SELECT src, dst FROM nb
        |    UNION

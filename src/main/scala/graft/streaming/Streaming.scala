@@ -493,74 +493,6 @@ object Streaming {
       "distinct_events" -> ev.select("event_id").distinct().count())
   }
 
-  /** Wall-attribution probe for q_stream_dedup (r17 verdict item 1: the
-    * ×100 wall ratio moved 61× → 110× round-over-round with no code
-    * change, and after the containment lesson "machine floor" must be
-    * SHOWN). Replays the EXACT q_stream_dedup pipeline — same staged
-    * replay + injected transport duplicates, same watermark dedup, same
-    * append-mode memory sink and final batch sort — but through an
-    * instrumented handle, capturing every micro-batch's
-    * StreamingQueryProgress (input rows, per-component durations, state-
-    * store op counts/times) plus the JVM's GC time across the run, so the
-    * wall decomposes into NAMED fixed-rate components instead of being
-    * eyeballed. Staging (a one-off per session/dir, shared with the
-    * timed query) is timed separately and excluded from the stream wall.
-    * Returns one JSON object for the tier. */
-  def dedupWallProbe(s: SparkSession, dir: String): String = {
-    import scala.jdk.CollectionConverters._
-    def gcMs: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    val tStage0 = System.nanoTime()
-    val src = eventStream(s, dir, "dedup",
-      prep = df => df.unionByName(df.filter(col("event_id") % 97 === 0)))
-    val stageSec = (System.nanoTime() - tStage0) / 1e9
-    val out = src.withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-    val name = "graft_dedup_wall_probe"
-    val gc0 = gcMs
-    val t0 = System.nanoTime()
-    val progress = withStreamConf(s) {
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try { drainStable(q, s.table(name).count()); q.recentProgress.toSeq }
-      finally q.stop()
-    }
-    val streamSec = (System.nanoTime() - t0) / 1e9
-    val gcStream = gcMs - gc0
-    // the query's batch tail: q_stream_dedup sorts the finished sink —
-    // at ×100 that is a 10M-row driver-side memory table ordered + scanned
-    val t1 = System.nanoTime()
-    s.table(name).filter(col("event_id") >= 0)
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .orderBy("event_id").write.format("noop").mode("overwrite").save()
-    val sortSec = (System.nanoTime() - t1) / 1e9
-    val gcTotal = gcMs - gc0
-    def durSum(k: String): Long = progress.map(p =>
-      Option(p.durationMs.get(k)).map(_.toLong).getOrElse(0L)).sum
-    val so = progress.flatMap(_.stateOperators.headOption)
-    def f(d: Double) = f"$d%.3f"
-    s"""{"stage_sec":${f(stageSec)},"stream_sec":${f(streamSec)},""" +
-      s""""sort_sec":${f(sortSec)},"gc_stream_ms":$gcStream,""" +
-      s""""gc_total_ms":$gcTotal,"n_batches":${progress.size},""" +
-      s""""input_rows":${progress.map(_.numInputRows).sum},""" +
-      s""""output_rows":${progress.map(p => Option(p.sink)
-        .map(_.numOutputRows).getOrElse(0L)).sum},""" +
-      s""""dur_ms":{"addBatch":${durSum("addBatch")},""" +
-      s""""getBatch":${durSum("getBatch")},""" +
-      s""""latestOffset":${durSum("latestOffset")},""" +
-      s""""queryPlanning":${durSum("queryPlanning")},""" +
-      s""""walCommit":${durSum("walCommit")},""" +
-      s""""commitOffsets":${durSum("commitOffsets")},""" +
-      s""""triggerExecution":${durSum("triggerExecution")}},""" +
-      s""""state":{"rows_updated":${so.map(_.numRowsUpdated).sum},""" +
-      s""""rows_removed":${so.map(_.numRowsRemoved).sum},""" +
-      s""""rows_total_peak":${(0L +: so.map(_.numRowsTotal)).max},""" +
-      s""""updates_ms":${so.map(_.allUpdatesTimeMs).sum},""" +
-      s""""removals_ms":${so.map(_.allRemovalsTimeMs).sum},""" +
-      s""""commit_ms":${so.map(_.commitTimeMs).sum},""" +
-      s""""memory_peak_bytes":${(0L +: so.map(_.memoryUsedBytes)).max}}}"""
-  }
-
   /** Drive a started query to completion: processAllAvailable, then poll
     * `size` until it is stable twice (the final watermark-driven eviction
     * lands in a no-data micro-batch that can trail processAllAvailable);

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds on SPARK_GRAFT_SF_DIR.
   *
@@ -25,24 +24,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Run.sfDir
     val cpus = Sessions.defaultCpus
     val spark = Sessions.local("graft-bench", cpus)
+    def msg(e: Throwable): String =
+      Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
 
-    // noop sink: executes the full plan (incl. top-level sorts/projects that
-    // a count() would let Catalyst drop) without writing anything.
-    def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Option[String] =
-      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); None }
-      catch { case e: Throwable =>
-        Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-      }
-
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    if (!new java.io.File(warmDir).isDirectory)
-      System.err.println(s"[bench] WARNING: warm dir $warmDir missing — timed runs are cold")
-    else SparkEntry.queries.foreach { case (name, fn) =>
-      exec(fn, warmDir).foreach(m => System.err.println(s"[bench] warm-up $name failed: $m"))
+    if (!new java.io.File(Run.warmDir).isDirectory)
+      System.err.println(s"[bench] WARNING: warm dir ${Run.warmDir} missing — timed runs are cold")
+    else SparkEntry.queries.keys.foreach { name =>
+      Run(spark, name, Run.warmDir).error.foreach(e =>
+        System.err.println(s"[bench] warm-up $name failed: ${msg(e)}"))
     }
     // Staged KV tables are keyed per sf-dir, so the warm-up at sf0.001 does
     // NOT stage the timed dir's copies — without this, the first timed query
@@ -58,26 +50,20 @@ object Bench {
     // A canary FAILURE must be loud, not a suspiciously fast "clean" timing —
     // a broken canary would report contended=false on exactly the runs it
     // exists to flag.
-    def canary(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      exec(SparkEntry.queries("q_users_scan"), sfDir).foreach(m =>
-        sys.error(s"canary query q_users_scan failed — bench invalid: $m"))
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    def canary(): Double =
+      try Run.best(spark, "q_users_scan", sfDir, 3)
+      catch { case e: Throwable =>
+        sys.error(s"canary query q_users_scan failed — bench invalid: ${msg(e)}") }
 
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timedPass(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val err = exec(fn, sfDir)
-      val dt = (System.nanoTime() - t0) / 1e9
-      // queries are self-contained: drop their persisted intermediates so
-      // later timings don't pay earlier queries' memory pressure
-      spark.sharedState.cacheManager.clearCache()
-      err match {
-        case Some(m) => errors(name) = m; name -> -1.0
-        case None => name -> dt
-      }
+    // One timed sample of query `k`: its seconds, or -1 after `failed` got
+    // the error message.
+    def sample(k: String, failed: String => Unit): Double = {
+      val r = Run(spark, k, sfDir)
+      r.error.map(msg).fold(r.seconds) { m => failed(m); -1.0 }
     }
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timedPass(): Map[String, Double] =
+      SparkEntry.queries.map { case (name, _) => name -> sample(name, errors(name) = _) }
     val canaryBefore = canary()
     // THREE timed passes: r5 showed min-of-2 under-smooths — two "clean"
     // runs 37 min apart differed 85.4 -> 99.3 s with per-query swings up to
@@ -91,24 +77,19 @@ object Bench {
     // 3-pass spread exceeds 3x gets two EXTRA timed runs, and its min /
     // spread are taken over all five. Bounded cost — only the jittery
     // tail re-runs, not the suite.
-    val jittery = SparkEntry.queries.keys.filter { k =>
-      val ts = passes0.map(_(k))
-      ts.forall(_ >= 0) && ts.max / math.max(1e-9, ts.min) > 3.0
-    }.toSeq
+    // max/min of a query's samples (its jitter bound); -1 if one failed
+    def spread(ts: Seq[Double]): Double =
+      if (ts.exists(_ < 0)) -1.0 else ts.max / math.max(1e-9, ts.min)
+    val jittery = SparkEntry.queries.keys.filter(k => spread(passes0.map(_(k))) > 3.0).toSeq
     if (jittery.nonEmpty)
       System.err.println(s"[bench] re-timing ${jittery.size} high-spread queries: " +
         jittery.mkString(", "))
+    // An extra-pass error must not flip a query that already passed all 3
+    // original passes to -1 (r17 advice): log it loudly, mark the sample
+    // invalid, and let samples() fall back to the 3 clean originals.
     def retimePass(): Map[String, Double] = jittery.map { k =>
-      val t0 = System.nanoTime()
-      val err = exec(SparkEntry.queries(k), sfDir)
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      // An extra-pass error must not flip a query that already passed all 3
-      // original passes to -1 (r17 advice): log it loudly, mark the sample
-      // invalid, and let samples() fall back to the 3 clean originals.
-      err.foreach(m => System.err.println(s"[bench] re-time pass for $k failed " +
+      k -> sample(k, m => System.err.println(s"[bench] re-time pass for $k failed " +
         s"(falling back to the 3 clean original samples): $m"))
-      k -> (if (err.isDefined) -1.0 else dt)
     }.toMap
     val extras = if (jittery.isEmpty) Seq.empty else Seq(retimePass(), retimePass())
     val canaryAfter = canary()
@@ -137,18 +118,12 @@ object Bench {
       val ts = samples(k)
       k -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
     }.toSeq
-    val spreads = SparkEntry.queries.keys.map { k =>
-      val ts = samples(k)
-      k -> (if (ts.exists(_ < 0)) -1.0 else ts.max / math.max(1e-9, ts.min))
-    }.toSeq
+    val spreads = SparkEntry.queries.keys.map(k => k -> spread(samples(k))).toSeq
     // Raw 3-pass spread for the re-timed queries (r17 advice): the reported
     // spread censors the worst original sample by design, so a genuinely
     // bimodal query (legitimately slow ~1 in 3 runs) would look stable.
     // Emitting the raw spread alongside keeps bimodality visible.
-    val spreadRaw = jittery.map { k =>
-      val ts = passes0.map(_(k))
-      k -> (if (ts.exists(_ < 0)) -1.0 else ts.max / math.max(1e-9, ts.min))
-    }
+    val spreadRaw = jittery.map(k => k -> spread(passes0.map(_(k))))
 
     def r3(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     def r2(v: Double): String = if (v < 0) "-1" else f"$v%.2f"
@@ -204,9 +179,17 @@ object Bench {
     // builder's own (SPARK_GRAFT_SELF=1); unconditional, the driver's own
     // bench invocations (including its lower-core scaling run) clobbered
     // the committed artifact every round (r18 verdict hygiene item)
-    if (sys.env.get("SPARK_GRAFT_SELF").contains("1"))
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_SELF.json"), line + "\n")
-      catch { case _: Throwable => () }
+    // A failed write is reported and fails the run: a silently stale
+    // artifact would be committed as if it were this run's.
+    val selfWriteFailed = sys.env.get("SPARK_GRAFT_SELF").contains("1") &&
+      (try {
+        java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_SELF.json"), line + "\n")
+        false
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] writing BENCH_SELF.json failed: $e")
+        true
+      })
     spark.stop()
+    if (selfWriteFailed) sys.exit(1)
   }
 }

@@ -14,18 +14,9 @@ object Verify {
     // (reference: userdata/cloudinit.sh:351); exercise the same path on the
     // flagship query before the parquet dumps.
     if (only.isEmpty) SparkEntry.entry(spark).show(truncate = false)
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries are self-contained: drop any persisted intermediates a
-      // builder materialized mid-plan (the Bench discipline) so a long
-      // 471-query dump can't accumulate cached frames across queries
-      finally spark.sharedState.cacheManager.clearCache()
+    SparkEntry.queries.keys.filter(name => only.isEmpty || only(name)).foreach { name =>
+      Run(spark, name, sfDir, Run.parquet(s"$outDir/$name")).error.foreach(e =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-probe bench: empirically back the "survives a 10×/100× scale-up"
   * design claims (r9 verdict item 5) by timing the most expensive
   * non-streaming declared queries at sf0.1, at a ScaleGen'd ×10 tier, and
@@ -229,26 +227,16 @@ object ScaleBench {
     val x10Dir = args.lift(0).getOrElse("/root/repo/target/scaledata/sf1")
     val outFile = args.lift(1).getOrElse("/root/repo/BENCH_SCALE.json")
     val x100Dir = args.lift(2)
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    val baseDir = graft.Run.sfDir
     val reps = graft.Sessions.envPositiveInt("SPARK_GRAFT_REPS", 2)
     val spark = graft.Sessions.local("graft-scalebench")
     spark.conf.set("spark.sql.files.maxPartitionBytes", 32L * 1024 * 1024)
 
-    def exec(name: String, dir: String): Unit = {
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      spark.sharedState.cacheManager.clearCache()
-    }
     // warm-up: JIT + whole-stage-codegen compile off the timed path
-    probes.foreach(exec(_, warmDir))
+    probes.foreach(graft.Run(spark, _, graft.Run.warmDir).get)
 
     def time(name: String, dir: String, r: Int = reps): Double = {
-      val t = (1 to r).map { _ =>
-        val t0 = System.nanoTime()
-        exec(name, dir)
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      val t = graft.Run.best(spark, name, dir, r)
       // progress heartbeat: the 18:31 silent q_fs_em x100 hang cost 30
       // wall-clock minutes to even LOCATE — every probe logs on finish
       System.err.println(f"[scalebench] $name @ $dir: $t%.2f s")
@@ -259,7 +247,7 @@ object ScaleBench {
     val x10 = probes.map(q => q -> time(q, x10Dir)).toMap
 
     // streaming tier: wall time + state-store row counts at every tier
-    streamProbes.foreach(exec(_, warmDir))
+    streamProbes.foreach(graft.Run(spark, _, graft.Run.warmDir).get)
     val sBase = streamProbes.map(q => q -> time(q, baseDir)).toMap
     val sX10 = streamProbes.map(q => q -> time(q, x10Dir)).toMap
     val sX100 = x100Dir.map(d => streamProbes.map(q => q -> time(q, d, 1)).toMap)

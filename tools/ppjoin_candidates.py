@@ -3,7 +3,8 @@
 CONTAINMENT_CANDIDATES.json treatment at x10/x100/x1000.
 
 The x1000 WALL probe for q_ppjoin died on local shuffle-spill disk
-(documented with the measured ENOSPC in tools/ProbeX1000.scala) — but the
+(measured: its rank window and joins filled ~48 GB and failed with ENOSPC)
+— but the
 CANDIDATE COUNT does not need Spark's shuffle: this recounts the query's own
 candidate generator exactly in the oracle engine (DuckDB):
 
@@ -138,7 +139,7 @@ def main():
         "metric": "ppjoin_candidates",
         "query": "q_ppjoin",
         "question": ("r17 verdict item 4: the x1000 wall probe died on local "
-                     "spill disk (ENOSPC, documented in ProbeX1000.scala) - "
+                     "spill disk (ENOSPC after filling ~48 GB) - "
                      "does the prefix+length candidate volume stay linear "
                      "through the third decade anyway?"),
         "method": ("exact recount of q_ppjoin's own candidate generator in "

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, NamespaceChange, SupportsDelete, SupportsNamespaces, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.functions.{AggregateFunction, BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
@@ -111,13 +112,6 @@ object GraftCatalogStore {
     * CAS-replace the whole per-key state. */
   final case class GCellRow(marker: Option[GCell], cells: Array[GCell])
 
-  /** One CDC changelog entry: a commit's statement rows (padded to the
-    * commit-time schema), tombstone = a DELETE's marker batch. MERGE /
-    * row-level-delta commits append their deltas too (tombstone batch for
-    * deletes + key-changing updates' source keys, data batch for
-    * upserts). */
-  final case class CdcBatch(rows: Array[Array[Any]], tombstone: Boolean)
-
   /** One counter SHARD — Cassandra's counter cell fragment: the sub-count
     * a single replica is the leader for, versioned by its own logical
     * clock. A replicated counter column stores `Map[replicaIdx, CtrShard]`;
@@ -181,15 +175,17 @@ object GraftCatalogStore {
       * under `synchronized`) and drained by
       * [[GraftCatalogStore.replayHints]] when the node "comes back". */
     val hints = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Any])]
-    /** CDC changelog (the Cassandra commit-log / CDC-log analog for the
-      * catalog store): one entry per commit — INSERT/streaming-sink/logged-
+    /** CDC changelog (the Cassandra commit-log / CDC-log analog), the same
+      * [[KeyGroupedRegistry.LogBatch]] log the KV store keeps: one entry
+      * per commit, each appended through [[Cdc.append]] with its rows
+      * padded to the commit-time schema — INSERT/streaming-sink/logged-
       * BATCH commits append their statement rows, key deletes append a
-      * TOMBSTONE batch of marker rows (key set, data null). Served by the
-      * `<table>__cdc` streaming read as micro-batches (offset = batch
-      * count). MERGE / row-level deltas are captured too (tombstone +
-      * data batches per commit — see GDeltaBatchWrite). */
+      * TOMBSTONE batch of marker rows (key set, data null). MERGE /
+      * row-level deltas are captured too (tombstone + data batches per
+      * commit, appended together — see GDeltaBatchWrite). Served by the
+      * `<table>__cdc` streaming read, the shared [[CdcStream]]. */
     val changelog =
-      scala.collection.mutable.ArrayBuffer.empty[GraftCatalogStore.CdcBatch]
+      scala.collection.mutable.ArrayBuffer.empty[KeyGroupedRegistry.LogBatch]
     /** Named point-in-time snapshots (nodetool snapshot analog): immutable
       * copies of the row store / cell store taken under the DDL write lock.
       * Row arrays are never mutated in place (every merge replaces whole
@@ -492,13 +488,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
   override def loadTable(ident: Identifier): Table = {
     // `<table>__cdc` resolves to the base table's CDC stream (the commit-
-    // log read) — a read-only MicroBatchStream surface, like a CDC-enabled
+    // log read) — the shared read-only CdcTable, like a CDC-enabled
     // Cassandra table's cdc_raw log next to the table itself
     if (ident.name().endsWith("__cdc")) {
       val base = ident.name().stripSuffix("__cdc")
       val key = (nsOf(ident), base)
       val t = tables.getOrElse(key, throw new NoSuchTableException(ident))
-      return new GCdcTable(s"$catName.${key._1}.${key._2}__cdc", t)
+      val schema = t.schema
+      return new CdcTable(s"$catName.${key._1}.${key._2}__cdc", schema,
+        hasCk = false, () => t.changelog, GValues.cells(schema))
     }
     val key = (nsOf(ident), ident.name())
     val t = tables.getOrElse(key, throw new NoSuchTableException(ident))
@@ -1071,12 +1069,10 @@ class GUpsertTable(tname: String, t: GraftCatalogStore.T)
         t.hints.clear(); t.hints ++= kept
       }
       // CDC tombstone batch: one marker row per deleted key
-      t.changelog.synchronized {
-        t.changelog += GraftCatalogStore.CdcBatch(
-          doomed.iterator.map { k =>
-            val r = new Array[Any](t.schema.length); r(ki) = k; r
-          }.toArray, tombstone = true)
-      }
+      Cdc.append(t.changelog, KeyGroupedRegistry.LogBatch(
+        doomed.iterator.map { k =>
+          val r = new Array[Any](t.schema.length); r(ki) = k; r
+        }.toArray, tombstone = true))
     }
   }
 
@@ -2012,10 +2008,8 @@ object GUpsertTable {
     // CDC: every commit through this path (INSERT, streaming sink, logged
     // BATCH) appends its statement rows — the commit-log entry consumers
     // fold; the __cdc stream serves it as one micro-batch per commit
-    t.changelog.synchronized {
-      t.changelog += GraftCatalogStore.CdcBatch(
-        rows.iterator.map(padded).toArray, tombstone = false)
-    }
+    Cdc.append(t.changelog, KeyGroupedRegistry.LogBatch(
+      rows.iterator.map(padded).toArray, tombstone = false))
     rows.foreach { r0 =>
       val r = padded(r0)
       setIdx.foreach { case (i, et) =>
@@ -2600,12 +2594,10 @@ class GDeltaBatchWrite(t: GraftCatalogStore.T) extends DeltaBatchWrite {
       val datas = allOps.collect {
         case (op, _, row0) if op != GDeltaWriterFactory.Delete => padded(row0)
       }
-      t.changelog.synchronized {
-        if (tombs.nonEmpty)
-          t.changelog += GraftCatalogStore.CdcBatch(tombs.toArray, tombstone = true)
-        if (datas.nonEmpty)
-          t.changelog += GraftCatalogStore.CdcBatch(datas.toArray, tombstone = false)
-      }
+      Cdc.append(t.changelog,
+        Seq(KeyGroupedRegistry.LogBatch(tombs.toArray, tombstone = true),
+          KeyGroupedRegistry.LogBatch(datas.toArray, tombstone = false))
+          .filter(_.rows.nonEmpty): _*)
     } finally rl.unlock()
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
@@ -2640,90 +2632,6 @@ object GDeltaWriterFactory {
 }
 
 case class GRows(rows: Array[Array[Any]]) extends InputPartition
-
-/** CDC read of a catalog table (`<table>__cdc`): the commit changelog as a
-  * Structured Streaming micro-batch source — one micro-batch per commit,
-  * rows extended with `_commit_seq` (the commit's position) and
-  * `_tombstone` (a DELETE's marker batch). Offset = number of commits, so
-  * restart/replay is exact; consumers fold the log by (key, max seq), the
-  * same shape as the KV CDC stream. Read-only. */
-class GCdcTable(tname: String, t: GraftCatalogStore.T)
-    extends Table with SupportsRead {
-  override def name(): String = tname
-  override def schema(): StructType = GCdcTable.withSeq(t.schema)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = GCdcTable.withSeq(t.schema)
-        override def description(): String = s"$tname (cdc)"
-        override def toMicroBatchStream(checkpointLocation: String)
-            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-          new GCatMicroBatchStream(t)
-      }
-    }
-}
-
-object GCdcTable {
-  def withSeq(schema: StructType): StructType =
-    StructType(schema.fields ++ Array(
-      StructField("_commit_seq", LongType, nullable = false),
-      StructField("_tombstone", BooleanType, nullable = false)))
-}
-
-class GCatMicroBatchStream(t: GraftCatalogStore.T)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-  private def log = t.changelog
-  override def latestOffset(): Offset =
-    GCatOffset(log.synchronized(log.size.toLong))
-  override def initialOffset(): Offset = GCatOffset(0L)
-  override def deserializeOffset(json: String): Offset =
-    GCatOffset(json.toLong)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s0 = start.asInstanceOf[GCatOffset].seq.toInt
-    val e0 = end.asInstanceOf[GCatOffset].seq.toInt
-    log.synchronized {
-      (s0 until e0).map { i =>
-        val b = log(i)
-        GCdcPartition(i.toLong, b.tombstone, b.rows, t.schema): InputPartition
-      }.toArray
-    }
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GCdcReaderFactory
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-case class GCatOffset(seq: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = seq.toString
-}
-
-case class GCdcPartition(seq: Long, tombstone: Boolean,
-    rows: Array[Array[Any]], schema: StructType) extends InputPartition
-
-class GCdcReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[GCdcPartition]
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < part.rows.length }
-      override def get(): InternalRow = {
-        // rows may predate an ALTER ADD: pad to the CDC schema's base arity
-        val base = part.schema.fields.indices.map { j =>
-          val r = part.rows(i)
-          if (j < r.length) GValues.internal(part.schema.fields(j).dataType, r(j))
-          else null
-        }
-        InternalRow.fromSeq(base ++ IndexedSeq(part.seq, part.tombstone))
-      }
-      override def close(): Unit = ()
-    }
-  }
-}
 
 /** Internal↔external value conversion for the full SURVEY §1.2 type table:
   * every CQL type's Catalyst mapping round-trips through the store —
@@ -2779,18 +2687,23 @@ object GValues {
           .zip(st.fields).map { case (x, f) => internal(f.dataType, x) })
       case _ => v
     }
+
+  /** Stored row → internal cells by `schema`, for batch reads and the CDC
+    * stream. */
+  def cells(schema: StructType): Array[Any] => Array[Any] = {
+    val dts = schema.fields.map(_.dataType)
+    r => Array.tabulate[Any](math.min(r.length, dts.length))(j => internal(dts(j), r(j)))
+  }
 }
 
 class GReaderFactory(schema: StructType) extends PartitionReaderFactory {
+  private val cells = GValues.cells(schema)
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val rows = p.asInstanceOf[GRows].rows
     new PartitionReader[InternalRow] {
       private var i = -1
       override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(rows(i).toIndexedSeq.zip(schema.fields).map {
-          case (v, f) => GValues.internal(f.dataType, v)
-        })
+      override def get(): InternalRow = new GenericInternalRow(cells(rows(i)))
       override def close(): Unit = ()
     }
   }

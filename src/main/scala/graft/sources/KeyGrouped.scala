@@ -6,6 +6,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
@@ -15,7 +16,7 @@ import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartiti
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, Decimal, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -165,8 +166,9 @@ object KeyGroupedRegistry {
   }
 
   /** External (collect()) cell → the INTERNAL representation the reader
-    * serves: timestamps become epoch micros, dates epoch days — so a
-    * TIMESTAMP clustering column orders/slices as a plain long and the
+    * serves: timestamps become epoch micros, dates epoch days, decimals
+    * Spark `Decimal`s of the column's precision and scale — so a TIMESTAMP
+    * clustering column orders/slices as a plain long and the
     * PartitionReader can emit stored cells into InternalRows untouched. */
   private[sources] def toStoredCell(dt: DataType, v: Any): Any = {
     import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -176,6 +178,7 @@ object KeyGroupedRegistry {
       case (TimestampType, i: java.time.Instant) => DateTimeUtils.instantToMicros(i)
       case (DateType, d: java.sql.Date) => DateTimeUtils.fromJavaDate(d)
       case (DateType, d: java.time.LocalDate) => d.toEpochDay.toInt
+      case (dt: DecimalType, d: java.math.BigDecimal) => Decimal(d, dt.precision, dt.scale)
       // vector / collection cells (the CQL vector<float, n> shape the ANN
       // read serves): stored in internal ArrayData form so the reader emits
       // them untouched; elements converted recursively
@@ -262,14 +265,17 @@ object KeyGroupedRegistry {
     * rows as the next batch, every DELETE appends a TOMBSTONE batch
     * (key cells set, data cells null, flag true — exactly how Cassandra
     * deletes travel: as markers, not absences), and every ck-range DELETE
-    * appends a RANGE-TOMBSTONE batch (marker + bounds).
-    * `KVMicroBatchStream` serves these as micro-batches (offset = batch
-    * count); folding the log in commit order — latest mutation per primary
-    * key, tombstoned keys dropped, range-covered rows dropped — reproduces
-    * the table state (the invariant q_stream_kv_cdc and StreamingSpec
-    * assert). */
+    * appends a RANGE-TOMBSTONE batch (marker + bounds). Every commit
+    * enters the log through [[Cdc.append]] (the catalog's tables keep the
+    * same kind of log), and [[CdcStream]] serves it as micro-batches
+    * (offset = batch count); folding the log in commit order — latest
+    * mutation per primary key, tombstoned keys dropped, range-covered rows
+    * dropped — reproduces the table state (the invariant q_stream_kv_cdc
+    * and StreamingSpec assert). */
   val changelog = TrieMap.empty[String,
     scala.collection.mutable.ArrayBuffer[LogBatch]]
+  private def logOf(name: String) =
+    changelog.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty)
 
   private[sources] def supportedKeyType(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | StringType => true
@@ -473,8 +479,7 @@ object KeyGroupedRegistry {
         else acc.updated(k, acc.getOrElse(k, Map.empty) ++ upd)
       }
     put(name, e.copy(parts = parts, staticVals = statics))
-    changelog.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) +=
-      LogBatch(rows.map(_._2), tombstone = false)
+    Cdc.append(logOf(name), LogBatch(rows.map(_._2), tombstone = false))
   }
 
   /** DELETE-by-partition-key commit (CQL DELETE): drops whole partitions —
@@ -495,8 +500,7 @@ object KeyGroupedRegistry {
       kis.zip(k).foreach { case (i, v) => row(i) = v }
       row
     }
-    changelog.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) +=
-      LogBatch(tombstones, tombstone = true)
+    Cdc.append(logOf(name), LogBatch(tombstones, tombstone = true))
   }
 
   /** CQL ck-RANGE DELETE (`DELETE FROM t WHERE pk = ? AND ck >= ? AND
@@ -528,12 +532,11 @@ object KeyGroupedRegistry {
     val kis = e.keyCols.map(e.schema.fieldIndex)
     val lo = ckLo.getOrElse(Long.MinValue)
     val hi = ckHi.getOrElse(Long.MaxValue)
-    doomed.foreach { k =>
+    Cdc.append(logOf(name), doomed.map { k =>
       val row = Array.fill[Any](e.schema.length)(null)
       kis.zip(k).foreach { case (i, v) => row(i) = v }
-      changelog.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) +=
-        LogBatch(Array(row), tombstone = true, range = Some((lo, hi)))
-    }
+      LogBatch(Array(row), tombstone = true, range = Some((lo, hi)))
+    }: _*)
   }
 
   /** Tombstone GC — the compaction / gc_grace maintenance op that completes
@@ -584,8 +587,7 @@ object KeyGroupedRegistry {
       log.synchronized {
         val rest = log.drop(cut).toArray
         log.clear()
-        log += LogBatch(state.values.toArray, tombstone = false)
-        rest.foreach(log += _)
+        Cdc.append(log, LogBatch(state.values.toArray, tombstone = false) +: rest: _*)
       }
     }
     (before, log.map(_.rows.length.toLong).sum)
@@ -751,27 +753,26 @@ object KVRing {
 
 /** `spark.read.format("graft.sources.KVDataSource").option("table", name)`;
   * with `.option("cdc", "true")` on `readStream`, the table serves its
-  * commit changelog as a micro-batch stream instead of its current state
-  * (schema gains a `_commit_seq` column — the commit each mutation belongs
-  * to, the fold key for reconstructing state). */
+  * commit changelog as a micro-batch stream instead of its current state:
+  * the shared [[CdcTable]], whose schema gains `_commit_seq` (the commit
+  * each mutation belongs to, the fold key for reconstructing state) and
+  * `_tombstone`. */
 class KVDataSource extends TableProvider {
-  private def isCdc(options: util.Map[String, String]): Boolean =
-    java.lang.Boolean.parseBoolean(
-      Option(options.get("cdc")).getOrElse("false"))
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val entry = KeyGroupedRegistry.get(options.get("table"))
-    if (isCdc(options)) KVCdc.withSeq(entry.schema, entry.clusteringCols.nonEmpty)
-    else entry.schema
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    getTable(null, Array.empty, options).schema()
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val name = properties.get("table")
-    new KVTable(name, KeyGroupedRegistry.get(name), isCdc(properties))
+    val entry = KeyGroupedRegistry.get(name)
+    if (java.lang.Boolean.parseBoolean(properties.getOrDefault("cdc", "false")))
+      new CdcTable(s"graft-kv:$name (cdc)", entry.schema,
+        entry.clusteringCols.nonEmpty, () => KeyGroupedRegistry.changelog(name),
+        KVReaderFactory.cells)
+    else new KVTable(name, entry)
   }
 }
 
-class KVTable(tname: String, entry: KeyGroupedRegistry.Entry,
-    cdc: Boolean = false)
+class KVTable(tname: String, entry: KeyGroupedRegistry.Entry)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
@@ -784,8 +785,7 @@ class KVTable(tname: String, entry: KeyGroupedRegistry.Entry,
     * host owning that token. The Spark-native form of Cassandra's
     * token/ownership introspection. */
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (cdc) Array.empty
-    else Array(
+    Array(
       new org.apache.spark.sql.connector.catalog.MetadataColumn {
         override def name(): String = "_token"
         override def dataType(): org.apache.spark.sql.types.DataType = LongType
@@ -817,7 +817,7 @@ class KVTable(tname: String, entry: KeyGroupedRegistry.Entry,
       case _ => false
     })
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !cdc && filters.nonEmpty && {
+    filters.nonEmpty && {
       val keyPreds = filters.collect {
         case EqualTo(a, _) if entry.keyCols.contains(a) => a
         case In(a, _) if entry.keyCols.contains(a) => a
@@ -854,19 +854,14 @@ class KVTable(tname: String, entry: KeyGroupedRegistry.Entry,
       else KeyGroupedRegistry.applyDelete(tname, doomed)
     }
   }
-  override def name(): String = s"graft-kv:$tname" + (if (cdc) " (cdc)" else "")
-  override def schema(): StructType =
-    if (cdc) KVCdc.withSeq(entry.schema, entry.clusteringCols.nonEmpty)
-    else entry.schema
+  override def name(): String = s"graft-kv:$tname"
+  override def schema(): StructType = entry.schema
   override def capabilities(): util.Set[TableCapability] =
-    if (cdc) util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-    else util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
   override def partitioning(): Array[Transform] =
     entry.keyCols.map(Expressions.identity).toArray
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (cdc) new ScanBuilder {
-      override def build(): Scan = new KVCdcScan(tname, entry)
-    } else new KVScanBuilder(tname, entry,
+    new KVScanBuilder(tname, entry,
       Option(options.get("perPartitionLimit")).map(_.toInt),
       KVScan.AnnSpec.fromOptions(tname, entry, options),
       KVScan.ContainsSpec.fromOptions(tname, entry, options),
@@ -878,110 +873,11 @@ class KVTable(tname: String, entry: KeyGroupedRegistry.Entry,
         n
       })
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(!cdc, s"graft-kv:$tname: the CDC stream is read-only")
     val in = info.schema().fieldNames.toSeq
     val own = entry.schema.fieldNames.toSeq
     require(in == own,
       s"graft-kv:$tname write schema $in does not match table schema $own")
     new KVWriteBuilder(tname, entry)
-  }
-}
-
-/** KV CDC (SURVEY §2.4 / the connector stack's CDC analog): the registry
-  * keeps a per-table changelog — batch 0 is the staged snapshot, each
-  * upsert commit appends its rows — and this scan serves it as a Structured
-  * Streaming `MicroBatchStream`. The offset is simply the number of commits
-  * consumed, so Spark's checkpointed offset tracking gives exactly-once
-  * delivery of each commit across restarts (StreamingSpec kills and resumes
-  * the stream); every emitted row carries its `_commit_seq`, and folding by
-  * the highest seq per key reproduces the table's current state — the
-  * invariant q_stream_kv_cdc's oracle checks end-to-end. */
-object KVCdc {
-  val SeqCol = "_commit_seq"
-  val TombstoneCol = "_tombstone"
-  val CkLoCol = "_ck_lo"
-  val CkHiCol = "_ck_hi"
-  /** CDC schema: base + commit seq + tombstone flag; tables WITH a
-    * clustering column also carry the range-tombstone bounds columns
-    * (NULL on every non-range commit). */
-  def withSeq(base: StructType, hasCk: Boolean = false): StructType = {
-    val s0 = base.add(SeqCol, LongType, nullable = false)
-      .add(TombstoneCol, org.apache.spark.sql.types.BooleanType, nullable = false)
-    if (hasCk) s0.add(CkLoCol, LongType, nullable = true)
-      .add(CkHiCol, LongType, nullable = true)
-    else s0
-  }
-}
-
-class KVCdcScan(tname: String, entry: KeyGroupedRegistry.Entry) extends Scan {
-  override def readSchema(): StructType =
-    KVCdc.withSeq(entry.schema, entry.clusteringCols.nonEmpty)
-  override def description(): String = s"graft-kv-cdc:$tname"
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new KVMicroBatchStream(tname, entry.clusteringCols.nonEmpty)
-}
-
-case class KVOffset(seq: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = seq.toString
-}
-
-class KVMicroBatchStream(tname: String, hasCk: Boolean = false)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  private def log = KeyGroupedRegistry.changelog(tname)
-  override def latestOffset(): org.apache.spark.sql.connector.read.streaming.Offset =
-    KVOffset(log.synchronized(log.size.toLong))
-  override def initialOffset(): org.apache.spark.sql.connector.read.streaming.Offset =
-    KVOffset(0L)
-  override def deserializeOffset(json: String)
-      : org.apache.spark.sql.connector.read.streaming.Offset = KVOffset(json.toLong)
-  override def planInputPartitions(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      end: org.apache.spark.sql.connector.read.streaming.Offset): Array[InputPartition] = {
-    val s0 = start.asInstanceOf[KVOffset].seq.toInt
-    val e0 = end.asInstanceOf[KVOffset].seq.toInt
-    // one input partition per commit: its rows tagged with the commit seq,
-    // the tombstone flag (true = a DELETE's marker batch), and — for range
-    // tombstones — the [lo, hi) ck bounds. Read under the buffer's monitor
-    // so a concurrent changelog compaction can never be observed mid-swap.
-    log.synchronized {
-      (s0 until e0).map { i =>
-        val b = log(i)
-        KVCdcPartition(i.toLong, b.tombstone, b.rows, b.range, hasCk): InputPartition
-      }.toArray
-    }
-  }
-  override def createReaderFactory(): PartitionReaderFactory = new KVCdcReaderFactory
-  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-case class KVCdcPartition(seq: Long, tombstone: Boolean,
-    rows: Array[Array[Any]], range: Option[(Long, Long)] = None,
-    hasCk: Boolean = false) extends InputPartition
-
-class KVCdcReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[KVCdcPartition]
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < part.rows.length }
-      override def get(): InternalRow = {
-        val tail: IndexedSeq[Any] =
-          if (part.hasCk)
-            IndexedSeq(part.seq, part.tombstone,
-              part.range.map(_._1).map(Long.box).orNull,
-              part.range.map(_._2).map(Long.box).orNull)
-          else IndexedSeq(part.seq, part.tombstone)
-        InternalRow.fromSeq(
-          (part.rows(i).toIndexedSeq ++ tail).map {
-            case s: String => UTF8String.fromString(s)
-            case v => v
-          })
-      }
-      override def close(): Unit = ()
-    }
   }
 }
 
@@ -1065,7 +961,6 @@ class KVDataWriter(schema: StructType, keyIxs: Array[Int], ckIxs: Array[Int])
     val ext = Array.tabulate[Any](schema.length) { i =>
       r.get(i, schema.fields(i).dataType) match {
         case u: UTF8String => u.toString
-        case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
         case v => v
       }
     }
@@ -1731,8 +1626,10 @@ class KVScan(tname: String, entry: KeyGroupedRegistry.Entry,
       splitTargetRows.map(n => s" SplitTarget: [$n rows]").getOrElse("")
 
   /** Integral key cells compare by long value so boxing width never splits a
-    * key (a staged Int vs a filter's Long); strings compare by value. */
+    * key (a staged Int vs a filter's Long); a stored `Decimal` compares with
+    * a filter's `BigDecimal` by value; strings compare by value. */
   private def cellEq(stored: Any, v: Any): Boolean = (stored, v) match {
+    case (a: Decimal, b: java.math.BigDecimal) => a.toJavaBigDecimal.compareTo(b) == 0
     case (a: Number, b: Number) => a.longValue == b.longValue
     case (a, b) => a == b
   }
@@ -2556,12 +2453,17 @@ class KVReaderFactory extends PartitionReaderFactory {
     new PartitionReader[InternalRow] {
       private var i = -1
       override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(rows(i).toIndexedSeq.map {
-          case s: String => UTF8String.fromString(s)
-          case v => v
-        })
+      override def get(): InternalRow = new GenericInternalRow(KVReaderFactory.cells(rows(i)))
       override def close(): Unit = ()
     }
+  }
+}
+
+object KVReaderFactory {
+  /** Stored row → internal cells, for batch reads and the CDC stream:
+    * cells are stored in internal form except top-level strings. */
+  val cells: Array[Any] => Array[Any] = _.map {
+    case s: String => UTF8String.fromString(s)
+    case v => v
   }
 }

@@ -787,11 +787,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case other =>
         throw new UnsupportedOperationException(s"alterTable: $other")
     }
-    // migrate rows IN PLACE under the write lock (commits are excluded, so
-    // no concurrently-committed row can be lost or keep the old shape)
+    // migrate every stored copy of a row IN PLACE under the write lock
+    // (commits are excluded, so no concurrently-committed row can be lost
+    // or keep the old shape): each replica, the changelog, pending hints
+    // and snapshots all read cells by schema position
     val mig = migrations.reverse
-    t.rows.foreach { case (k, r) =>
-      t.rows.put(k, mig.foldLeft(r)((acc, f) => f(acc)))
+    val migrate = (r: Array[Any]) => mig.foldLeft(r)((acc, f) => f(acc))
+    t.allReplicas.foreach(st => st.foreach { case (k, r) => st.put(k, migrate(r)) })
+    t.changelog.synchronized {
+      t.changelog.mapInPlace(b => b.copy(rows = b.rows.map(migrate)))
+    }
+    t.synchronized(t.hints.mapInPlace { case (i, r) => (i, migrate(r)) })
+    t.snapshots.foreach { case (n, (rs, cells)) =>
+      t.snapshots.put(n, (rs.map { case (k, r) => k -> migrate(r) }, cells))
     }
     t.schema = schema
     } finally wl.unlock()

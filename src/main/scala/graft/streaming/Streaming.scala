@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
@@ -241,103 +242,74 @@ object Streaming {
     s"${sys.props("java.io.tmpdir")}/graft-stream/$tag-$safe"
   }
 
-  /** Stage `df` as `chunks` range-partitioned parquet files plus a sentinel
-    * file, with strictly increasing mod-times so the file stream source
-    * replays them deterministically in event-time order. */
-  private def stage(s: SparkSession, df: DataFrame, sentinel: Row, path: String,
-      chunks: Int = Chunks): Unit = {
-    df.repartitionByRange(chunks, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(path)
-    s.createDataFrame(s.sparkContext.parallelize(Seq(sentinel), 1), df.schema)
-      .write.mode("overwrite").parquet(path + ".sent")
-    val parts = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val base = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + 1000L * i) }
-    val sent = new java.io.File(path + ".sent").listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    val target = Paths.get(path, "zz-sentinel.snappy.parquet")
-    Files.move(sent.toPath, target, StandardCopyOption.REPLACE_EXISTING)
-    target.toFile.setLastModified(base + 1000L * (chunks + 10))
-  }
-
   /** Staged dirs already produced this session — queries without a `prep`
     * replay byte-identical data, so stage it once per sf-dir. */
   private val staged = scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
-  /** Open a deterministic replay stream of `events` (+ optional extra rows
-    * via `prep`) with one far-future sentinel event appended. */
+  /** Open a deterministic replay stream of `frame` plus one far-future
+    * sentinel row, `sentinel(max ts + 30 days)`. The first call per staged
+    * dir writes `frame` as `chunks` range-partitioned parquet files and the
+    * sentinel as one more file, with strictly increasing mod-times, so the
+    * file stream source replays them in event-time order; later calls reuse
+    * the files. FilesPerTrigger files per micro-batch: chunk ranges are
+    * disjoint and mod-time ordered, so event-time order across micro-batches
+    * holds (at the default 4: [c1..c4] [sentinel] — accumulation in batch 1,
+    * the sentinel's watermark flush in batch 2; see the FilesPerTrigger
+    * doc). */
+  private[streaming] def replay(s: SparkSession, dir: String, tag: String,
+      chunks: Int = Chunks)(frame: => DataFrame,
+      sentinel: java.sql.Timestamp => Row): DataFrame = {
+    val path = stageRoot(tag, dir)
+    val schema = staged.getOrElseUpdate(path, {
+      val df = frame
+      val maxTs = df.agg(max("ts")).head().getTimestamp(0)
+      val sent = sentinel(new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000))
+      df.repartitionByRange(chunks, col("ts")).sortWithinPartitions("ts")
+        .write.mode("overwrite").parquet(path)
+      s.createDataFrame(s.sparkContext.parallelize(Seq(sent), 1), df.schema)
+        .write.mode("overwrite").parquet(path + ".sent")
+      val parts = new java.io.File(path).listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      val base = System.currentTimeMillis()
+      parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + 1000L * i) }
+      val sentFile = new java.io.File(path + ".sent").listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      val target = Paths.get(path, "zz-sentinel.snappy.parquet")
+      Files.move(sentFile.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+      target.toFile.setLastModified(base + 1000L * (chunks + 10))
+      df.schema
+    })
+    s.readStream.schema(schema).option("maxFilesPerTrigger", FilesPerTrigger).parquet(path)
+  }
+
+  /** Replay of `events` (+ optional extra rows via `prep`). */
   private def eventStream(s: SparkSession, dir: String, tag: String,
       prep: DataFrame => DataFrame = identity,
-      chunks: Int = Chunks): DataFrame = {
-    val path = stageRoot(tag, dir)
-    val schema = staged.getOrElseUpdate(path, {
-      val ev = prep(Tables.load(s, dir, "events"))
-      val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
-      stage(s, ev, Row(-1L, sentTs, -1L, "__sentinel", 0.0, "{}"), path, chunks)
-      ev.schema
-    })
-    // FilesPerTrigger files per micro-batch: chunk ranges are disjoint and
-    // mod-time ordered, so event-time order across micro-batches holds (at
-    // the default 4: [c1..c4] [sentinel] — accumulation in batch 1, the
-    // sentinel's watermark flush in batch 2; see the FilesPerTrigger doc).
-    s.readStream.schema(schema).option("maxFilesPerTrigger", FilesPerTrigger).parquet(path)
-  }
+      chunks: Int = Chunks): DataFrame =
+    replay(s, dir, tag, chunks)(prep(Tables.load(s, dir, "events")),
+      ts => Row(-1L, ts, -1L, "__sentinel", 0.0, "{}"))
 
-  /** Deterministic replay stream of `documents` with a synthetic event time
-    * (base + doc_id seconds — the ingestion-order clock a crawler feed
-    * carries) plus the far-future sentinel doc. Same chunking/mod-time
-    * discipline as [[eventStream]]. */
+  /** Replay of `documents` with a synthetic event time (base + doc_id
+    * seconds — the ingestion-order clock a crawler feed carries). */
   private def docStream(s: SparkSession, dir: String, tag: String,
-      prep: DataFrame => DataFrame = identity): DataFrame = {
-    val path = stageRoot(tag, dir)
-    val schema = staged.getOrElseUpdate(path, {
-      val d = prep(Tables.load(s, dir, "documents").withColumn("ts", expr(
-        "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, doc_id)")))
-      val maxTs = d.agg(max("ts")).head().getTimestamp(0)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
-      stage(s, d, Row(-1L, "", "__sentinel", "", 0L, sentTs), path)
-      d.schema
-    })
-    s.readStream.schema(schema).option("maxFilesPerTrigger", FilesPerTrigger).parquet(path)
-  }
+      prep: DataFrame => DataFrame = identity): DataFrame =
+    replay(s, dir, tag)(prep(Tables.load(s, dir, "documents").withColumn("ts", expr(
+        "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, doc_id)"))),
+      ts => Row(-1L, "", "__sentinel", "", 0L, ts))
 
-  /** Deterministic replay stream of DIRTY customer records (q_entity_match's
-    * perturbation: name suffix reversed) with a synthetic arrival clock
-    * (base + custkey seconds) plus the far-future sentinel record. Same
-    * chunking/mod-time discipline as [[eventStream]] — the ingest feed an
-    * online entity-resolution service sees. */
-  private def dirtyCustStream(s: SparkSession, dir: String, tag: String): DataFrame = {
-    val path = stageRoot(tag, dir)
-    val schema = staged.getOrElseUpdate(path, {
-      val d = Tables.load(s, dir, "customer").select(
-          col("c_custkey").as("dirty_key"),
-          concat(lit("Customer#"), reverse(substring(col("c_name"), 10, 9)))
-            .as("dirty_name"),
-          col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"))
-        .withColumn("ts", expr(
-          "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, dirty_key)"))
-      val maxTs = d.agg(max("ts")).head().getTimestamp(0)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)
-      stage(s, d, Row(-1L, "__sentinel", -1, "", sentTs), path)
-      d.schema
-    })
-    s.readStream.schema(schema).option("maxFilesPerTrigger", FilesPerTrigger).parquet(path)
-  }
+  /** Replay of DIRTY customer records (q_entity_match's perturbation: name
+    * suffix reversed) with a synthetic arrival clock (base + custkey
+    * seconds) — the ingest feed an online entity-resolution service sees. */
+  private def dirtyCustStream(s: SparkSession, dir: String, tag: String): DataFrame =
+    replay(s, dir, tag)(Tables.load(s, dir, "customer").select(
+        col("c_custkey").as("dirty_key"),
+        concat(lit("Customer#"), reverse(substring(col("c_name"), 10, 9)))
+          .as("dirty_name"),
+        col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"))
+      .withColumn("ts", expr(
+        "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, dirty_key)")),
+      ts => Row(-1L, "__sentinel", -1, "", ts))
 
-  /** Run `out` to completion into an append-mode memory sink and return the
-    * finished table. The final watermark-driven eviction happens in a
-    * no-data micro-batch that can land just after processAllAvailable
-    * returns, so wait until the sink row count is stable.
-    *
-    * State-store partitioning is pinned to 8 for the query's lifetime: each
-    * micro-batch commits one state file per shuffle partition, and at this
-    * data volume 32 partitions are pure commit overhead. (On a real cluster
-    * this knob is sized to state volume, not cores.) */
-  /** Run `body` with streaming-tuned session conf, restoring BOTH touched
-    * keys afterwards so nothing leaks to later batch queries on the same
-    * session. */
   // State-store provider is a state-size decision: at this volume (KBs per
   // partition) the HDFS-backed in-memory provider beats RocksDB, whose JNI +
   // checkpoint-file overhead only pays off once state outgrows the executor
@@ -356,33 +328,25 @@ object Streaming {
   // state volume, never to cores; here 8, 4 and 2 measured the same.
   private val StreamShuffle = "8"
 
-  private def withStreamConf[T](s: SparkSession,
-      provider: String = HdfsProvider)(body: => T): T = {
-    val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val oldProvider = s.conf.get("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShuffle)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", oldProvider)
-    }
+  /** Longest a run-to-end stream may take before it counts as hung (ms). */
+  private val EndBound = 600000L
+
+  /** Parent dir of every [[freshCkpt]], on tmpfs when the host has one.
+    * Every trigger pays offset-WAL + commit-log + per-partition state-commit
+    * file I/O under a checkpoint; for a drained ephemeral query that
+    * durability buys nothing (the dir is deleted as soon as the query ends),
+    * so RAM-backed /dev/shm is the right medium on the bench host. A
+    * PRODUCTION stream points this at durable storage — which is why it is a
+    * per-query location, not a session conf. */
+  private[streaming] val CkptRoot: String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-ckpt"
+    else sys.props("java.io.tmpdir") + "/graft-ckpt"
   }
 
-  /** Fresh, UNIQUE checkpoint dir for one run-to-completion query, on tmpfs
-    * when the host has one. Every trigger pays offset-WAL + commit-log +
-    * per-partition state-commit file I/O under this dir; for a drained
-    * ephemeral query that durability buys nothing (the dir is deleted in the
-    * same call), so RAM-backed /dev/shm is the right medium on the bench
-    * host. A PRODUCTION stream points this at durable storage — which is why
-    * it is a per-query location, not a session conf. The nanoTime suffix
-    * guarantees no run can ever resume a previous run's offsets. */
-  private[streaming] def freshCkpt(tag: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-ckpt"
-      else sys.props("java.io.tmpdir") + "/graft-ckpt"
-    s"$base/$tag-${System.nanoTime()}"
-  }
+  /** Fresh, UNIQUE checkpoint dir for one run-to-end query: the nanoTime
+    * name guarantees no run can ever resume a previous run's offsets. */
+  private[streaming] def freshCkpt(): String = s"$CkptRoot/${System.nanoTime()}"
 
   private[streaming] def dropCkpt(path: String): Unit =
     try {
@@ -400,21 +364,47 @@ object Streaming {
         System.err.println(s"[stream] checkpoint delete failed for $path: $e")
     }
 
+  /** Start `w` under `Trigger.AvailableNow` and return the query once it
+    * has ended on its own (its progress stays readable). The trigger
+    * snapshots the source's offsets at start, runs them in rate-limited
+    * micro-batches, and ends the query only when no further batch — the
+    * sentinel's trailing no-data watermark batch included — needs to run,
+    * so every watermark flush has landed in the sink on return. A failed
+    * batch surfaces here as the query's error.
+    *
+    * The query runs with its shuffle/state partitions pinned to
+    * [[StreamShuffle]] and its state-store `provider`; both session keys are
+    * restored afterwards so nothing leaks to later batch queries. It
+    * checkpoints to `ckpt` when given (the caller reads it afterwards and
+    * owns it), else to a [[freshCkpt]] dropped on return. `table` starts
+    * the query with `toTable` instead of `start`. */
+  private[streaming] def runToEnd(s: SparkSession, w: DataStreamWriter[_],
+      provider: String = HdfsProvider, ckpt: Option[String] = None,
+      table: Option[String] = None): StreamingQuery = {
+    val dir = ckpt.getOrElse(freshCkpt())
+    val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    val oldProvider = s.conf.get("spark.sql.streaming.stateStore.providerClass")
+    s.conf.set("spark.sql.shuffle.partitions", StreamShuffle)
+    s.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    try {
+      w.trigger(Trigger.AvailableNow()).option("checkpointLocation", dir)
+      val q = table.fold(w.start())(w.toTable)
+      try require(q.awaitTermination(EndBound), s"stream did not end within $EndBound ms")
+      finally q.stop()
+      q
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
+      s.conf.set("spark.sql.streaming.stateStore.providerClass", oldProvider)
+      if (ckpt.isEmpty) dropCkpt(dir)
+    }
+  }
+
+  /** Run `out` to its end into a memory sink and return the finished table. */
   private def runToMemory(out: DataFrame, name: String,
       mode: String = "append", provider: String = HdfsProvider): DataFrame = {
-    val s = out.sparkSession
-    withStreamConf(s, provider) {
-      val ckpt = freshCkpt(name)
-      val q = out.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt).start()
-      // coalesce(1): the memory sink parallelizes its local rows to
-      // defaultParallelism, so a bare count() is a 32-task two-stage job
-      // PER POLL (measured: 3 such stages ≈ 0.3 s each per stream query);
-      // the drain only needs the scalar
-      try drainStable(q, s.table(name).coalesce(1).count())
-      finally { q.stop(); dropCkpt(ckpt) }
-    }
-    s.table(name)
+    runToEnd(out.sparkSession,
+      out.writeStream.format("memory").queryName(name).outputMode(mode), provider)
+    out.sparkSession.table(name)
   }
 
   private def moneySum(c: String): org.apache.spark.sql.Column =
@@ -436,19 +426,16 @@ object Streaming {
     * in-horizon working set a provisioned state store must actually hold
     * (the latest snapshot is always ~1 row and measures nothing). */
   def stateProbe(s: SparkSession, dir: String): Map[String, Long] = {
-    val aggCkpt = stageRoot("scaleprobe-agg", dir) + "-" + System.nanoTime()
     val agg = eventStream(s, dir, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"))
-    val aggRows = withStreamConf(s) {
-      val q = agg.writeStream.format("memory")
-        .queryName("graft_scaleprobe_agg").outputMode("update")
-        .option("checkpointLocation", aggCkpt).start()
-      try drainStable(q, s.table("graft_scaleprobe_agg").count())
-      finally q.stop()
-      s.read.format("statestore").load(aggCkpt).count()
-    }
-    val dedupCkpt = stageRoot("scaleprobe-dedup", dir) + "-" + System.nanoTime()
+    val aggCkpt = freshCkpt()
+    val aggRows =
+      try {
+        runToEnd(s, agg.writeStream.format("memory")
+          .queryName("graft_scaleprobe_agg").outputMode("update"), ckpt = Some(aggCkpt))
+        s.read.format("statestore").load(aggCkpt).count()
+      } finally dropCkpt(aggCkpt)
     // The dedup probe stages its OWN replay with a chunk count that grows
     // with the tier's event-time span (~4 chunks per base month, capped):
     // the watermark only advances between micro-batches, so with a fixed
@@ -471,45 +458,25 @@ object Streaming {
     val ded = eventStream(s, dir, "probe-dedup", chunks = probeChunks)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val dedupRows = withStreamConf(s) {
-      val q = ded.writeStream.format("memory")
-        .queryName("graft_scaleprobe_dedup").outputMode("append")
-        .option("checkpointLocation", dedupCkpt).start()
-      try drainStable(q, s.table("graft_scaleprobe_dedup").count())
-      finally q.stop()
-      // peak over batch snapshots, NOT the latest (see Scaladoc above)
-      val batches = Option(new java.io.File(dedupCkpt + "/commits").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-      require(batches.nonEmpty, s"no committed batches under $dedupCkpt")
-      batches.map(b => s.read.format("statestore")
-        .option("batchId", b).load(dedupCkpt).count()).max
-    }
+    val dedupCkpt = freshCkpt()
+    val dedupRows =
+      try {
+        runToEnd(s, ded.writeStream.format("memory")
+          .queryName("graft_scaleprobe_dedup").outputMode("append"), ckpt = Some(dedupCkpt))
+        // peak over batch snapshots, NOT the latest (see Scaladoc above)
+        val batches = Option(new java.io.File(dedupCkpt + "/commits").listFiles())
+          .getOrElse(Array.empty[java.io.File])
+          .map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+        require(batches.nonEmpty, s"no committed batches under $dedupCkpt")
+        batches.map(b => s.read.format("statestore")
+          .option("batchId", b).load(dedupCkpt).count()).max
+      } finally dropCkpt(dedupCkpt)
     val ev = Tables.load(s, dir, "events")
     Map(
       "agg_state_rows" -> aggRows,
       "distinct_users" -> ev.select("user_id").distinct().count(),
       "dedup_state_rows" -> dedupRows,
       "distinct_events" -> ev.select("event_id").distinct().count())
-  }
-
-  /** Drive a started query to completion: processAllAvailable, then poll
-    * `size` until it is stable twice (the final watermark-driven eviction
-    * lands in a no-data micro-batch that can trail processAllAvailable);
-    * fails loudly rather than returning a still-flushing sink. */
-  private def drainStable(q: org.apache.spark.sql.streaming.StreamingQuery,
-      size: => Long): Unit = {
-    q.processAllAvailable()
-    var last = -1L
-    var stable = 0
-    var rounds = 0
-    while (stable < 2 && rounds < 40) {
-      val c = size
-      if (c == last) stable += 1 else { stable = 0; last = c }
-      rounds += 1
-      if (stable < 2) { Thread.sleep(15); q.processAllAvailable() }
-    }
-    require(stable >= 2, s"sink did not stabilize after $rounds rounds")
   }
 
   // ---------------------------------------------------------------- queries
@@ -591,33 +558,22 @@ object Streaming {
         .orderBy("w_start")
     },
 
-    // Backfill trigger (Trigger.AvailableNow): process the whole backlog in
-    // rate-limited micro-batches, then STOP on our own — the reference's
-    // run-to-completion `kind: Job` shape (reference: userdata/cloudinit.sh:
-    // 445-470) expressed in streaming form, and the production pattern for
-    // "catch the stream up, then hand back the cluster". Unlike
-    // processAllAvailable (a test/driver-side wait), AvailableNow snapshots
-    // the available offsets at start and the query terminates itself when
-    // they are consumed — including the trailing no-data batch that lets the
-    // sentinel-advanced watermark flush every real window from state. Same
-    // tumbling aggregation as q_stream_tumbling, so any divergence between
-    // the trigger modes would show up as an oracle mismatch.
+    // Backfill: process the whole backlog in rate-limited micro-batches,
+    // then STOP on its own — the reference's run-to-completion `kind: Job`
+    // shape (reference: userdata/cloudinit.sh: 445-470) expressed in
+    // streaming form, and the production pattern for "catch the stream up,
+    // then hand back the cluster". Every streaming query here now ends this
+    // way (runToEnd's Trigger.AvailableNow); this one stays as the named
+    // case StreamingSpec's self-termination test runs, over the same
+    // tumbling aggregation as q_stream_tumbling.
     "q_stream_backfill" -> { (s, dir) =>
-      import org.apache.spark.sql.streaming.Trigger
       val agg = eventStream(s, dir, "events")
         .withWatermark("ts", "30 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), moneySum("value").as("sum_value"))
         .select(col("window.start").as("w_start"), col("event_type"),
           col("n"), col("sum_value"))
-      withStreamConf(s) {
-        val q = agg.writeStream.format("memory").queryName("graft_stream_backfill")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try require(q.awaitTermination(180000),
-          "AvailableNow backfill did not self-terminate")
-        finally q.stop()
-      }
-      s.table("graft_stream_backfill")
+      runToMemory(agg, "graft_stream_backfill")
         .filter(col("event_type") =!= "__sentinel")
         .orderBy("w_start", "event_type")
     },
@@ -777,20 +733,17 @@ object Streaming {
     // positionally (they follow the agg declaration order) — the reader
     // names them after the aggregate FUNCTION, not the alias.
     "q_stream_state_reader" -> { (s, dir) =>
+      // the returned frame reads the checkpoint lazily, after this returns,
+      // so the dir is kept (under the staging root, not the tmpfs one)
       val ckpt = stageRoot("stateckpt", dir) + "-" + System.nanoTime()
       val agg = eventStream(s, dir, "events")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"),
           sum((col("value").cast(DecimalType(12, 2)) * 100).cast("long"))
             .as("sum_cents"))
-      val st = withStreamConf(s) {
-        val q = agg.writeStream.format("memory")
-          .queryName("graft_stream_state_src").outputMode("update")
-          .option("checkpointLocation", ckpt).start()
-        try drainStable(q, s.table("graft_stream_state_src").coalesce(1).count())
-        finally q.stop()
-        s.read.format("statestore").load(ckpt)
-      }
+      runToEnd(s, agg.writeStream.format("memory")
+        .queryName("graft_stream_state_src").outputMode("update"), ckpt = Some(ckpt))
+      val st = s.read.format("statestore").load(ckpt)
       val vcols = st.select(col("value.*")).columns
       st.select(col("key.user_id").as("user_id"),
           col(s"value.${vcols(0)}").as("n_events"),
@@ -908,14 +861,8 @@ object Streaming {
       val agg = eventStream(s, dir, "events")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), moneySum("value").as("sum_value"))
-      // complete-mode state commits dominate this query's cost, so it runs
-      // under the same pinned shuffle/state partitioning as runToMemory
-      withStreamConf(s) {
-        val q = agg.writeStream.outputMode("complete")
-          .foreachBatch { (batch: DataFrame, _: Long) => acc.set(batch.collect()) }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      runToEnd(s, agg.writeStream.outputMode("complete")
+        .foreachBatch { (batch: DataFrame, _: Long) => acc.set(batch.collect()) })
       s.createDataFrame(java.util.Arrays.asList(acc.get(): _*), agg.schema)
         .filter(col("event_type") =!= "__sentinel")
         .orderBy("event_type")
@@ -940,13 +887,10 @@ object Streaming {
         .agg(count(lit(1)).as("n"), moneySum("value").as("sum_value"))
         .select(col("window.start").as("w_start"), col("event_type"),
           col("n"), col("sum_value"))
-      withStreamConf(s) {
-        val q = agg.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            store.applyBatch(batchId, batch.collect(), Seq(0, 1))
-          }.start()
-        try drainStable(q, store.size) finally q.stop()
-      }
+      runToEnd(s, agg.writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          store.applyBatch(batchId, batch.collect(), Seq(0, 1))
+        })
       s.createDataFrame(java.util.Arrays.asList(store.rows: _*), agg.schema)
         .filter(col("event_type") =!= "__sentinel")
         .orderBy("w_start", "event_type")
@@ -1020,12 +964,10 @@ object Streaming {
     // and eviction runs in the batch AFTER the one that advanced it — so
     // the flush needs 1-2 trailing no-data micro-batches (each a full
     // state pass over 4 join stores x 8 partitions) that the inner join,
-    // which emits matches eagerly, never schedules, plus the extra
-    // drainStable stabilization cycle that can only observe the sink
-    // AFTER those batches commit. On a real cluster this floor is a
-    // per-TRIGGER constant amortized over the trigger interval, not a
-    // per-row cost — it does not scale with data volume (the streaming
-    // scale probe pins exactly this).
+    // which emits matches eagerly, never schedules. On a real cluster this
+    // floor is a per-TRIGGER constant amortized over the trigger interval,
+    // not a per-row cost — it does not scale with data volume (the
+    // streaming scale probe pins exactly this).
     "q_stream_left_join" -> { (s, dir) =>
       val base = eventStream(s, dir, "events").withWatermark("ts", "30 minutes")
       // The sentinel must survive the branch filters: Catalyst legally
@@ -1093,12 +1035,11 @@ object Streaming {
     // sink's _spark_metadata log, so readers only ever see committed files
     // and a crashed batch is re-run, not double-written. At 100 TB this is
     // THE production sink shape (files + log = atomically visible output).
-    // The checkpoint is deleted up front: the sink's exactly-once contract
-    // is tied to it, and a stale one would make a re-run a no-op.
+    // The output dir is deleted up front: the sink's _spark_metadata log
+    // lives in it, and a stale log would make a re-run's batches no-ops.
     "q_stream_sink_files" -> { (s, dir) =>
-      val root = stageRoot("sink-out", dir)
-      val outPath = s"$root/out"
-      val hp = new org.apache.hadoop.fs.Path(root)
+      val outPath = stageRoot("sink-out", dir) + "/out"
+      val hp = new org.apache.hadoop.fs.Path(outPath)
       hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val agg = eventStream(s, dir, "events")
         .withWatermark("ts", "30 minutes")
@@ -1106,15 +1047,10 @@ object Streaming {
         .agg(count(lit(1)).as("n"), moneySum("value").as("sum_value"))
         .select(col("window.start").as("w_start"), col("event_type"),
           col("n"), col("sum_value"))
-      withStreamConf(s) {
-        val q = agg.writeStream.format("parquet")
-          .option("path", outPath)
-          .option("checkpointLocation", s"$root/chk")
-          .outputMode("append").start()
-        // reading the sink dir goes through its metadata log -> only
-        // committed files are counted, even while the query runs
-        try drainStable(q, s.read.parquet(outPath).count()) finally q.stop()
-      }
+      runToEnd(s, agg.writeStream.format("parquet").option("path", outPath)
+        .outputMode("append"))
+      // reading the sink dir goes through its metadata log: only committed
+      // files are read
       s.read.parquet(outPath)
         .filter(col("event_type") =!= "__sentinel")
         .orderBy("w_start", "event_type")
@@ -1167,14 +1103,11 @@ object Streaming {
           "array_contains(toks, q.term_a) AND array_contains(toks, q.term_b)"))
         .select(col("doc_id"), col("q.qid").as("qid"))
       val acc = scala.collection.concurrent.TrieMap.empty[Long, Map[Long, Long]]
-      withStreamConf(s) {
-        val q = matches.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            acc(batchId) = batch.groupBy("qid").count()
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      runToEnd(s, matches.writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          acc(batchId) = batch.groupBy("qid").count()
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        })
       val totals = acc.values.flatten.groupBy(_._1)
         .map { case (k, vs) => k -> vs.map(_._2).sum }
       val rows: Seq[Row] = qs.toSeq.map { case (qid, a, b) =>
@@ -1218,13 +1151,8 @@ object Streaming {
         .agg(count(lit(1)).as("n"))
       val acc = new java.util.concurrent.atomic.AtomicReference[Array[Row]](
         Array.empty)
-      withStreamConf(s) {
-        val q = cells.writeStream.outputMode("complete")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            acc.set(batch.collect())
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      runToEnd(s, cells.writeStream.outputMode("complete")
+        .foreachBatch { (batch: DataFrame, _: Long) => acc.set(batch.collect()) })
       val sketch = s.createDataFrame(
         java.util.Arrays.asList(acc.get(): _*), StructType(Seq(
           StructField("d", LongType), StructField("c", LongType),
@@ -1507,28 +1435,25 @@ object Streaming {
           round(expr("graft_jaro_winkler(dirty_name, clean_name)"), 6)
             .cast("decimal(8,6)"))
       val acc = scala.collection.concurrent.TrieMap.empty[Long, Array[Row]]
-      withStreamConf(s) {
-        val q = matches.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // lexicographic struct max ≡ (jw DESC, clean_key ASC) — the
-            // q_entity_match tiebreak, evaluated per batch, then reduced
-            // to the per-nation partial BEFORE leaving the executors:
-            // ≤ |nations| rows reach the driver per batch
-            acc(batchId) = batch.groupBy("nk", "dirty_key")
-              .agg(max(struct(col("jw"), (lit(0L) - col("clean_key"))
-                .as("neg_key"))).as("best"))
-              .select(col("nk"), col("dirty_key"),
-                (lit(0L) - col("best.neg_key")).as("clean_key"),
-                col("best.jw").as("jw"))
-              .groupBy("nk")
-              .agg(count(lit(1)).as("n"),
-                sum(when(col("clean_key") === col("dirty_key"), 1L)
-                  .otherwise(0L)).as("n_correct"),
-                sum(col("jw")).cast(DecimalType(18, 6)).as("sjw"))
-              .collect()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      runToEnd(s, matches.writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // lexicographic struct max ≡ (jw DESC, clean_key ASC) — the
+          // q_entity_match tiebreak, evaluated per batch, then reduced
+          // to the per-nation partial BEFORE leaving the executors:
+          // ≤ |nations| rows reach the driver per batch
+          acc(batchId) = batch.groupBy("nk", "dirty_key")
+            .agg(max(struct(col("jw"), (lit(0L) - col("clean_key"))
+              .as("neg_key"))).as("best"))
+            .select(col("nk"), col("dirty_key"),
+              (lit(0L) - col("best.neg_key")).as("clean_key"),
+              col("best.jw").as("jw"))
+            .groupBy("nk")
+            .agg(count(lit(1)).as("n"),
+              sum(when(col("clean_key") === col("dirty_key"), 1L)
+                .otherwise(0L)).as("n_correct"),
+              sum(col("jw")).cast(DecimalType(18, 6)).as("sjw"))
+            .collect()
+        })
       val rows: Seq[Row] = acc.values.flatten.toSeq
       val partials = s.createDataFrame(
         java.util.Arrays.asList(rows: _*), StructType(Seq(
@@ -1859,13 +1784,7 @@ object Streaming {
         .filter(col("event_type") =!= "__sentinel")
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"))
-      withStreamConf(s) {
-        val ck = s"${sys.props("java.io.tmpdir")}/graft-stream/" +
-          s"ckpt-kvsink-${System.nanoTime()}"
-        val q = in.writeStream.option("checkpointLocation", ck)
-          .outputMode("append").toTable(fqn)
-        try drainStable(q, s.table(fqn).coalesce(1).count()) finally q.stop()
-      }
+      runToEnd(s, in.writeStream.outputMode("append"), table = Some(fqn))
       s.table(fqn).orderBy("user_id")
     })
 

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.KeyGroupedRegistry
 
 /** The one CDC stream behind both stores (`sources/Cdc.scala`): decimal
-  * cells on the KV source, catalog rows written before an ALTER ADD, and
-  * commits landing while a stream is consuming the log. */
+  * cells on the KV source, catalog rows written before an ALTER ADD or
+  * DROP, and commits landing while a stream is consuming the log. */
 class CdcSpec extends AnyFunSuite with SparkFixture {
 
   private def streamAll(in: DataFrame, qname: String): DataFrame = {
@@ -92,6 +92,38 @@ class CdcSpec extends AnyFunSuite with SparkFixture {
     val folded = fold(log, "k").collect().toSet
     assert(folded == spark.table(fqn).collect().toSet)
     assert(folded.size == 5)
+  }
+
+  test("catalog __cdc after an ALTER DROP serves each column's own cells") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.cdcks")
+    val fqn = "graftcat.cdcks.alter_drop"
+    spark.sql(s"DROP TABLE IF EXISTS $fqn")
+    spark.sql(s"CREATE TABLE $fqn (k BIGINT, a STRING, b STRING) TBLPROPERTIES ('key'='k')")
+    spark.sql("SELECT 1L AS k, 'a1' AS a, 'b1' AS b").writeTo(fqn).append()
+    spark.sql(s"ALTER TABLE $fqn DROP COLUMN a")
+    val log = streamAll(spark.readStream.table(s"${fqn}__cdc"), "cdc_alter_drop")
+    assert(log.columns.toSeq == Seq("k", "b", "_commit_seq", "_tombstone"))
+    assert(log.select("k", "b").collect().toSeq == Seq(Row(1L, "b1")))
+    assert(fold(log, "k").collect().toSet == spark.table(fqn).collect().toSet)
+  }
+
+  test("an ALTER DROP on a replicated table migrates every replica") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.cdcks")
+    val fqn = "graftcat.cdcks.alter_drop_rf"
+    spark.sql(s"DROP TABLE IF EXISTS $fqn")
+    spark.sql(s"CREATE TABLE $fqn (id INT, a STRING, v BIGINT, wt BIGINT) " +
+      "TBLPROPERTIES ('key'='id', 'writetime'='wt', 'rf'='2')")
+    // v above wt: a merge that read an unmigrated replica's cell at the new
+    // writetime index would pick that replica's stale-shaped row
+    spark.sql("SELECT * FROM VALUES (1, 'x', 500L, 100L), (2, 'y', 20L, 100L) " +
+      "AS t(id, a, v, wt)").writeTo(fqn).append()
+    spark.sql(s"ALTER TABLE $fqn DROP COLUMN a")
+    def read(cl: String): Set[Row] = spark.read.option("cl", cl).table(fqn).collect().toSet
+    val one = read("one")
+    assert(one == Set(Row(1, 500L, 100L), Row(2, 20L, 100L)), one)
+    assert(read("quorum") == one)
   }
 
   test("commits landing under a running KV stream arrive once each, in order") {

@@ -138,6 +138,8 @@ object Natives {
     ("graft_spanhash8", classOf[SpanHash8].getName, exprs => SpanHash8(exprs.head)),
     ("graft_jaro_winkler", classOf[JaroWinkler].getName,
       exprs => JaroWinkler(exprs(0), exprs(1))),
+    ("graft_md5_32", classOf[Md5Hash32].getName, exprs => Md5Hash32(exprs.head)),
+    ("graft_hll64", classOf[Hll64].getName, exprs => Hll64(exprs.head)),
     // Spark's own runtime-filter sketch pair, surfaced as session functions
     // for the incremental-dedup operator (q_dedup_incremental): a
     // distributed, mergeable Bloom build over xxhash64 fingerprints and its

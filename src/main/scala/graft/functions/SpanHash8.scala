@@ -10,9 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * substring dedup (Lee et al.): `graft_spanhash8(array<string>) ->
   * array<bigint>` — element i is the polynomial hash of tokens i..i+7,
   *   h = fold(x_1..x_8, (acc, x) -> (acc·1000003 + x) mod 2147483647)
-  * over per-token 32-bit hashes x = first 4 md5 bytes as an unsigned
-  * big-endian int (byte-identical to the portable
-  * `conv(substring(md5(t),1,8),16,10)` every oracle replays).
+  * over per-token 32-bit hashes x = [[Md5_32.hash32]] (byte-identical to
+  * the portable `conv(substring(md5(t),1,8),16,10)` every oracle replays).
   *
   * Why native (operator-preference tier (b)): the HOF formulation is TWO
   * interpreted lambda passes per doc — `transform(w, wd -> md5-hash)` and a
@@ -54,20 +53,6 @@ case class SpanHash8(child: Expression) extends UnaryExpression {
 }
 
 object SpanHash8 {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** First 4 md5 bytes as an unsigned 32-bit big-endian value — exactly
-    * `conv(substring(md5(s),1,8),16,10)`. */
-  def hash32(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val d = md.get(); d.reset()
-    val b = d.digest(s.getBytes)
-    ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) |
-      ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
-  }
-
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n < 8) return new GenericArrayData(Array.emptyLongArray)
@@ -76,7 +61,7 @@ object SpanHash8 {
     while (i < n) {
       val u = arr.getUTF8String(i)
       if (u == null) return null // null element -> null result (see Scaladoc)
-      th(i) = hash32(u); i += 1
+      th(i) = Md5_32.hash32(u.getBytes); i += 1
     }
     val out = new Array[Long](n - 7)
     var s = 0

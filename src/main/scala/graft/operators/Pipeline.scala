@@ -96,10 +96,10 @@ object Pipeline {
   private def docsPar(s: SparkSession, dir: String): DataFrame =
     Tables.spread(docs(s, dir))
 
-  /** Portable 32-bit string hash, Spark side. DuckDB side:
-    * `('0x'||substr(md5(s),1,8))::BIGINT`. */
-  private[graft] def hExpr(s: String): String =
-    s"cast(conv(substring(md5($s),1,8),16,10) as bigint)"
+  /** Portable 32-bit string hash, Spark side: the native `graft_md5_32`,
+    * equal to `cast(conv(substring(md5(s),1,8),16,10) as bigint)`. DuckDB
+    * side: `('0x'||substr(md5(s),1,8))::BIGINT`. */
+  private[graft] def hExpr(s: String): String = s"graft_md5_32($s)"
 
   /** Gumbel/A-Res weighted top-k panel, parameterized by `seed` so callers
     * can draw INDEPENDENT reproducible panels (seed → "_s<seed>" hash salt;

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.WeightedAvg
 import graft.model.CassandraModel
+import graft.operators.Pipeline.hExpr
 import graft.sources.Tables
 
 /** Relational operator surface over the star schema.
@@ -884,7 +885,7 @@ object Relational {
         .select(col("user_id"), coalesce(col("converted"), lit(0L))
           .as("converted"))
         .withColumn("variant", when(
-          expr("cast(conv(substring(md5(cast(user_id as string)),1,8),16,10) as bigint) % 2") === 0,
+          expr(s"${hExpr("cast(user_id as string)")} % 2") === 0,
           "A").otherwise("B"))
       users.agg(
           sum(when(col("variant") === "A", 1L).otherwise(0L)).as("n_a"),
@@ -1011,30 +1012,29 @@ object Relational {
     // APPROX COLUMN PROFILER — the 100 TB variant of q_column_profile
     // promised above: the SAME one-pass stacked readout, but the six
     // exact COUNT(DISTINCT)s (which force Catalyst's deliberate 6×
-    // Expand) are replaced by six PORTABLE HyperLogLog estimates built
-    // on the q_hyperloglog register machinery (md5-derived 64-register
-    // sketch, rho ≤ 27, linear-counting small-range correction). Each
-    // column's register census is ONE bounded collect_set (≤ 64·27
-    // distinct (j, rho) pairs — partial-aggregating map-side like any
-    // sketch), so the whole profile is a single Aggregate with NO
-    // Expand (plan pinned in OperatorSpec) — at 100 TB this reads the
-    // table once and ships KBs per column. The estimate folds the exact
-    // integer registers through the same ordered double tree in both
-    // engines (2^-M as exact 1/shifted-integer division — no pow); the
-    // rel-error contract vs the exact profiler is asserted in
-    // OperatorSpec (m=64 HLL band).
+    // Expand) are replaced by six PORTABLE HyperLogLog estimates on the
+    // q_hyperloglog registers (house md5 hash, 64 registers, rank ≤ 27,
+    // linear-counting small-range correction). Each column's census is
+    // ONE native graft_hll64 aggregate — a 64-byte register buffer per
+    // group that max-merges map-side — so the whole profile is a single
+    // Aggregate with NO Expand (plan pinned in OperatorSpec); at 100 TB
+    // this reads the table once and ships 64 registers per column. The
+    // estimate folds the exact integer registers j = 0..63 through the
+    // same ordered double tree in both engines (2^-M as exact
+    // 1/shifted-integer division — no pow; an empty register reads 0 and
+    // adds 1); the rel-error contract vs the exact profiler is asserted
+    // in OperatorSpec (m=64 HLL band).
     "q_approx_stats" -> { (s, dir) =>
-      // spread: 6 md5-sketch registers per row are the heavy per-row work
-      // this query exists to amortize — on the single-split testdata scan
-      // they all ran on one core (QProf r18: 3 tasks, 4.4 s task time,
-      // parallelism 0.9×). Register census is a set union (order-free).
+      // spread: 6 md5-sketch updates per row are the per-row work this
+      // query exists to amortize; the single-split testdata scan would run
+      // them all on one core. With the native kernel, dropping it saved
+      // task time but not wall time in a back-to-back pair (QProf, sf0.1,
+      // 4 cores, 5 reps: 1.00–1.97 s with it, 1.13–1.75 s without; task
+      // time 1.4 vs 0.65 s), so it stays. Register merge is a max
+      // (order-free).
       val o = Tables.spread(t(s, dir, "orders"))
-      def reg(colName: String, sExpr: String): Column = {
-        val h = s"cast(conv(substring(md5($sExpr),1,8),16,10) as bigint)"
-        expr(s"CASE WHEN $colName IS NOT NULL THEN named_struct(" +
-          s"'j', $h % 64, 'r', CASE WHEN $h div 64 = 0 THEN 27L ELSE " +
-          s"27L - CAST(length(bin($h div 64)) AS BIGINT) END) END")
-      }
+      def reg(colName: String, sExpr: String): Column =
+        expr(s"graft_hll64(CASE WHEN $colName IS NOT NULL THEN $sExpr END)")
       def mn(c: Column) = min(c).cast(StringType)
       def mx(c: Column) = max(c).cast(StringType)
       val specs = Seq(
@@ -1052,20 +1052,15 @@ object Relational {
           col("o_orderpriority"), col("o_orderpriority")))
       val aggs = specs.zipWithIndex.flatMap { case ((name, hs, mnc, mxc), i) =>
         Seq(count(col(name)).as(s"nn${i + 1}"),
-          collect_set(reg(name, hs)).as(s"ms${i + 1}"),
+          reg(name, hs).as(s"ms${i + 1}"),
           mn(mnc).as(s"mn${i + 1}"), mx(mxc).as(s"mx${i + 1}"))
       }
       var d = o.agg(count(lit(1)).as("nr"), aggs: _*)
       (1 to 6).foreach { i =>
         d = d
-          .withColumn(s"zs$i", expr(
-            s"""aggregate(sequence(0, 63), CAST(0 AS DOUBLE), (a, j) ->
-               |  a + CAST(1 AS DOUBLE) / CAST(shiftleft(1L, CAST(
-               |    coalesce(array_max(transform(filter(ms$i,
-               |      x -> x.j = j), x -> x.r)), 0L) AS INT)) AS DOUBLE))
-               |""".stripMargin))
-          .withColumn(s"v$i", expr(
-            s"64 - size(array_distinct(transform(ms$i, x -> x.j)))"))
+          .withColumn(s"zs$i", expr(s"aggregate(ms$i, CAST(0 AS DOUBLE), " +
+            "(a, r) -> a + CAST(1 AS DOUBLE) / CAST(shiftleft(1L, r) AS DOUBLE))"))
+          .withColumn(s"v$i", expr(s"size(filter(ms$i, r -> r = 0))"))
           .withColumn(s"er$i", expr(
             s"CAST(0.709 AS DOUBLE) * CAST(4096 AS DOUBLE) / zs$i"))
           .withColumn(s"ad$i", expr(
@@ -2037,7 +2032,7 @@ object Relational {
       val ev = t(s, dir, "events")
         .select(col("event_id"), expr("unix_micros(ts)").as("tsu"))
         .withColumn("a", expr(
-          "cast(conv(substring(md5(cast(event_id as string)),1,8),16,10) as bigint)"))
+          hExpr("cast(event_id as string)")))
         .withColumn("chunk", expr("a div 67108864"))
       val wIn = Window.partitionBy("chunk")
         .orderBy(col("a").asc, col("event_id").asc)
@@ -2202,7 +2197,7 @@ object Relational {
           sum(when(col("day") >= col("mid"), col("cents")).otherwise(0L))
             .as("y"))
         .withColumn("va", when(expr(
-          "cast(conv(substring(md5(cast(user_id as string)),1,8),16,10) as bigint) % 2") === 0,
+          s"${hExpr("cast(user_id as string)")} % 2") === 0,
           1L).otherwise(0L))
       val varx = "(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)"
       val vary = "(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)"
@@ -2254,7 +2249,7 @@ object Relational {
         .withColumn("cents",
           (col("value").cast("decimal(12,2)") * 100).cast(LongType))
         .withColumn("va", when(expr(
-          "cast(conv(substring(md5(cast(user_id as string)),1,8),16,10) as bigint) % 2") === 0,
+          s"${hExpr("cast(user_id as string)")} % 2") === 0,
           1L).otherwise(0L))
       val va = "((CAST(ss_a AS DOUBLE) - CAST(sum_a AS DOUBLE) * sum_a / n_a)" +
         " / (n_a - 1.0D) / n_a)"
@@ -2303,7 +2298,7 @@ object Relational {
       val users = t(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("score"))
         .withColumn("va", when(expr(
-          "cast(conv(substring(md5(cast(user_id as string)),1,8),16,10) as bigint) % 2") === 0,
+          s"${hExpr("cast(user_id as string)")} % 2") === 0,
           1L).otherwise(0L))
       val h = users.groupBy("score").agg(
         sum(col("va")).as("na"),
@@ -2998,8 +2993,7 @@ object Relational {
     // Scale: one user_id shuffle for the panel, ≤2·|users| rows after,
     // 4-cell rollup, 1-row output.
     "q_did_estimator" -> { (s, dir) =>
-      val coin = "cast(conv(substring(md5(cast(user_id as string)),1,8)," +
-        "16,10) as bigint) % 2"
+      val coin = s"${hExpr("cast(user_id as string)")} % 2"
       val ev = t(s, dir, "events").select(col("user_id"),
         to_date(col("ts")).as("day"))
       val d0 = ev.agg(min("day").as("d0"))
@@ -3061,8 +3055,7 @@ object Relational {
     // per-type top-64 under WindowGroupLimit (rank pushdown — never a
     // full sort), everything after runs on ≤64·|types| rows.
     "q_kmv_sketch" -> { (s, dir) =>
-      val h = "cast(conv(substring(md5(concat(cast(user_id as string), " +
-        "'#', cast(day as string))),1,8),16,10) as bigint)"
+      val h = hExpr("concat(cast(user_id as string), '#', cast(day as string))")
       val th = t(s, dir, "events")
         .select(col("event_type").as("src"), col("user_id"),
           to_date(col("ts")).as("day"))
@@ -3241,8 +3234,7 @@ object Relational {
     // residual order is doubles compared identically in both engines.
     // One user_id shuffle; rank window on the ≤|cal users| rows.
     "q_conformal_interval" -> { (s, dir) =>
-      val coin = "cast(conv(substring(md5(cast(user_id as string)),1,8)," +
-        "16,10) as bigint) % 3"
+      val coin = s"${hExpr("cast(user_id as string)")} % 3"
       val u = t(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("y"))
         .withColumn("fold", expr(coin))
@@ -3517,7 +3509,7 @@ object Relational {
           (col("value").cast(DecimalType(12, 2)) * 100).cast(LongType)
             .as("cents"),
           when(expr(
-            "cast(conv(substring(md5(cast(user_id as string)),1,8),16,10) as bigint) % 2") === 0,
+            s"${hExpr("cast(user_id as string)")} % 2") === 0,
             1L).otherwise(0L).as("va"))
       val h = ev.groupBy("cents").agg(
         sum(col("va")).as("na"), sum(lit(1L) - col("va")).as("nb"))
@@ -4133,8 +4125,7 @@ object Relational {
       val ev = t(s, dir, "events")
         .select((col("value").cast(DecimalType(12, 2)) * 100)
             .cast(LongType).as("cents"),
-          expr("cast(conv(substring(md5(cast(event_id as string)),1,8)" +
-            ",16,10) as bigint) % 2").as("snap"))
+          expr(s"${hExpr("cast(event_id as string)")} % 2").as("snap"))
       val ha = ev.filter(col("snap") === 0).groupBy("cents")
         .agg(count(lit(1)).as("c"))
       val cum = ha.withColumn("cum", sum("c").over(
@@ -4238,9 +4229,7 @@ object Relational {
         expr("CASE id WHEN 0 THEN 'click' WHEN 1 THEN 'view' " +
           "WHEN 2 THEN 'signup' ELSE 'error' END").as("channel"))
       val perm = s.range(12).select(col("id").as("m")).crossJoin(chan)
-        .withColumn("h", expr(
-          "cast(conv(substring(md5(concat(cast(m as string), ':', " +
-            "channel)),1,8),16,10) as bigint)"))
+        .withColumn("h", expr(hExpr("concat(cast(m as string), ':', channel)")))
         .withColumn("r", row_number().over(
           Window.partitionBy("m").orderBy(col("h"), col("channel"))))
         .withColumn("pred", coalesce(sum("bit").over(
@@ -4344,9 +4333,8 @@ object Relational {
     // discipline); all algebra one shared double tree over the cast sums.
     "q_cross_validation" -> { (s, dir) =>
       val li = t(s, dir, "lineitem").select(
-        expr("cast(conv(substring(md5(concat(cast(l_orderkey as string)," +
-          " '-', cast(l_linenumber as string))),1,8),16,10) as bigint) % 5")
-          .as("fold"),
+        expr(s"${hExpr("concat(cast(l_orderkey as string), '-', " +
+          "cast(l_linenumber as string))")} % 5").as("fold"),
         col("l_quantity").cast(LongType).as("x"),
         (money(col("l_extendedprice")) * 100).cast(LongType).as("y"))
       val perFold = li.groupBy("fold").agg(
@@ -4416,31 +4404,25 @@ object Relational {
     // production cardinality sketch; the E118 KMV sibling that wins when
     // only unions are needed): 64 registers on the house 32-bit md5 hash
     // (register = h % 64, rank ρ = leading-zero count of the remaining 26
-    // bits + 1 via EXACT integer bit-length — never libm log2), register
-    // values by plain MAX aggregation — mergeable across partitions,
-    // micro-batches, and days BY CONSTRUCTION, which is the entire 100 TB
-    // story. Raw estimate α₆₄·64²/Σ2^(−Mⱼ) with the standard V>0
-    // linear-counting small-range correction (both read exact integer
-    // registers; the Σ folds over the register-SORTED list). Exact
+    // bits + 1 via EXACT integer bit-length — never libm log2), built by
+    // the native graft_hll64 aggregate: a register is the plain MAX of its
+    // ranks, so partial sketches merge across partitions, micro-batches
+    // and days BY CONSTRUCTION, which is the entire 100 TB story (and
+    // makes a DISTINCT before it redundant). Raw estimate α₆₄·64²/Σ2^(−Mⱼ)
+    // with the standard V>0 linear-counting small-range correction (both
+    // read exact integer registers; the Σ folds the used registers'
+    // ranks in SORTED order, then adds 1 per empty register). Exact
     // distinct + relative error reported for audit (the sketch's accuracy
     // contract, asserted in OperatorSpec).
     "q_hyperloglog" -> { (s, dir) =>
       val m = 64
       val regs = t(s, dir, "events")
-        .select(col("user_id")).distinct()
-        .withColumn("h", expr(
-          "cast(conv(substring(md5(cast(user_id as string)),1,8),16,10) as bigint)"))
-        .withColumn("j", col("h") % m)
-        .withColumn("w", expr(s"h div $m"))
-        .withColumn("rho", expr(
-          "CASE WHEN w = 0 THEN 27L ELSE 27L - CAST(length(bin(w)) AS BIGINT) END"))
-        .groupBy("j").agg(max("rho").as("mj"))
+        .agg(expr("graft_hll64(cast(user_id as string))").as("rs"))
+        .select(expr("size(filter(rs, r -> r > 0))").as("n_used"),
+          expr("sort_array(filter(rs, r -> r > 0))").as("ms"))
       val exact = t(s, dir, "events")
         .agg(countDistinct(col("user_id")).as("n_exact"))
-      regs
-        .agg(count(lit(1)).as("n_used"),
-          sort_array(collect_list(col("mj"))).as("ms"))
-        .crossJoin(broadcast(exact))
+      regs.crossJoin(broadcast(exact))
         .withColumn("zsum", expr(
           s"aggregate(ms, 0D, (a, x) -> a + power(2.0D, -CAST(x AS DOUBLE)))" +
             s" + CAST($m - n_used AS DOUBLE)"))
@@ -4508,8 +4490,7 @@ object Relational {
           col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name").agg(count(lit(1)).as("true_count"))
         .withColumn("u", expr(
-          "(CAST(cast(conv(substring(md5(n_name),1,8),16,10) as bigint) " +
-            "% 999999L + 1L AS DOUBLE)) / 1000000.0D"))
+          s"(CAST(${hExpr("n_name")} % 999999L + 1L AS DOUBLE)) / 1000000.0D"))
         .withColumn("noise", expr(
           """round(-(1.0D / 1.0D) *
             |  CASE WHEN u >= 0.5D THEN 1.0D ELSE -1.0D END *
@@ -6865,8 +6846,7 @@ object Relational {
       val ts0 = per.select("user_id", "d").crossJoin(broadcast(ks))
         .withColumn("sgn", expr(
           "CASE WHEN k = 0 THEN CAST(1 AS BIGINT) ELSE 1 - 2 * " +
-            "(cast(conv(substring(md5(concat(CAST(user_id AS STRING), " +
-            "'_', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2) " +
+            s"(${hExpr("concat(CAST(user_id AS STRING), '_', CAST(k AS STRING))")} % 2) " +
             "END"))
         .groupBy("k").agg(sum(col("sgn") * col("d")).as("t"))
       val t0 = ts0.filter(col("k") === 0).select(col("t").as("t0"))

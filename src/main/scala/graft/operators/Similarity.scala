@@ -1182,13 +1182,12 @@ object Similarity {
     // whole story: dimensionality reduction before any O(d) pairwise
     // stage (LSH, clustering) with distances preserved to 1±ε.
     "q_random_projection" -> { (s, dir) =>
+      val sign = Pipeline.hExpr("concat(CAST(i AS STRING), '_', CAST(j AS STRING))")
       val e = vecs(s, dir).filter(col("vec_id") < 200)
         .withColumn("y", expr(
-          """transform(sequence(0, 7), i ->
+          s"""transform(sequence(0, 7), i ->
             |  aggregate(sequence(1, 64), 0D, (a, j) -> a +
-            |    (CASE WHEN CAST(conv(substring(md5(concat(
-            |        CAST(i AS STRING), '_', CAST(j AS STRING))),
-            |        1, 8), 16, 10) AS BIGINT) % 2 = 0
+            |    (CASE WHEN $sign % 2 = 0
             |      THEN 1.0D ELSE -1.0D END) * element_at(v, j))
             |  / sqrt(8.0D))""".stripMargin))
         .select(col("vec_id"), col("v"), col("y"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model.CassandraModel
+import graft.operators.Pipeline.hExpr
 import graft.sources.Tables
 
 /** Write-path, catalog and physical-layout operators: the reference's DDL /
@@ -137,8 +138,7 @@ object Storage {
       .option("table", name).option("split_target_rows", "20000").load()
       .coalesce(s.sparkContext.defaultParallelism)
       .agg(count(lit(1)).as("n"),
-        sum(expr("cast(conv(substring(md5(concat_ws('|', o_custkey, " +
-          "o_orderkey, cents)), 1, 8), 16, 10) as bigint)")).as("h"))
+        sum(expr(hExpr("concat_ws('|', o_custkey, o_orderkey, cents)"))).as("h"))
       .head()
     (r.getLong(0), r.getLong(1))
   }
@@ -1518,8 +1518,7 @@ object Storage {
       def digests(rep: Int) = s.read.option("replica", rep.toString)
         .table("graftcat.testks.rp")
         .withColumn("rng", pmod(col("id"), lit(16)))
-        .withColumn("h", expr("cast(conv(substring(md5(" +
-          "concat_ws('|', id, v, wt)),1,8),16,10) as bigint)"))
+        .withColumn("h", expr(hExpr("concat_ws('|', id, v, wt)")))
         .groupBy("rng")
         .agg(sum("h").as(s"digest$rep"), count(lit(1)).as(s"n$rep"))
       digests(0).join(digests(1), "rng")

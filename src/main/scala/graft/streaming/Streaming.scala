@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.operators.Pipeline.hExpr
 import graft.sources.Tables
 
 /** Structured Streaming surface over the `events` table (SURVEY.md §2.4 /
@@ -15,11 +16,14 @@ import graft.sources.Tables
   * 445-470) — so this is the driver-mandated streaming extension.
   *
   * Harness: each query stages `events` as K time-ordered parquet chunks plus
-  * a far-future sentinel row, then streams them back with
-  * `maxFilesPerTrigger=1` — one micro-batch per file, replayed in event-time
-  * order (chunk ranges are disjoint via repartitionByRange and the files'
-  * mod-times are set explicitly, which is what the file source sorts on). The
-  * operators run in APPEND mode into a memory sink: windows are emitted
+  * a far-future sentinel row, then streams them back under
+  * `Trigger.AvailableNow` with `maxFilesPerTrigger` = `FilesPerTrigger`
+  * (4), replayed in event-time order (chunk ranges are disjoint via
+  * repartitionByRange and the files' mod-times are set explicitly, which is
+  * what the file source sorts on). At the default 4 chunks a run is three
+  * micro-batches: one data batch holding every chunk, the sentinel's batch,
+  * and the no-data batch whose advanced watermark flushes the state store.
+  * The operators run in APPEND mode into a memory sink: windows are emitted
   * exactly once, when the watermark passes their end. The sentinel advances
   * the watermark past every real event so all real windows flush from the
   * state store; the sentinel's own group can never be emitted (its window end
@@ -733,23 +737,27 @@ object Streaming {
     // positionally (they follow the agg declaration order) — the reader
     // names them after the aggregate FUNCTION, not the alias.
     "q_stream_state_reader" -> { (s, dir) =>
-      // the returned frame reads the checkpoint lazily, after this returns,
-      // so the dir is kept (under the staging root, not the tmpfs one)
-      val ckpt = stageRoot("stateckpt", dir) + "-" + System.nanoTime()
       val agg = eventStream(s, dir, "events")
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"),
           sum((col("value").cast(DecimalType(12, 2)) * 100).cast("long"))
             .as("sum_cents"))
-      runToEnd(s, agg.writeStream.format("memory")
-        .queryName("graft_stream_state_src").outputMode("update"), ckpt = Some(ckpt))
-      val st = s.read.format("statestore").load(ckpt)
-      val vcols = st.select(col("value.*")).columns
-      st.select(col("key.user_id").as("user_id"),
-          col(s"value.${vcols(0)}").as("n_events"),
-          col(s"value.${vcols(1)}").as("sum_cents"))
-        .filter(col("user_id") >= 0)
-        .orderBy("user_id")
+      // the state is read in full before the checkpoint is dropped: one
+      // row per user, the size of the memory sink the query also fills
+      val ckpt = freshCkpt()
+      val (rows, schema) =
+        try {
+          runToEnd(s, agg.writeStream.format("memory")
+            .queryName("graft_stream_state_src").outputMode("update"), ckpt = Some(ckpt))
+          val st = s.read.format("statestore").load(ckpt)
+          val vcols = st.select(col("value.*")).columns
+          val read = st.select(col("key.user_id").as("user_id"),
+              col(s"value.${vcols(0)}").as("n_events"),
+              col(s"value.${vcols(1)}").as("sum_cents"))
+            .filter(col("user_id") >= 0)
+          (read.collect(), read.schema)
+        } finally dropCkpt(ckpt)
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema).orderBy("user_id")
     },
 
     // transformWithState WITH INITIAL STATE — batch history warm-starts the
@@ -1142,8 +1150,7 @@ object Streaming {
     "q_stream_heavy_hitters" -> { (s, dir) =>
       val cellExpr = "transform(sequence(0, 3), d -> named_struct(" +
         "'d', CAST(d AS BIGINT), " +
-        "'c', cast(conv(substring(md5(concat(cast(d as string), ':', " +
-        "cast(user_id as string))),1,8),16,10) as bigint) % 256))"
+        s"'c', ${hExpr("concat(cast(d as string), ':', cast(user_id as string))")} % 256))"
       val cells = eventStream(s, dir, "cmsketch")
         .filter(col("event_id") =!= -1L)
         .select(explode(expr(cellExpr)).as("cell"))
@@ -1190,8 +1197,7 @@ object Streaming {
       // commits proportional to what a window actually holds
       val cellExpr = "transform(sequence(0, 3), d -> named_struct(" +
         "'d', CAST(d AS BIGINT), " +
-        "'c', cast(conv(substring(md5(concat(cast(d as string), ':', " +
-        "cast(user_id as string))),1,8),16,10) as bigint) % 32))"
+        s"'c', ${hExpr("concat(cast(d as string), ':', cast(user_id as string))")} % 32))"
       val cells = eventStream(s, dir, "cmwin")
         // the sentinel must SURVIVE the scope filter — it is what drives
         // the watermark past the last real window; its own far-future
@@ -1524,7 +1530,7 @@ object Streaming {
     // and every real window closes under the sentinel-advanced
     // watermark, so the sink equals the batch rollup the oracle runs.
     "q_stream_corpus_pipeline" -> { (s, dir) =>
-      import graft.operators.Pipeline.{hExpr, ngramExpr}
+      import graft.operators.Pipeline.ngramExpr
       val shingles =
         s"array_distinct(transform(${ngramExpr(5)}, g -> ${hExpr("g")}))"
       val bench = Tables.load(s, dir, "documents")

@@ -62,4 +62,15 @@ class RunToEndSpec extends AnyFunSuite with SparkFixture {
     assert(kvsink() == sinkBefore)
     assert(ckptDirs() == ckptBefore)
   }
+
+  test("a run of q_stream_state_reader leaves no checkpoint dir behind") {
+    val staging = new java.io.File(sys.props("java.io.tmpdir"), "graft-stream")
+    def stateCkpts(): Set[String] = Option(staging.list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("stateckpt-")).toSet)
+    val (stateBefore, ckptBefore) = (stateCkpts(), ckptDirs())
+    val r = Run(spark, "q_stream_state_reader", sfDir)
+    assert(r.error.isEmpty, r.error)
+    assert(stateCkpts() == stateBefore)
+    assert(ckptDirs() == ckptBefore)
+  }
 }

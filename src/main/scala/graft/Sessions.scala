@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The one place a SparkSession is built: tests, Verify, Bench, perfbench
   * and every dev tool run the same engine — `GraftExtensions` (the
-  * DirectJoin optimizer rule and the native expressions) included.
+  * DirectJoin optimizer rule and the native expressions) and the `graftcat`
+  * KV catalog included.
   *
   * Tuned for local[N] single-JVM execution but with settings that carry to a
   * real cluster: AQE on (runtime re-planning, skew-join handling), shuffle
@@ -40,6 +41,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
+      .config("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * decode the image and hash the 8×8 luma grid; no image codec ships in
   * this environment (the multimodal decode tier is a disclosed stub), so
   * the grid here is the 60-way byte partition of the blob itself. The
-  * pipeline shape — native codegen'd fingerprint, banded bucket join,
-  * Hamming verify — is exactly the production one.
+  * pipeline shape — native fingerprint (one Scala kernel, called from
+  * generated code), banded bucket join, Hamming verify — is exactly the
+  * production one.
   *
   * Semantics (exact integer arithmetic, engine-portable): payload bytes
   * b[0..n) as unsigned ints; byte i belongs to block k = i·60/n (floor);
@@ -41,8 +42,18 @@ case class AHash60(child: Expression) extends UnaryExpression {
       s"$prettyName requires binary, got ${other.catalogString}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
+  protected override def nullSafeEval(input: Any): Any =
+    AHash60.compute(input.asInstanceOf[Array[Byte]])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.AHash60$$.MODULE$$.compute($c)")
+
+  protected override def withNewChildInternal(newChild: Expression): AHash60 =
+    copy(child = newChild)
+}
+
+object AHash60 {
+  def compute(b: Array[Byte]): Long = {
     val n = b.length
     if (n == 0) return 0L
     val sums = new Array[Long](60)
@@ -65,39 +76,4 @@ case class AHash60(child: Expression) extends UnaryExpression {
     }
     res
   }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val sums = ctx.freshName("sums")
-      val counts = ctx.freshName("counts")
-      val total = ctx.freshName("total")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val v = ctx.freshName("v")
-      val res = ctx.freshName("res")
-      s"""
-         |int $n = $c.length;
-         |long $res = 0L;
-         |if ($n > 0) {
-         |  long[] $sums = new long[60];
-         |  long[] $counts = new long[60];
-         |  long $total = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $v = (long) ($c[$i] & 0xff);
-         |    int $k = (int) (((long) $i) * 60L / $n);
-         |    $sums[$k] += $v;
-         |    $counts[$k] += 1L;
-         |    $total += $v;
-         |  }
-         |  for (int $k = 0; $k < 60; $k++) {
-         |    if ($sums[$k] * $n > $total * $counts[$k]) $res |= 1L << $k;
-         |  }
-         |}
-         |${ev.value} = $res;
-         |""".stripMargin
-    })
-
-  protected override def withNewChildInternal(newChild: Expression): AHash60 =
-    copy(child = newChild)
 }

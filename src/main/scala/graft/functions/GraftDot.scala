@@ -14,9 +14,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * "functions.aggregate/zip_with for the dot product, or a custom
   * Expression"). Accumulates left-to-right in index order — the same order
   * as the HOF chain and the DuckDB oracle — so cosines stay bit-identical
-  * across engines. One fused primitive loop inside WholeStageCodegen instead
-  * of an intermediate zipped array plus an interpreted fold; this is the
-  * innermost loop of every ANN verify join.
+  * across engines. One fused primitive loop — one Scala kernel, called from
+  * generated code inside WholeStageCodegen — instead of an intermediate
+  * zipped array plus an interpreted fold; this is the innermost loop of
+  * every ANN verify join.
   *
   * Unequal lengths never occur in this repo (fixed 64-dim vectors); the
   * expression uses the shorter length (the HOF version would return null).
@@ -33,9 +34,19 @@ case class GraftDot(left: Expression, right: Expression) extends BinaryExpressio
         s"$prettyName requires two array<double>, got ${l.catalogString}, ${r.catalogString}")
     }
 
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  protected override def nullSafeEval(a: Any, b: Any): Any =
+    GraftDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GraftDot$$.MODULE$$.compute($a, $b)")
+
+  protected override def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): GraftDot =
+    copy(left = newLeft, right = newRight)
+}
+
+object GraftDot {
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -45,32 +56,14 @@ case class GraftDot(left: Expression, right: Expression) extends BinaryExpressio
     }
     s
   }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-         |""".stripMargin
-    })
-
-  protected override def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftDot =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Integer sibling of GraftDot for the int8-quantized ANN tier:
   * `graft_dotl(array<bigint>, array<bigint>) -> bigint`.
   *
   * Exact integer accumulation (order-free — no float concerns at all), one
-  * primitive loop inside WholeStageCodegen. Replaces the interpreted
+  * primitive loop — one Scala kernel, called from generated code inside
+  * WholeStageCodegen. Replaces the interpreted
   * `aggregate(zip_with(...))` chain in q_embed_quantize, whose per-pair
   * boxing would negate the 4× bandwidth win quantization exists to buy.
   * Unequal lengths use the shorter (fixed 64-dim in this repo).
@@ -88,9 +81,19 @@ case class GraftDotLong(left: Expression, right: Expression) extends BinaryExpre
         s"$prettyName requires two array<bigint>, got ${l.catalogString}, ${r.catalogString}")
     }
 
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  protected override def nullSafeEval(a: Any, b: Any): Any =
+    GraftDotLong.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.GraftDotLong$$.MODULE$$.compute($a, $b)")
+
+  protected override def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): GraftDotLong =
+    copy(left = newLeft, right = newRight)
+}
+
+object GraftDotLong {
+  def compute(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0L
     var i = 0
@@ -100,25 +103,6 @@ case class GraftDotLong(left: Expression, right: Expression) extends BinaryExpre
     }
     s
   }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-         |""".stripMargin
-    })
-
-  protected override def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GraftDotLong =
-    copy(left = newLeft, right = newRight)
 }
 
 /** The repo's native expressions by SQL name. `GraftExtensions` injects

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Why native (operator-preference tier (b)): the HOF version evaluates 32
   * interpreted `transform`+`array_min` passes over the shingle-hash array
   * with boxing, outside whole-stage codegen; this expression makes ONE pass
-  * with a primitive `long[32]` running-min buffer inside codegen. The
+  * with a primitive `long[32]` running-min buffer — one Scala kernel, called
+  * from generated code, so it stays inside whole-stage codegen. The
   * signature scan is the dominant cost of MinHash-LSH dedup at 100 TB.
   *
   * Empty input never reaches this expression (callers filter to ≥1
@@ -34,8 +35,18 @@ case class MinHash32(child: Expression) extends UnaryExpression {
       s"$prettyName requires array<bigint>, got ${other.catalogString}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  protected override def nullSafeEval(input: Any): Any =
+    MinHash32.compute(input.asInstanceOf[ArrayData])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinHash32$$.MODULE$$.compute($c)")
+
+  protected override def withNewChildInternal(newChild: Expression): MinHash32 =
+    copy(child = newChild)
+}
+
+object MinHash32 {
+  def compute(arr: ArrayData): ArrayData = {
     val mins = Array.fill(32)(Long.MaxValue)
     val n = arr.numElements()
     var j = 0
@@ -51,28 +62,4 @@ case class MinHash32(child: Expression) extends UnaryExpression {
     }
     new GenericArrayData(mins)
   }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val mins = ctx.freshName("mins")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val h = ctx.freshName("h")
-      s"""
-         |long[] $mins = new long[32];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $c.numElements(); $j++) {
-         |  long $x = $c.getLong($j);
-         |  for (int $i = 0; $i < 32; $i++) {
-         |    long $h = ((2L * $i + 1L) * $x + 12345L + 777L * $i) % 4294967291L;
-         |    if ($h < $mins[$i]) $mins[$i] = $h;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |""".stripMargin
-    })
-
-  protected override def withNewChildInternal(newChild: Expression): MinHash32 =
-    copy(child = newChild)
 }

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * per-step boxing, per row, and higher-order functions block whole-stage
   * codegen. This is the dominant cost of the embedding near-dup signature
   * stage (the one scan of the corpus that a 100 TB run pays), so it gets the
-  * same treatment as MinHash32/SimHash60: a tight generated Java loop inside
-  * WholeStageCodegen. HOF-equivalence is asserted in OperatorSpec.
+  * same treatment as MinHash32/SimHash60: one Scala kernel, called from
+  * generated code inside WholeStageCodegen. HOF-equivalence is asserted in
+  * OperatorSpec.
   */
 case class SignLsh(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -44,12 +45,24 @@ case class SignLsh(child: Expression) extends UnaryExpression {
       s"$prettyName requires array<double>, got ${other.catalogString}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  protected override def nullSafeEval(input: Any): Any =
+    SignLsh.compute(input.asInstanceOf[ArrayData])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.SignLsh$$.MODULE$$.compute($c);
+      if (${ev.value} == null) { ${ev.isNull} = true; }""")
+
+  protected override def withNewChildInternal(newChild: Expression): SignLsh =
+    copy(child = newChild)
+}
+
+object SignLsh {
+  /** The 4 band codes, or null for a malformed vector (see `nullable`). */
+  def compute(v: ArrayData): ArrayData = {
     if (v.numElements() < 64) return null
     var p = 0
     while (p < 64) { if (v.isNullAt(p)) return null; p += 1 }
-    val n = 64
     val codes = new Array[Long](4)
     var b = 0
     while (b < 4) {
@@ -58,7 +71,7 @@ case class SignLsh(child: Expression) extends UnaryExpression {
       while (j < 16) {
         var acc = 0.0
         var i = 0
-        while (i < n) {
+        while (i < 64) {
           val k = 64L * (16 * b + j) + i
           val sign = if (((1103515245L * k + 12345L >> 16) & 1L) == 1L) 1.0 else -1.0
           acc += v.getDouble(i) * sign
@@ -72,44 +85,4 @@ case class SignLsh(child: Expression) extends UnaryExpression {
     }
     new GenericArrayData(codes)
   }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bad = ctx.freshName("bad")
-      val p = ctx.freshName("p")
-      val codes = ctx.freshName("codes")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val k = ctx.freshName("k")
-      val sign = ctx.freshName("sign")
-      val code = ctx.freshName("code")
-      s"""
-         |boolean $bad = $c.numElements() < 64;
-         |for (int $p = 0; !$bad && $p < 64; $p++) $bad = $c.isNullAt($p);
-         |if ($bad) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $codes = new long[4];
-         |  for (int $b = 0; $b < 4; $b++) {
-         |    long $code = 0L;
-         |    for (int $j = 0; $j < 16; $j++) {
-         |      double $acc = 0.0;
-         |      for (int $i = 0; $i < 64; $i++) {
-         |        long $k = 64L * (16 * $b + $j) + $i;
-         |        double $sign = ((1103515245L * $k + 12345L >> 16) & 1L) == 1L ? 1.0 : -1.0;
-         |        $acc += $c.getDouble($i) * $sign;
-         |      }
-         |      if ($acc >= 0) $code |= 1L << $j;
-         |    }
-         |    $codes[$b] = $code;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-         |}
-         |""".stripMargin
-    })
-
-  protected override def withNewChildInternal(newChild: Expression): SignLsh =
-    copy(child = newChild)
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * ...aggregate(hw, ...)))` — makes 60 interpreted passes over the token
   * array with per-step boxing, and higher-order functions block whole-stage
   * codegen. This expression does ONE pass per token with a primitive
-  * `int[60]` vote buffer and generates a tight Java loop via `doGenCode`, so
+  * `int[60]` vote buffer — one Scala kernel, called from generated code — so
   * the whole signature stage stays inside WholeStageCodegen. At 100 TB the
   * signature scan is the dominant cost of simhash dedup — this is the stage
   * worth a native expression, and nothing else is.
@@ -36,8 +36,18 @@ case class SimHash60(child: Expression) extends UnaryExpression {
       s"$prettyName requires array<bigint>, got ${other.catalogString}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  protected override def nullSafeEval(input: Any): Any =
+    SimHash60.compute(input.asInstanceOf[ArrayData])
+
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash60$$.MODULE$$.compute($c)")
+
+  protected override def withNewChildInternal(newChild: Expression): SimHash60 =
+    copy(child = newChild)
+}
+
+object SimHash60 {
+  def compute(arr: ArrayData): Long = {
     val votes = new Array[Int](60)
     val n = arr.numElements()
     var j = 0
@@ -58,30 +68,4 @@ case class SimHash60(child: Expression) extends UnaryExpression {
     }
     res
   }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val votes = ctx.freshName("votes")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val res = ctx.freshName("res")
-      s"""
-         |int[] $votes = new int[60];
-         |for (int $j = 0; $j < $c.numElements(); $j++) {
-         |  long $h = $c.getLong($j);
-         |  for (int $i = 0; $i < 60; $i++) {
-         |    $votes[$i] += (int) ((($h >> $i) & 1L) * 2L - 1L);
-         |  }
-         |}
-         |long $res = 0L;
-         |for (int $i = 0; $i < 60; $i++) {
-         |  if ($votes[$i] >= 0) $res |= 1L << $i;
-         |}
-         |${ev.value} = $res;
-         |""".stripMargin
-    })
-
-  protected override def withNewChildInternal(newChild: Expression): SimHash60 =
-    copy(child = newChild)
 }

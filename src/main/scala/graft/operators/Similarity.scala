@@ -920,7 +920,6 @@ object Similarity {
     // score with the same FLOAT→DOUBLE left-to-right arithmetic as
     // graft_dot and the DuckDB oracle. 66 deterministic pairs.
     "q_fn_similarity" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       Tables.load(s, dir, "embeddings").filter(col("vec_id") < 12)
         .createOrReplaceTempView("emb_fn")
       s.sql("""SELECT a.vec_id AS id_a, b.vec_id AS id_b,

@@ -388,7 +388,6 @@ object Storage {
     // Same upsert batch as q_users_upsert: idempotent re-insert, key
     // overwrite, new key.
     "q_catalog_upsert" -> { (s, _) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.users")
       s.sql("CREATE TABLE graftcat.testks.users (id INT, name STRING, email STRING) " +
@@ -410,7 +409,6 @@ object Storage {
     // Cassandra tombstone semantics. The reference's stack exposes this
     // via the same connector catalog (userdata/cloudinit.sh:461).
     "q_users_delete" -> { (s, _) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.users_del")
       s.sql("CREATE TABLE graftcat.testks.users_del (id INT, name STRING, email STRING) " +
@@ -679,7 +677,6 @@ object Storage {
     // decimal/varint → full-scale string; everything else rides its native
     // type.
     "q_types_roundtrip" -> { (s, _) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.typed")
       s.sql("""CREATE TABLE graftcat.testks.typed (
@@ -752,7 +749,6 @@ object Storage {
     // writetime) instead of trusting a literal; the tie-break and
     // commutativity corners are property-tested in UpsertSpec.
     "q_kv_writetime" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.lww")
       s.sql("CREATE TABLE graftcat.testks.lww (id BIGINT, ordkey BIGINT, wt BIGINT) " +
@@ -776,7 +772,6 @@ object Storage {
     // rows expire as the clock advances, no rewrite in between — and the
     // oracle RECOMPUTES `wt + ttl > now` per read in DuckDB.
     "q_kv_ttl" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.sessions_ttl")
       s.sql("CREATE TABLE graftcat.testks.sessions_ttl " +
@@ -805,7 +800,6 @@ object Storage {
     // the distributed-aggregation shape Cassandra counters exist for:
     // shards push partial counts, the store folds them.
     "q_kv_counter" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.hits")
       s.sql("CREATE TABLE graftcat.testks.hits (event_type STRING, hits BIGINT) " +
@@ -826,7 +820,6 @@ object Storage {
     // fresh and lands. The flag rides the v2 writer options, like the
     // connector's write configs.
     "q_kv_insert_if_absent" -> { (s, _) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.claims")
       s.sql("CREATE TABLE graftcat.testks.claims (id INT, owner STRING) " +
@@ -845,7 +838,6 @@ object Storage {
     // conditional batch spans 10..19, so exactly 10..14 update and 15..19
     // vanish without a trace — which the oracle recomputes.
     "q_kv_update_if_exists" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.cond")
       s.sql("CREATE TABLE graftcat.testks.cond (k BIGINT, name STRING) " +
@@ -869,7 +861,6 @@ object Storage {
     // condition (CQL [applied]=false). Batches commit sequentially, so the
     // oracle recomputes the applied set from the first batch's state.
     "q_kv_lwt_condition" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.lwt")
       s.sql("CREATE TABLE graftcat.testks.lwt " +
@@ -905,7 +896,6 @@ object Storage {
     // live marker and no visible cell disappears. The oracle recomputes the
     // cell-wise winner per column in DuckDB from the same derivation.
     "q_kv_cell_lww" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.cells")
       s.sql("CREATE TABLE graftcat.testks.cells " +
@@ -956,7 +946,6 @@ object Storage {
     // an id whose newest a-write is a short-TTL update reads a = NULL AND
     // a_wt = NULL even though the row (marker, b) lives on.
     "q_kv_writetime_fn" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.cellmeta")
       s.sql("CREATE TABLE graftcat.testks.cellmeta " +
@@ -999,7 +988,6 @@ object Storage {
     // replays the same per-cell log and takes the max-writetime winner per
     // (id, column).
     "q_kv_cell_delete" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.coldel")
       s.sql("CREATE TABLE graftcat.testks.coldel " +
@@ -1044,7 +1032,6 @@ object Storage {
     // UpsertSpec property-tests order-independent convergence. The result
     // EXPLODEs the set so the comparison is scalar-valued.
     "q_kv_set_merge" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.settags")
       s.sql("CREATE TABLE graftcat.testks.settags " +
@@ -1086,7 +1073,6 @@ object Storage {
     // key-sorted live entries; the result EXPLODEs them so the oracle
     // compares scalar (id, mkey, mval) rows recomputed from the same log.
     "q_kv_map_merge" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.attrs")
       s.sql("CREATE TABLE graftcat.testks.attrs " +
@@ -1129,7 +1115,6 @@ object Storage {
     // representation serialization. The oracle recomputes the loaded
     // table from the source rows.
     "q_catalog_copy" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.copied")
       s.sql("CREATE TABLE graftcat.testks.copied " +
@@ -1153,7 +1138,6 @@ object Storage {
     // 'snapshot' read option serves the pre-phase-2 state the oracle
     // recomputes; UpsertSpec additionally restores and checks rollback.
     "q_kv_snapshot" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.snap")
       s.sql("CREATE TABLE graftcat.testks.snap " +
@@ -1183,7 +1167,6 @@ object Storage {
     // repair and matches the oracle's recomputation of the merge. Deletes
     // also drop the affected keys' pending hints (no resurrection).
     "q_kv_merge_replicated" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.mrep")
       s.sql("CREATE TABLE graftcat.testks.mrep " +
@@ -1253,7 +1236,6 @@ object Storage {
     // read shard-merges and serves the full totals the oracle recomputes
     // — no increment lost, none double-counted.
     "q_kv_counter_shards" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.hits_rf")
       s.sql("CREATE TABLE graftcat.testks.hits_rf (id BIGINT, n BIGINT) " +
@@ -1284,7 +1266,6 @@ object Storage {
     // a plain CL=ONE read of replica 0 already serves the full-log LWW
     // result the oracle recomputes.
     "q_kv_hinted_handoff" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.hh")
       s.sql("CREATE TABLE graftcat.testks.hh (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1311,7 +1292,6 @@ object Storage {
     // not wave B, which the oracle recomputes; the cross-DC convergence
     // story is pinned in UpsertSpec.
     "q_kv_local_quorum" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.lq")
       s.sql("CREATE TABLE graftcat.testks.lq (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1339,7 +1319,6 @@ object Storage {
     // the CL exists for, recomputed by the oracle from the write schedule
     // (wave ≡0 mod 2 never reached dc2 → baseline there).
     "q_kv_local_one" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.lo1")
       s.sql("CREATE TABLE graftcat.testks.lo1 (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1364,7 +1343,6 @@ object Storage {
     // which may land) — so the final quorum read shows the accepted wave
     // and no trace of the refused one. The oracle recomputes exactly that.
     "q_kv_write_cl" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.wcl")
       s.sql("CREATE TABLE graftcat.testks.wcl (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1405,7 +1383,6 @@ object Storage {
     // write-back-repairs both replicas, and serves the per-column winners
     // the oracle recomputes.
     "q_kv_cell_read_repair" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.crr")
       s.sql("CREATE TABLE graftcat.testks.crr " +
@@ -1440,7 +1417,6 @@ object Storage {
     // normally. The CL=ONE read of replica 0 shows exactly that split,
     // which the oracle recomputes from the write schedule.
     "q_kv_hint_window" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.hw")
       s.sql("CREATE TABLE graftcat.testks.hw (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1473,7 +1449,6 @@ object Storage {
     // the post-repair CL=ONE read), and serves the merged rows the oracle
     // recomputes from the full write log.
     "q_kv_read_repair" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.rr")
       s.sql("CREATE TABLE graftcat.testks.rr (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1502,7 +1477,6 @@ object Storage {
     // shape that matters: digests are one aggregate row per (replica,
     // range); the full-resolution diff never leaves the nodes.
     "q_kv_repair_preview" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.rp")
       s.sql("CREATE TABLE graftcat.testks.rp (id BIGINT, v BIGINT, wt BIGINT) " +
@@ -1537,7 +1511,6 @@ object Storage {
     // the visible ttl column shows the EFFECTIVE value the way the stored
     // cell carries it (60 / 120 / NULL).
     "q_kv_default_ttl" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.dttl")
       s.sql("CREATE TABLE graftcat.testks.dttl " +
@@ -1565,7 +1538,6 @@ object Storage {
     // the DuckDB oracle replays the per-field log exactly. A struct column
     // NOT declared in 'udts' stays FROZEN: one cell, whole-value LWW.
     "q_kv_udt_merge" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.profile")
       s.sql("CREATE TABLE graftcat.testks.profile " +
@@ -1617,7 +1589,6 @@ object Storage {
     // POSEXPLODEs the read-back lists so the oracle recomputes scalar
     // (id, pos, tag) rows — position order included — from the same log.
     "q_kv_list_merge" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.tags")
       s.sql("CREATE TABLE graftcat.testks.tags " +
@@ -1700,7 +1671,6 @@ object Storage {
     // and source both derive from parquet tables, so the oracle RECOMPUTES
     // the merge semantics in DuckDB instead of trusting a literal.
     "q_merge_upsert_delete" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.cust_m")
       s.sql("CREATE TABLE graftcat.testks.cust_m (id BIGINT, bal DOUBLE) " +
@@ -1727,7 +1697,6 @@ object Storage {
     // with a 1997 order move to segment PROMO at t=1), so DuckDB recomputes
     // the full end state independently.
     "q_merge_scd2" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.dim_scd2")
       s.sql("CREATE TABLE graftcat.testks.dim_scd2 " +
@@ -1761,7 +1730,6 @@ object Storage {
     // score, id 2 pre-evolution (NULL score), id 3 post-evolution, the
     // name column gone.
     "q_catalog_alter" -> { (s, _) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.alter_t")
       s.sql("CREATE TABLE graftcat.testks.alter_t (id INT, name STRING) " +
@@ -2043,7 +2011,6 @@ object Storage {
     // validating every statement before applying any. The output joins both
     // tables, so a half-applied poison batch would hash-mismatch.
     "q_kv_logged_batch" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       Seq("bt_orders", "bt_counts", "bt_audit").foreach(t =>
         s.sql(s"DROP TABLE IF EXISTS graftcat.testks.$t"))
@@ -2091,7 +2058,6 @@ object Storage {
     // are the coordination primitive (uniqueness, state machines).
     "q_kv_cas_batch" -> { (s, dir) =>
       import graft.sources.GraftBatch
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.casb")
       s.sql("CREATE TABLE graftcat.testks.casb " +
@@ -2129,7 +2095,6 @@ object Storage {
     // same documents from the source table in DuckDB. An unknown-key doc
     // must be refused atomically (nothing from its statement lands).
     "q_kv_json_dml" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       s.sql("DROP TABLE IF EXISTS graftcat.testks.jsn")
       s.sql("CREATE TABLE graftcat.testks.jsn " +
@@ -2176,7 +2141,6 @@ object Storage {
     // as a no-op). The final join shows BOTH tables at the second batch's
     // values, which the oracle recomputes.
     "q_kv_batchlog" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.testks")
       Seq("bl_a", "bl_b").foreach(t =>
         s.sql(s"DROP TABLE IF EXISTS graftcat.testks.$t"))
@@ -2729,7 +2693,6 @@ object Storage {
     // (UpsertSpec pins both against KVRing.tokenOf). The identity token on
     // integral keys is what the oracle reproduces.
     "q_fn_token" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       Tables.load(s, dir, "customer").filter(col("c_custkey") <= 100)
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("cust_tok")
@@ -2745,7 +2708,6 @@ object Storage {
     // arithmetic in the state so the result is split-independent; the
     // quantity-weighted mean price per return flag, in cents.
     "q_fn_uda" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       Tables.load(s, dir, "lineitem")
         .select(col("l_returnflag"),
           expr("cast(round(l_extendedprice * 100) as bigint)").as("cents"),
@@ -2770,7 +2732,6 @@ object Storage {
     // IEEE double ops in source order both sides, so values are
     // bit-identical with the oracle's inlined arithmetic.
     "q_fn_udf" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       graft.functions.CqlUdfs.executeDdl(
         "CREATE OR REPLACE FUNCTION fahrenheit(c double) " +
           "RETURNS NULL ON NULL INPUT RETURNS double " +

@@ -33,9 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     the engine level (the DSv2 `BatchWrite.commit`), not by a helper the
   *     caller must remember to use.
   *
-  * Register at runtime:
-  *   `spark.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")`
-  * (catalogs are resolved lazily on first 3-part-name reference).
+  * `Sessions.local` registers it as `spark.sql.catalog.graftcat` in every
+  * session (catalogs are resolved lazily on first 3-part-name reference).
   *
   * Storage is in-driver (stands in for the external cluster, like
   * KeyGroupedRegistry); executors stream rows back to the driver only through

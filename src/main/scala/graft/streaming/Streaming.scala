@@ -341,11 +341,15 @@ object Streaming {
     * durability buys nothing (the dir is deleted as soon as the query ends),
     * so RAM-backed /dev/shm is the right medium on the bench host. A
     * PRODUCTION stream points this at durable storage — which is why it is a
-    * per-query location, not a session conf. */
+    * per-query location, not a session conf. One child per JVM
+    * (`graft-ckpt/<pid>`), so JVMs sharing a host never see each other's
+    * checkpoints; the emptied dir goes when the JVM exits. */
   private[streaming] val CkptRoot: String = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-ckpt"
-    else sys.props("java.io.tmpdir") + "/graft-ckpt"
+    val base = if (shm.isDirectory && shm.canWrite) "/dev/shm" else sys.props("java.io.tmpdir")
+    val root = new java.io.File(s"$base/graft-ckpt/${ProcessHandle.current().pid()}")
+    root.deleteOnExit()
+    root.getPath
   }
 
   /** Fresh, UNIQUE checkpoint dir for one run-to-end query: the nanoTime
@@ -1706,7 +1710,6 @@ object Streaming {
     // wave definitions.
     "q_stream_catalog_cdc" -> { (s, dir) =>
       val fqn = "graftcat.streamks.cdc_nat"
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.streamks")
       s.sql(s"DROP TABLE IF EXISTS $fqn")
       s.sql(s"CREATE TABLE $fqn (k BIGINT, name STRING) " +
@@ -1739,7 +1742,6 @@ object Streaming {
     // oracle recomputes relationally from the same wave definitions.
     "q_stream_merge_cdc" -> { (s, dir) =>
       val fqn = "graftcat.streamks.cdc_merge"
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.streamks")
       s.sql(s"DROP TABLE IF EXISTS $fqn")
       s.sql(s"CREATE TABLE $fqn (id BIGINT, bal DOUBLE) " +
@@ -1780,7 +1782,6 @@ object Streaming {
     // max-event_id event — exactly the oracle's window.
     "q_stream_kv_sink" -> { (s, dir) =>
       val fqn = "graftcat.streamks.user_latest"
-      s.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.streamks")
       s.sql(s"DROP TABLE IF EXISTS $fqn")
       s.sql(s"""CREATE TABLE $fqn

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,10 +154,12 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
     val ck = s"${sys.props("java.io.tmpdir")}/graft-stream/" +
       s"ckpt-kvsink-replay-${System.nanoTime()}"
-    val q = in.writeStream.option("checkpointLocation", ck)
-      .outputMode("append").toTable(fqn)
-    try q.processAllAvailable() finally q.stop()
-    val r2 = spark.table(fqn).orderBy("user_id").collect().toSeq
+    val r2 = try {
+      val q = in.writeStream.option("checkpointLocation", ck)
+        .outputMode("append").toTable(fqn)
+      try q.processAllAvailable() finally q.stop()
+      spark.table(fqn).orderBy("user_id").collect().toSeq
+    } finally FileUtils.deleteQuietly(new java.io.File(ck))
     assert(r2 == r1, s"replay diverged: ${r2.size} vs ${r1.size} rows")
     // a STALE redelivery can never clobber: rewrite one user's row with a
     // lower writetime through the batch path — LWW must keep the newer row
@@ -179,11 +182,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .select(col("user_id").as("id"), col("event_id").as("hits"))
     val ck = s"${sys.props("java.io.tmpdir")}/graft-stream/" +
       s"ckpt-kvsink-cnt-${System.nanoTime()}"
-    val e = intercept[Exception] {
+    val e = try intercept[Exception] {
       val q = in.writeStream.option("checkpointLocation", ck)
         .outputMode("append").toTable("graftcat.streamks.cnt")
       try q.processAllAvailable() finally q.stop()
-    }
+    } finally FileUtils.deleteQuietly(new java.io.File(ck))
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
         .map(x => Option(x.getMessage).getOrElse("")).toSeq

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.types._
 
 /** The driver loop of the iterative graph operators, and the one place
   * their round materialisation is written down.
@@ -48,25 +50,62 @@ object Iterate {
 
   /** Connected-component labels by min-label propagation WITH pointer
     * jumping (Kiveris et al. 2014): each round every node takes the min
-    * label over itself and its neighbours, then labels compress by one
-    * join through themselves, so `rounds` rounds cover diameter ~2^rounds.
-    * `und` is the symmetric edge frame (w1, w2); `lbl` the initial
-    * (w, comp) frame, already materialised. Both half-steps are
-    * referenced twice, so both are checkpointed every round — two
-    * checkpoints per round is the minimal-recompute shape. Exactly
-    * `rounds` rounds run: callers pin the fixed-round trajectory. */
-  def minLabelJump(und: DataFrame, lbl: DataFrame, rounds: Int): DataFrame =
-    upTo(rounds, lbl) { l =>
-      val m = l.union(
-          und.join(l.select(col("w").as("w2"), col("comp")), "w2")
-            .select(col("w1").as("w"), col("comp")))
-        .groupBy("w").agg(min("comp").as("comp"))
-        .localCheckpoint(true)
-      val j = m.select(col("w").as("jw"), col("comp").as("jc"))
-      (m.join(j, m("comp") === col("jw"))
-        .select(m("w").as("w"), col("jc").as("comp"))
-        .localCheckpoint(true), false)
-    }
+    * label `m` over its own label and its labelled neighbours' labels,
+    * then labels compress by one jump through themselves, `m(m(w))`, so
+    * `rounds` rounds cover diameter ~2^rounds. `und` is the symmetric edge
+    * frame (w1, w2); `lbl` the initial (w, comp) frame. Exactly `rounds`
+    * rounds run: callers pin the fixed-round trajectory, not a fixpoint.
+    *
+    * The rounds are the relational ones (`m` = the labels union the edge
+    * join, min per node; the jump = `m` joined to itself on comp = w, so
+    * a node whose `m` has no `m` row drops out), run by one task over
+    * in-memory maps: both frames go to one partition, and the result is
+    * materialised once, since both callers read it twice. Keys are the
+    * column type's Spark values, ordered as Spark orders that type (UTF-8
+    * byte order for strings); nulls act as in the joins (a null w2 or
+    * comp matches nothing, min skips a null comp). Bound: the one task
+    * holds the edges plus three label tables of one entry per node. */
+  def minLabelJump(und: DataFrame, lbl: DataFrame, rounds: Int): DataFrame = {
+    val e = und.select("w1", "w2")
+    val l = lbl.select("w", "comp")
+    val dt = l.schema("comp").dataType
+    require((e.schema ++ l.schema).forall(_.dataType == dt) &&
+      Seq(StringType, LongType, IntegerType, ShortType, ByteType).contains(dt),
+      s"minLabelJump needs one string or integral key type, got ${e.schema} ${l.schema}")
+    val rows = (e.rdd.map(r => (true, r)) ++ l.rdd.map(r => (false, r)))
+      .coalesce(1).mapPartitions { it =>
+        val in = CatalystTypeConverters.createToCatalystConverter(dt)
+        val out = CatalystTypeConverters.createToScalaConverter(dt)
+        val (es, ls) = it.map { case (isEdge, r) => (isEdge, (in(r.get(0)), in(r.get(1)))) }
+          .toArray.partition(_._1)
+        jumpRounds(es.map(_._2), ls.map(_._2).toSeq, rounds,
+          TypeUtils.getInterpretedOrdering(dt))
+          .iterator.map { case (w, c) => Row(out(w), out(c)) }
+      }
+    lbl.sparkSession.createDataFrame(rows,
+      StructType(Seq(StructField("w", dt), StructField("comp", dt))))
+      .localCheckpoint(true)
+  }
+
+  /** [[minLabelJump]]'s rounds over (w, comp) pairs; after 0 rounds the
+    * pairs are returned as given. */
+  private def jumpRounds(edges: Array[(Any, Any)], labels: Seq[(Any, Any)],
+      rounds: Int, ord: Ordering[Any]): Seq[(Any, Any)] = {
+    // java.util.HashMap: a null w is a key of its own, as in a group-by
+    type Labels = java.util.HashMap[Any, Any]
+    def minInto(m: Labels, w: Any, c: Any): Unit =
+      if (!m.containsKey(w)) m.put(w, c)
+      else { val a = m.get(w); if (a == null || (c != null && ord.lt(c, a))) m.put(w, c) }
+    Iterator.iterate(labels) { lab =>
+      val own = new Labels
+      lab.foreach { case (w, c) => minInto(own, w, c) }
+      val m = new Labels(own)
+      edges.foreach { case (a, b) => if (b != null && own.containsKey(b)) minInto(m, a, own.get(b)) }
+      val next = Seq.newBuilder[(Any, Any)]
+      m.forEach((w, c) => if (c != null && m.containsKey(c)) next += (w -> m.get(c)))
+      next.result()
+    }.drop(rounds).next()
+  }
 
   /** localCheckpoint + CUT THE LAZY STATS LINEAGE. A checkpointed
     * Dataset's LogicalRDD keeps the ORIGINAL plan's sizeInBytes stats
@@ -77,10 +116,10 @@ object Iterate {
     * in SizeInBytesOnlyStatsPlanVisitor (observed: q_mst_boruvka >15 min
     * before this fix, all of it driver-side stats arithmetic). The RDD
     * round-trip re-wraps the SAME materialized partitions with fresh
-    * default stats — no recompute, constant-size estimates. The plain
-    * per-round kernel ([[minLabelJump]]) only doubles digits ONCE per
-    * round and stays fast without this; any query that SQUARES a
-    * checkpointed frame per step needs it. */
+    * default stats — no recompute, constant-size estimates. A loop that
+    * joins its state once per round only doubles digits ONCE per round
+    * and stays fast without this; any query that SQUARES a checkpointed
+    * frame per step needs it. */
   def ckptCut(df: DataFrame): DataFrame = {
     val m = df.localCheckpoint(true)
     m.sparkSession.createDataFrame(m.rdd, m.schema)

@@ -4783,12 +4783,11 @@ object Relational {
     // in the first week of 1995-03) — sparse by construction, hundreds
     // of small components (the co-purchase graph is one giant blob; a
     // CC query needs real components to say anything). The rounds are
-    // [[Iterate.minLabelJump]] (both half-steps checkpointed per round;
-    // the DuckDB oracle needs MATERIALIZED CTEs for the same reason).
-    // 8 jump rounds cover diameter ~2⁸; fixpoint-vs-brute-union-find is
-    // asserted in OperatorSpec. Scale: edges shuffle once on each
-    // endpoint per round, state is one row per node — the textbook
-    // 100 TB CC layout.
+    // [[Iterate.minLabelJump]]: one task runs all 8 in memory (the DuckDB
+    // oracle spells the same rounds as MATERIALIZED CTEs). 8 jump rounds
+    // cover diameter ~2⁸; fixpoint-vs-brute-union-find is asserted in
+    // OperatorSpec. Scale: the edges are built distributed; the rounds
+    // run in one task that holds the edges plus one label per node.
     "q_connected_components" -> { (s, dir) =>
       val e0 = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= ts("1995-03-01 00:00:00") &&
@@ -4798,15 +4797,9 @@ object Relational {
       val und = e0.union(
         e0.select(col("w2").as("w1"), col("w1").as("w2"))).distinct()
         .localCheckpoint(true)
-      // r19 measured negative result (kept as r18 built it): fusing the
-      // min-label + jump into one materialization and adding a fixpoint
-      // early-exit was TRIED and REVERTED — the sf0.1 graph only reaches
-      // fixpoint at round 7 of 8 (DuckDB trace: 838/877/21/41/2/6/0/0
-      // changed labels per round), so the exit saves ~1 round while the
-      // fused round recomputes the min frame twice and the compare adds a
-      // join: 68 → 79 jobs, 2.69 → 3.16 s. Two checkpoints per round is
-      // the minimal-recompute shape when both half-steps are referenced
-      // twice.
+      // The sf0.1 graph reaches its fixpoint only at round 7 of 8 (DuckDB
+      // trace: 838/877/21/41/2/6/0/0 changed labels per round), so the
+      // fixed 8 rounds stay; an early exit would save at most one round.
       val lbl = Iterate.minLabelJump(und, und.select(col("w1").as("w"))
         .distinct().select(col("w"), col("w").as("comp"))
         .localCheckpoint(true), 8)
@@ -5229,7 +5222,7 @@ object Relational {
     // 8-neighborhood — neighbor edges by the 9-OFFSET EQUI-join
     // (explode 8 offsets, join on shifted coords; the scale-correct
     // shape — no nested-loop over cells), then the q_connected_
-    // components pointer-jump kernel (8 checkpointed rounds). Sparse
+    // components pointer-jump kernel (8 rounds in one task). Sparse
     // cells are reported as noise mass. Scale: one point rollup; all
     // clustering on the ≤|cells| frame.
     "q_dbscan_grid" -> { (s, dir) =>
@@ -5261,11 +5254,10 @@ object Relational {
           col("w").as("w2")), Seq("nx", "ny"))
         .select("w1", "w2")
         .localCheckpoint(true)
-      // r19: fixpoint early-exit is NOT applicable here — the sf0.1 cell
+      // Fixpoint early-exit is NOT applicable here — the sf0.1 cell
       // chain has diameter right at the 2⁸ horizon (DuckDB trace: labels
       // still changing at round 8), so the declared output IS the 8-round
-      // trajectory, and any restructuring of the iteration would change
-      // results. Kept exactly as r18 built it.
+      // trajectory, not the components.
       val lbl = Iterate.minLabelJump(und,
         dense.select(col("w"), col("w").as("comp")).localCheckpoint(true), 8)
       val sz = lbl.groupBy("comp").agg(count(lit(1)).as("n_cells"))

@@ -10,10 +10,11 @@ import scala.jdk.CollectionConverters._
 import graft.Run
 
 /** Dev-time per-query timer and profile: `runMain graft.tools.QProf q1 q2 ...`
-  * runs each named SparkEntry query once warm, then SPARK_GRAFT_REPS
-  * (default 3) timed runs against SPARK_GRAFT_SF_DIR, and prints every run's
-  * seconds and their min — the tool for separating a real regression from
-  * machine contention (single-run numbers here carry ±30% noise).
+  * warms each named SparkEntry query (see [[warm]]), then runs it
+  * SPARK_GRAFT_REPS (default 3) timed times against SPARK_GRAFT_SF_DIR, and
+  * prints every run's seconds and their min — the tool for separating a
+  * real regression from machine contention (single-run numbers here carry
+  * ±30% noise).
   *
   * Every timed run's job count is printed, and the last run is profiled at
   * scheduler level: job, stage and task counts, sums of task run time / GC
@@ -29,7 +30,7 @@ object QProf {
     val profiler = new Profiler(spark)
 
     args.foreach { name =>
-      Run(spark, name, Run.sfDir).get // warm pass: JIT + codegen + staging
+      println(s"[qprof-warm] $name: ${warm(spark, name)} runs")
       val profiles = mutable.ArrayBuffer.empty[Profile]
       val times = Run.times(spark, name, Run.sfDir, reps)(r => profiles += profiler.await(r.tag))
       val p = profiles.last
@@ -54,6 +55,22 @@ object QProf {
     }
     spark.stop()
   }
+
+  /** Untimed runs of `name` until one is not faster than the run before
+    * it, at most [[MaxWarm]]; returns how many ran. One fixed warm run
+    * left the session's first query colder (JIT, codegen, staged tables)
+    * than the ones after it, so min-of-N depended on query order. */
+  def warm(spark: SparkSession, name: String): Int = {
+    @annotation.tailrec
+    def loop(prev: Double, n: Int): Int =
+      if (n == MaxWarm) n
+      else {
+        val t = Run(spark, name, Run.sfDir).get
+        if (t >= prev) n + 1 else loop(t, n + 1)
+      }
+    loop(Double.PositiveInfinity, 0)
+  }
+  private val MaxWarm = 5
 
   /** Scheduler numbers of one run: its jobs (by id: wall ns, call site), the
     * stages and tasks of those jobs, and its micro-batches' progress lines. */

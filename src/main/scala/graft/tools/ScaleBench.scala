@@ -66,7 +66,8 @@ object ScaleBench {
     "q_event_funnel", "q_markov_transitions", "q_association_rules",
     "q_ewma",
     // round-14 iterative-graph + pipeline additions: pointer-jump CC
-    // (per-round checkpointed frontiers — the Pregel shape), grid
+    // (distributed edge build, then 8 rounds in one task that holds the
+    // edges plus one label per node — its ×N bound), grid
     // DBSCAN (bounded cell table after one rollup), the asymmetric
     // delta→index LSH probe (work ∝ |delta|·bucket occupancy), and
     // ECOD (two level-histogram joins — must scale like the rollups)

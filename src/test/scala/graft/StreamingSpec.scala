@@ -101,38 +101,40 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val ev = Tables.load(spark, sfDir, "events")
     val total = ev.count()
     val root = java.nio.file.Files.createTempDirectory("graft-eo").toString
-    val src = s"$root/src"
-    ev.repartitionByRange(4, col("ts")).write.parquet(src)
-    val store = GraftBatchStore.fresh("eo-restart-test")
-    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
-    def start() = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .select("event_id", "user_id", "value")
-      .writeStream.option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val rows = batch.collect()
-        seen.put(id, rows)
-        store.applyBatch(id, rows, Seq(0))
-      }.start()
-    val q1 = start()
-    val deadline = System.currentTimeMillis() + 60000
-    while (store.batchesApplied == 0 && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    q1.stop(); q1.awaitTermination()
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    // exactly once across the restart: every row applied once, by count —
-    // a double-applied batch would make rowsApplied exceed the input
-    assert(store.size == total, s"distinct=${store.size} total=$total")
-    assert(store.rowsApplied.get == total,
-      s"rowsApplied=${store.rowsApplied.get} total=$total")
-    // simulated crash-retry: re-deliver a committed batch verbatim → no-op
-    val (someId, someRows) = {
-      val e = seen.entrySet().iterator().next(); (e.getKey, e.getValue)
-    }
-    store.applyBatch(someId, someRows, Seq(0))
-    assert(store.rowsApplied.get == total, "redelivered batch was re-applied")
-    assert(store.size == total)
+    try {
+      val src = s"$root/src"
+      ev.repartitionByRange(4, col("ts")).write.parquet(src)
+      val store = GraftBatchStore.fresh("eo-restart-test")
+      val seen = new java.util.concurrent.ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
+      def start() = spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .select("event_id", "user_id", "value")
+        .writeStream.option("checkpointLocation", s"$root/ckpt")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          val rows = batch.collect()
+          seen.put(id, rows)
+          store.applyBatch(id, rows, Seq(0))
+        }.start()
+      val q1 = start()
+      val deadline = System.currentTimeMillis() + 60000
+      while (store.batchesApplied == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      q1.stop(); q1.awaitTermination()
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      // exactly once across the restart: every row applied once, by count —
+      // a double-applied batch would make rowsApplied exceed the input
+      assert(store.size == total, s"distinct=${store.size} total=$total")
+      assert(store.rowsApplied.get == total,
+        s"rowsApplied=${store.rowsApplied.get} total=$total")
+      // simulated crash-retry: re-deliver a committed batch verbatim → no-op
+      val (someId, someRows) = {
+        val e = seen.entrySet().iterator().next(); (e.getKey, e.getValue)
+      }
+      store.applyBatch(someId, someRows, Seq(0))
+      assert(store.rowsApplied.get == total, "redelivered batch was re-applied")
+      assert(store.size == total)
+    } finally FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("streaming KV sink: full redelivery converges to the same state (LWW idempotence)") {
@@ -280,42 +282,44 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .option("table", name).mode("append").save()
     upsert(1L -> "a2", 4L -> "d") // commit 1
     val root = java.nio.file.Files.createTempDirectory("graft-kv-cdc").toString
-    def start() = spark.readStream.format("graft.sources.KVDataSource")
-      .option("table", name).option("cdc", "true").load()
-      .writeStream.format("parquet")
-      .option("path", s"$root/out")
-      .option("checkpointLocation", s"$root/chk").start()
-    val q1 = start()
-    try q1.processAllAvailable() finally { q1.stop(); q1.awaitTermination() }
-    val afterFirst = spark.read.parquet(s"$root/out").count()
-    assert(afterFirst == 5, s"snapshot(3) + commit1(2) expected, got $afterFirst")
-    // mutations while the consumer is DOWN — an upsert AND a delete (whose
-    // tombstone must flow through the log) — then resume from the checkpoint
-    upsert(2L -> "b2", 5L -> "e") // commit 2
-    val kvTable = new graft.sources.KVTable(name, KeyGroupedRegistry.get(name))
-    val delFilters: Array[org.apache.spark.sql.sources.Filter] =
-      Array(org.apache.spark.sql.sources.EqualTo("k", 3L))
-    assert(kvTable.canDeleteWhere(delFilters))
-    kvTable.deleteWhere(delFilters) // commit 3: tombstone for k=3
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val out = spark.read.parquet(s"$root/out")
-    // exactly-once per commit across the restart: only the new commits' rows
-    // were appended (2 upserts + 1 tombstone), nothing re-delivered
-    assert(out.count() == 8, s"rows=${out.count()}")
-    assert(out.filter(col("_tombstone")).count() == 1)
-    // folding the log by latest commit per key — tombstoned keys dropped —
-    // reproduces the batch table
-    val latest = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy(col("_commit_seq").desc)
-    val folded = out.withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1).filter(!col("_tombstone")).select("k", "v")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val table = spark.read.format("graft.sources.KVDataSource")
-      .option("table", name).load()
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(folded == table, s"folded=$folded table=$table")
-    assert(folded == Map(1L -> "a2", 2L -> "b2", 4L -> "d", 5L -> "e"))
+    try {
+      def start() = spark.readStream.format("graft.sources.KVDataSource")
+        .option("table", name).option("cdc", "true").load()
+        .writeStream.format("parquet")
+        .option("path", s"$root/out")
+        .option("checkpointLocation", s"$root/chk").start()
+      val q1 = start()
+      try q1.processAllAvailable() finally { q1.stop(); q1.awaitTermination() }
+      val afterFirst = spark.read.parquet(s"$root/out").count()
+      assert(afterFirst == 5, s"snapshot(3) + commit1(2) expected, got $afterFirst")
+      // mutations while the consumer is DOWN — an upsert AND a delete (whose
+      // tombstone must flow through the log) — then resume from the checkpoint
+      upsert(2L -> "b2", 5L -> "e") // commit 2
+      val kvTable = new graft.sources.KVTable(name, KeyGroupedRegistry.get(name))
+      val delFilters: Array[org.apache.spark.sql.sources.Filter] =
+        Array(org.apache.spark.sql.sources.EqualTo("k", 3L))
+      assert(kvTable.canDeleteWhere(delFilters))
+      kvTable.deleteWhere(delFilters) // commit 3: tombstone for k=3
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      val out = spark.read.parquet(s"$root/out")
+      // exactly-once per commit across the restart: only the new commits' rows
+      // were appended (2 upserts + 1 tombstone), nothing re-delivered
+      assert(out.count() == 8, s"rows=${out.count()}")
+      assert(out.filter(col("_tombstone")).count() == 1)
+      // folding the log by latest commit per key — tombstoned keys dropped —
+      // reproduces the batch table
+      val latest = org.apache.spark.sql.expressions.Window
+        .partitionBy("k").orderBy(col("_commit_seq").desc)
+      val folded = out.withColumn("rn", row_number().over(latest))
+        .filter(col("rn") === 1).filter(!col("_tombstone")).select("k", "v")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val table = spark.read.format("graft.sources.KVDataSource")
+        .option("table", name).load()
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(folded == table, s"folded=$folded table=$table")
+      assert(folded == Map(1L -> "a2", 2L -> "b2", 4L -> "d", 5L -> "e"))
+    } finally FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("KV CDC stream stays consistent across a mid-stream ring bootstrap") {
@@ -372,6 +376,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally {
       q.stop(); q.awaitTermination()
       KVRing.resetTopology()
+      FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
 
@@ -432,6 +437,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally {
       q.stop(); q.awaitTermination()
       KVRing.resetTopology()
+      FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
 
@@ -448,31 +454,33 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     upsert(1L -> "a", 2L -> "b") // commit 1
     upsert(1L -> "a2", 4L -> "d") // commit 2
     val root = java.nio.file.Files.createTempDirectory("graft-cat-cdc").toString
-    def start() = spark.readStream.table("graftcat.proptest.cdcr__cdc")
-      .writeStream.format("parquet")
-      .option("path", s"$root/out")
-      .option("checkpointLocation", s"$root/chk").start()
-    val q1 = start()
-    try q1.processAllAvailable() finally { q1.stop(); q1.awaitTermination() }
-    assert(spark.read.parquet(s"$root/out").count() == 4)
-    // mutations while the consumer is DOWN, including a tombstone batch
-    upsert(2L -> "b2", 5L -> "e") // commit 3
-    spark.sql("DELETE FROM graftcat.proptest.cdcr WHERE k = 4") // commit 4
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val out = spark.read.parquet(s"$root/out")
-    // exactly-once per commit across the restart
-    assert(out.count() == 7, s"rows=${out.count()}")
-    assert(out.filter(col("_tombstone")).count() == 1)
-    val latest = org.apache.spark.sql.expressions.Window
-      .partitionBy("k").orderBy(col("_commit_seq").desc)
-    val folded = out.withColumn("rn", row_number().over(latest))
-      .filter(col("rn") === 1).filter(!col("_tombstone")).select("k", "v")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val table = spark.table("graftcat.proptest.cdcr")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(folded == table, s"folded=$folded table=$table")
-    assert(folded == Map(1L -> "a2", 2L -> "b2", 5L -> "e"))
+    try {
+      def start() = spark.readStream.table("graftcat.proptest.cdcr__cdc")
+        .writeStream.format("parquet")
+        .option("path", s"$root/out")
+        .option("checkpointLocation", s"$root/chk").start()
+      val q1 = start()
+      try q1.processAllAvailable() finally { q1.stop(); q1.awaitTermination() }
+      assert(spark.read.parquet(s"$root/out").count() == 4)
+      // mutations while the consumer is DOWN, including a tombstone batch
+      upsert(2L -> "b2", 5L -> "e") // commit 3
+      spark.sql("DELETE FROM graftcat.proptest.cdcr WHERE k = 4") // commit 4
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      val out = spark.read.parquet(s"$root/out")
+      // exactly-once per commit across the restart
+      assert(out.count() == 7, s"rows=${out.count()}")
+      assert(out.filter(col("_tombstone")).count() == 1)
+      val latest = org.apache.spark.sql.expressions.Window
+        .partitionBy("k").orderBy(col("_commit_seq").desc)
+      val folded = out.withColumn("rn", row_number().over(latest))
+        .filter(col("rn") === 1).filter(!col("_tombstone")).select("k", "v")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val table = spark.table("graftcat.proptest.cdcr")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(folded == table, s"folded=$folded table=$table")
+      assert(folded == Map(1L -> "a2", 2L -> "b2", 5L -> "e"))
+    } finally FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("restart from checkpoint resumes into the file sink exactly once") {
@@ -484,27 +492,29 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val ev = Tables.load(spark, sfDir, "events")
     val total = ev.count()
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val (src, sink, ckpt) = (s"$root/src", s"$root/sink", s"$root/ckpt")
-    ev.repartitionByRange(4, col("ts")).write.parquet(src)
-    def start() = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .select("event_id", "user_id", "value")
-      .writeStream.format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt).start()
-    val q1 = start()
-    val deadline = System.currentTimeMillis() + 60000
-    // stop as soon as at least one batch has committed — mid-backlog
-    while (q1.recentProgress.map(_.numInputRows).sum == 0
-        && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    q1.stop(); q1.awaitTermination()
-    val afterFirst = spark.read.parquet(sink).count()
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    // exactly-once: every event_id present exactly once (manifest-committed
-    // files only), regardless of where the first run died
-    val out = spark.read.parquet(sink)
-    assert(out.count() == total, s"rows=${out.count()} total=$total afterFirst=$afterFirst")
-    assert(out.select("event_id").distinct().count() == total)
+    try {
+      val (src, sink, ckpt) = (s"$root/src", s"$root/sink", s"$root/ckpt")
+      ev.repartitionByRange(4, col("ts")).write.parquet(src)
+      def start() = spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .select("event_id", "user_id", "value")
+        .writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt).start()
+      val q1 = start()
+      val deadline = System.currentTimeMillis() + 60000
+      // stop as soon as at least one batch has committed — mid-backlog
+      while (q1.recentProgress.map(_.numInputRows).sum == 0
+          && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      q1.stop(); q1.awaitTermination()
+      val afterFirst = spark.read.parquet(sink).count()
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      // exactly-once: every event_id present exactly once (manifest-committed
+      // files only), regardless of where the first run died
+      val out = spark.read.parquet(sink)
+      assert(out.count() == total, s"rows=${out.count()} total=$total afterFirst=$afterFirst")
+      assert(out.select("event_id").distinct().count() == total)
+    } finally FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("chained stateful ops: dedup feeds the window agg inside ONE query") {

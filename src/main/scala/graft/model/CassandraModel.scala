@@ -62,12 +62,6 @@ object CassandraModel {
   def ensureKeyspace(spark: SparkSession): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $Keyspace").collect()
 
-  /** Register `users` + `system_local` so SQL entry points (O9/O10) work. */
-  def registerViews(spark: SparkSession): Unit = {
-    users(spark).createOrReplaceTempView("users")
-    systemLocal(spark).createOrReplaceTempView("system_local")
-  }
-
   /** `SELECT release_version FROM system.local` analog (O10). */
   def systemLocal(spark: SparkSession): DataFrame =
     spark.createDataFrame(

@@ -60,7 +60,8 @@ object Iterate {
     * join, min per node; the jump = `m` joined to itself on comp = w, so
     * a node whose `m` has no `m` row drops out), run by one task over
     * in-memory maps: both frames go to one partition, and the result is
-    * materialised once, since both callers read it twice. Keys are the
+    * materialised once, since both callers read it twice. Each input is
+    * read once, by that task, so callers need not materialise it. Keys are the
     * column type's Spark values, ordered as Spark orders that type (UTF-8
     * byte order for strings); nulls act as in the joins (a null w2 or
     * comp matches nothing, min skips a null comp). Bound: the one task

@@ -250,6 +250,51 @@ object Pipeline {
     }
   }
 
+  /** Distinct portable hashes of word array `w`'s 5-gram shingles, as SQL
+    * text (the contamination family's shingle set). */
+  private[graft] def shingleHashes: String =
+    s"array_distinct(transform(${ngramExpr(5)}, g -> ${hExpr("g")}))"
+
+  /** Shared contamination benchmark (q_corpus_pipeline +
+    * q_stream_corpus_pipeline — one benchmark, so the batch and stream
+    * decontaminate against the same set): the [[shingleHashes]] of the
+    * doc_id % 50 == 0 documents of `docs` with at least 5 words, as the
+    * one-row set `bset`. */
+  private[graft] def contamBench(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 50 === 0)
+      .withColumn("w", split(col("text"), " "))
+      .filter(size(col("w")) >= 5)
+      .select(explode(expr(shingleHashes)).as("sh")).distinct()
+      .agg(collect_set(col("sh")).as("bset"))
+
+  /** Shared per-document word stats (q_corpus_pipeline, q_gopher_rules,
+    * q_stream_corpus_pipeline — one tokenizer, so every quality gate
+    * reads the same counts): over word array `w`, the word count `n`
+    * (BIGINT), total `chars`, words with a letter `alpha`, symbol words
+    * `sym` and stop words `stop`. */
+  private[graft] def wordStats(d: DataFrame, n: String): DataFrame =
+    d.withColumn(n, size(col("w")).cast("long"))
+      .withColumn("chars",
+        expr("aggregate(w, 0L, (a, x) -> a + length(x))"))
+      .withColumn("alpha",
+        expr("CAST(size(filter(w, x -> x rlike '[a-z]')) AS BIGINT)"))
+      .withColumn("sym", expr(
+        "CAST(size(filter(w, x -> x IN ('#', '...'))) AS BIGINT)"))
+      .withColumn("stop", expr(
+        "CAST(size(filter(w, x -> x IN ('the','be','to','of','and'," +
+          "'that','have','with'))) AS BIGINT)"))
+
+  /** The Gopher quality gate over [[wordStats]] with word count `n`:
+    * 20–1000 words, mean word length 3–10, at most 10% symbol words, at
+    * least 80% words with a letter, and at least 2 stop words. */
+  private[graft] def gopherPass(n: String): Column =
+    col(n) >= 20L && col(n) <= 1000L &&
+      col("chars") >= lit(3L) * col(n) &&
+      col("chars") <= lit(10L) * col(n) &&
+      lit(10L) * col("sym") <= col(n) &&
+      lit(10L) * col("alpha") >= lit(8L) * col(n) &&
+      col("stop") >= 2L
+
   /** Shared capped word graph for the graph-analytics family
     * (q_recursive_hierarchy, q_triangle_count — same cap discipline as
     * q_textrank's graph): vocab = top-V corpus tokens with counts,
@@ -610,6 +655,46 @@ object Pipeline {
       .select(nodes("w"), coalesce(col("s"), lit(0L)).as("s"))
       .withColumn("t", sum("s").over(gw))
       .select(col("w"), expr(s"(s * ${HitsScale}L) div t").as("v"))
+  }
+
+  /** Shared postings gaps (q_postings_size + q_elias_fano — one gap
+    * list, so both codecs size the same postings): the distinct
+    * (doc_id, w) postings of the 16 highest-df words, each with its
+    * d-gap `gap` to the word's previous doc_id (the first gap is the
+    * doc_id) and the gap's varint width `vbytes`. */
+  private[graft] def postingGaps(s: SparkSession, dir: String): DataFrame = {
+    val postings = docsPar(s, dir)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .distinct()
+    val top = postings.groupBy("w").agg(count(lit(1)).as("dfc"))
+      .orderBy(col("dfc").desc, col("w").asc).limit(16)
+    val wnd = Window.partitionBy("w").orderBy("doc_id")
+    postings.join(broadcast(top.select("w")), "w")
+      .withColumn("prev", lag("doc_id", 1).over(wnd))
+      .withColumn("gap", when(col("prev").isNull, col("doc_id"))
+        .otherwise(col("doc_id") - col("prev")))
+      .withColumn("vbytes",
+        when(col("gap") < 128L, 1L)
+          .when(col("gap") < 16384L, 2L)
+          .when(col("gap") < 2097152L, 3L)
+          .when(col("gap") < 268435456L, 4L)
+          .otherwise(5L))
+  }
+
+  /** Shared trigram prefilter (q_trigram_search + q_regex_search): the
+    * rows of `d` (doc_id, text) whose text holds every trigram of
+    * `qTris` — the candidate set the exact match then verifies. */
+  private[graft] def trigramCandidates(d: DataFrame, qTris: Seq[String])
+      : DataFrame = {
+    val cand = d.filter(length(col("text")) >= 3)
+      .select(col("doc_id"), explode(expr(
+        "array_distinct(transform(sequence(1, length(text) - 2), " +
+          "i -> substring(text, i, 3)))")).as("g"))
+      .filter(col("g").isin(qTris: _*))
+      .groupBy("doc_id").agg(count(lit(1)).as("nq"))
+      .filter(col("nq") === qTris.size)
+      .select("doc_id")
+    d.join(cand, Seq("doc_id"), "left_semi")
   }
 
   // Skew guard shared by every LSH-style candidate generator: a band/block
@@ -1018,22 +1103,7 @@ object Pipeline {
     // rollup; df-skewed terms are exactly the segments a real index
     // shards, and nothing here is corpus-quadratic.
     "q_postings_size" -> { (s, dir) =>
-      val postings = docsPar(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .distinct()
-      val top = postings.groupBy("w").agg(count(lit(1)).as("dfc"))
-        .orderBy(col("dfc").desc, col("w").asc).limit(16)
-      val wnd = Window.partitionBy("w").orderBy("doc_id")
-      postings.join(broadcast(top.select("w")), "w")
-        .withColumn("prev", lag("doc_id", 1).over(wnd))
-        .withColumn("gap", when(col("prev").isNull, col("doc_id"))
-          .otherwise(col("doc_id") - col("prev")))
-        .withColumn("vbytes",
-          when(col("gap") < 128L, 1L)
-            .when(col("gap") < 16384L, 2L)
-            .when(col("gap") < 2097152L, 3L)
-            .when(col("gap") < 268435456L, 4L)
-            .otherwise(5L))
+      postingGaps(s, dir)
         .groupBy("w")
         .agg(count(lit(1)).as("df"),
           sum("vbytes").as("varint_bytes"),
@@ -1687,15 +1757,7 @@ object Pipeline {
       val q = term.substring(1, 5)
       val qEsc = q.replace("'", "''")
       val qTris = q.sliding(3).toSeq.distinct
-      val cand = d.filter(length(col("text")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          "array_distinct(transform(sequence(1, length(text) - 2), " +
-            "i -> substring(text, i, 3)))")).as("g"))
-        .filter(col("g").isin(qTris: _*))
-        .groupBy("doc_id").agg(count(lit(1)).as("nq"))
-        .filter(col("nq") === qTris.size)
-        .select("doc_id")
-      d.join(cand, Seq("doc_id"), "left_semi")
+      trigramCandidates(d, qTris)
         .filter(col("text").contains(q))
         .select(col("doc_id"),
           expr(s"cast((length(text) - length(replace(text, '$qEsc', ''))) " +
@@ -1730,15 +1792,7 @@ object Pipeline {
       val (a, b) = (term.substring(0, 4), term.substring(term.length - 4))
       val pat = s"$a[^ ]*$b"
       val qTris = (a.sliding(3) ++ b.sliding(3)).toSeq.distinct
-      val cand = d.filter(length(col("text")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          "array_distinct(transform(sequence(1, length(text) - 2), " +
-            "i -> substring(text, i, 3)))")).as("g"))
-        .filter(col("g").isin(qTris: _*))
-        .groupBy("doc_id").agg(count(lit(1)).as("nq"))
-        .filter(col("nq") === qTris.size)
-        .select("doc_id")
-      d.join(cand, Seq("doc_id"), "left_semi")
+      trigramCandidates(d, qTris)
         .filter(col("text").rlike(pat))
         .select(col("doc_id"),
           regexp_extract(col("text"), pat, 0).as("hit"))
@@ -2503,7 +2557,7 @@ object Pipeline {
         .withColumn("w", split(col("text"), " "))
         .filter(size(col("w")) >= 5)
         .select(col("doc_id"), explode(expr(
-          s"array_distinct(transform(${ngramExpr(5)}, g -> ${hExpr("g")}))")).as("sh"))
+          shingleHashes)).as("sh"))
       val bench = sh.filter(col("doc_id") % 50 === 0)
         .select(col("sh")).distinct().withColumn("hit", lit(1))
       sh.filter(col("doc_id") % 50 =!= 0)
@@ -3112,34 +3166,12 @@ object Pipeline {
     // anyway). Windows/joins shuffle on content keys and language — all
     // key-partitioned, nothing corpus-sized ever single-partitions.
     "q_corpus_pipeline" -> { (s, dir) =>
-      val shingles =
-        s"array_distinct(transform(${ngramExpr(5)}, g -> ${hExpr("g")}))"
-      val bench = docsPar(s, dir).filter(col("doc_id") % 50 === 0)
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 5)
-        .select(explode(expr(shingles)).as("sh")).distinct()
-        .agg(collect_set(col("sh")).as("bset"))
+      val bench = contamBench(docsPar(s, dir))
       val wCk = Window.partitionBy("ckey")
       val wFp = Window.partitionBy("fp")
-      val spine0 = docsPar(s, dir).filter(col("doc_id") % 50 =!= 0)
-        .withColumn("w", split(col("text"), " "))
-        .withColumn("tok", size(col("w")).cast("long"))
-        .withColumn("chars",
-          expr("aggregate(w, 0L, (a, x) -> a + length(x))"))
-        .withColumn("alpha",
-          expr("CAST(size(filter(w, x -> x rlike '[a-z]')) AS BIGINT)"))
-        .withColumn("sym", expr(
-          "CAST(size(filter(w, x -> x IN ('#', '...'))) AS BIGINT)"))
-        .withColumn("stop", expr(
-          "CAST(size(filter(w, x -> x IN ('the','be','to','of','and'," +
-            "'that','have','with'))) AS BIGINT)"))
-        .withColumn("qk",
-          col("tok") >= 20L && col("tok") <= 1000L &&
-            col("chars") >= lit(3L) * col("tok") &&
-            col("chars") <= lit(10L) * col("tok") &&
-            lit(10L) * col("sym") <= col("tok") &&
-            lit(10L) * col("alpha") >= lit(8L) * col("tok") &&
-            col("stop") >= 2L)
+      val spine0 = wordStats(docsPar(s, dir).filter(col("doc_id") % 50 =!= 0)
+          .withColumn("w", split(col("text"), " ")), "tok")
+        .withColumn("qk", gopherPass("tok"))
         .withColumn("ckey",
           md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
         .withColumn("fp", md5(expr("array_join(slice(w, 1, 8), ' ')")))
@@ -3148,7 +3180,7 @@ object Pipeline {
         .withColumn("nk", col("ek") &&
           col("doc_id") === min(when(col("ek"), col("doc_id"))).over(wFp))
         .withColumn("sh_arr", expr(
-          s"CASE WHEN size(w) >= 5 THEN $shingles END"))
+          s"CASE WHEN size(w) >= 5 THEN $shingleHashes END"))
         .crossJoin(broadcast(bench))
         .withColumn("ck", col("nk") &&
           !coalesce(arrays_overlap(col("sh_arr"), col("bset")), lit(false)))
@@ -4447,18 +4479,8 @@ object Pipeline {
     // single row. At 100 TB this is the cheapest possible filter: pure
     // per-row expressions inside the scan, one 1-row agg.
     "q_gopher_rules" -> { (s, dir) =>
-      val d = docsPar(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .withColumn("n", size(col("w")).cast("long"))
-        .withColumn("chars",
-          expr("aggregate(w, 0L, (a, x) -> a + length(x))"))
-        .withColumn("alpha",
-          expr("CAST(size(filter(w, x -> x rlike '[a-z]')) AS BIGINT)"))
-        .withColumn("sym", expr(
-          "CAST(size(filter(w, x -> x IN ('#', '...'))) AS BIGINT)"))
-        .withColumn("stop", expr(
-          "CAST(size(filter(w, x -> x IN ('the','be','to','of','and'," +
-            "'that','have','with'))) AS BIGINT)"))
+      val d = wordStats(docsPar(s, dir)
+          .select(col("doc_id"), split(col("text"), " ").as("w")), "n")
         .withColumn("r_wc", col("n") >= 20L && col("n") <= 1000L)
         .withColumn("r_mwl",
           col("chars") >= lit(3L) * col("n") &&
@@ -4566,23 +4588,8 @@ object Pipeline {
     // shuffle (same as E68); the sizing is a ≤16-row readout; at 100 TB
     // the per-list ℓ recomputes per partition range exactly the same way.
     "q_elias_fano" -> { (s, dir) =>
-      val postings = docsPar(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .distinct()
-      val top = postings.groupBy("w").agg(count(lit(1)).as("dfc"))
-        .orderBy(col("dfc").desc, col("w").asc).limit(16)
       val uni = docsPar(s, dir).agg((max("doc_id") + 1L).as("u"))
-      val wnd = Window.partitionBy("w").orderBy("doc_id")
-      postings.join(broadcast(top.select("w")), "w")
-        .withColumn("prev", lag("doc_id", 1).over(wnd))
-        .withColumn("gap", when(col("prev").isNull, col("doc_id"))
-          .otherwise(col("doc_id") - col("prev")))
-        .withColumn("vbytes",
-          when(col("gap") < 128L, 1L)
-            .when(col("gap") < 16384L, 2L)
-            .when(col("gap") < 2097152L, 3L)
-            .when(col("gap") < 268435456L, 4L)
-            .otherwise(5L))
+      postingGaps(s, dir)
         .groupBy("w")
         .agg(count(lit(1)).as("df"), sum("vbytes").as("varint_bytes"))
         .crossJoin(broadcast(uni))

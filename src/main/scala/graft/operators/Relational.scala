@@ -53,30 +53,56 @@ object Relational {
   private def factor(c: Column): Column = c.cast(DecimalType(6, 2))
   private def ts(s: String): Column = lit(java.sql.Timestamp.valueOf(s))
 
-  /** Shared two-cohort survival risk-set derivation (q_logrank_test +
-    * q_cox_regression — one derivation, two consumers, so the test and
-    * the model can never disagree on a risk set): q_kaplan_meier's
-    * duration rule (first event → first subsequent purchase, censored
-    * at obs end), cohort g = user_id parity, per-duration-day event /
-    * censor counts per cohort, at-risk counts from INTEGER window
-    * cumsums. Returns (risk(dur, d0, d1, n0, n1), tot(tn0, tn1)). */
-  private def survivalRisk(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val ev = t(s, dir, "events")
-    val obsEnd = ev.agg(max("ts").as("obs_end"))
-    val t0 = ev.groupBy("user_id").agg(min("ts").as("t0"))
-    val firstP = ev.filter(col("event_type") === "purchase")
+  /** Shared survival duration rule (the life table of q_kaplan_meier,
+    * q_nelson_aalen and q_rmst, and [[survivalRisk]]'s cohorts): one row
+    * per user, `lead` columns first, then `ev` = 1 when a purchase
+    * follows the user's first event and `dur` = whole days from the first
+    * event to that purchase, censored at the stream's end. */
+  private[graft] def survivalUsers(s: SparkSession, dir: String, ev: String,
+      lead: Column*): DataFrame = {
+    val events = t(s, dir, "events")
+    val obsEnd = events.agg(max("ts").as("obs_end"))
+    val t0 = events.groupBy("user_id").agg(min("ts").as("t0"))
+    val firstP = events.filter(col("event_type") === "purchase")
       .join(t0, "user_id").filter(col("ts") > col("t0"))
       .groupBy("user_id").agg(min("ts").as("tp"))
-    val users = t0.join(firstP, Seq("user_id"), "left")
+    t0.join(firstP, Seq("user_id"), "left")
       .crossJoin(broadcast(obsEnd))
-      .select((col("user_id") % 2).as("g"),
-        when(col("tp").isNotNull, 1L).otherwise(0L).as("ev"),
+      .select(lead ++ Seq(
+        when(col("tp").isNotNull, 1L).otherwise(0L).as(ev),
         when(col("tp").isNotNull,
           expr("(unix_micros(tp) - unix_micros(t0)) div 86400000000"))
           .otherwise(expr(
             "(unix_micros(obs_end) - unix_micros(t0)) div 86400000000"))
-          .as("dur"))
+          .as("dur")): _*)
+  }
+
+  /** Shared KM life table (q_kaplan_meier, q_nelson_aalen, q_rmst — one
+    * table, three estimators): per duration day `d` events and `c`
+    * censors, `n_total` users and `n_risk` from an INTEGER cumsum over
+    * the earlier days (deaths at t precede censors at t). */
+  private[graft] def lifeTable(s: SparkSession, dir: String): DataFrame = {
+    val users = survivalUsers(s, dir, "ev_flag")
+    val byDur = users.groupBy("dur").agg(
+      sum("ev_flag").as("d"),
+      sum(lit(1L) - col("ev_flag")).as("c"))
+    val total = users.agg(count(lit(1)).as("n_total"))
+    val wz = Window.orderBy("dur")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    byDur.crossJoin(broadcast(total))
+      .withColumn("n_risk", col("n_total") -
+        coalesce(sum(col("d") + col("c")).over(wz), lit(0L)))
+  }
+
+  /** Shared two-cohort survival risk-set derivation (q_logrank_test +
+    * q_cox_regression — one derivation, two consumers, so the test and
+    * the model can never disagree on a risk set): [[survivalUsers]]'
+    * duration rule, cohort g = user_id parity, per-duration-day event /
+    * censor counts per cohort, at-risk counts from INTEGER window
+    * cumsums. Returns (risk(dur, d0, d1, n0, n1), tot(tn0, tn1)). */
+  private def survivalRisk(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val users = survivalUsers(s, dir, "ev", (col("user_id") % 2).as("g"))
     val tot = users.agg(
       sum(when(col("g") === 0L, 1L).otherwise(0L)).as("tn0"),
       sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tn1"))
@@ -98,6 +124,173 @@ object Relational {
         coalesce(sum(col("d1") + col("c1")).over(wz), lit(0L)))
       .select("dur", "d0", "d1", "n0", "n1")
     (risk, tot)
+  }
+
+  /** Shared one-pass moment table of lineitem's four measures
+    * (q_pearson_corr + q_pca_power — one table, so the correlations and
+    * the covariance never read different sums): quantity, price cents
+    * and discount/tax percent points as exact BIGINTs q, p, d, x, then
+    * one row of n, the 4 sums s<a> and the 10 product sums s<ab> (cents²
+    * in DECIMAL(37,0), which BIGINT overflows at sf0.1). */
+  private[graft] def lineitemMoments(s: SparkSession, dir: String)
+      : DataFrame = {
+    val li = t(s, dir, "lineitem").select(
+      col("l_quantity").cast(LongType).as("q"),
+      (money(col("l_extendedprice")) * 100).cast(LongType).as("p"),
+      (col("l_discount").cast(DecimalType(6, 2)) * 100).cast(LongType)
+        .as("d"),
+      (col("l_tax").cast(DecimalType(6, 2)) * 100).cast(LongType)
+        .as("x"))
+    li.agg(
+      count(lit(1)).as("n"),
+      sum("q").as("sq"), sum("p").as("sp"),
+      sum("d").as("sd"), sum("x").as("sx"),
+      sum(col("q") * col("q")).as("sqq"),
+      sum(col("p").cast(DecimalType(18, 0)) *
+        col("p").cast(DecimalType(18, 0))).as("spp"),
+      sum(col("d") * col("d")).as("sdd"),
+      sum(col("x") * col("x")).as("sxx"),
+      sum(col("q") * col("p")).as("sqp"),
+      sum(col("q") * col("d")).as("sqd"),
+      sum(col("q") * col("x")).as("sqx"),
+      sum(col("p") * col("d")).as("spd"),
+      sum(col("p") * col("x")).as("spx"),
+      sum(col("d") * col("x")).as("sdx"))
+  }
+
+  /** Left fold `Σ term` over the sorted struct list `l`, element `p`: the
+    * sum runs in list order, never shuffle order, so it is bit-equal to
+    * the oracle's identical `list_reduce` (the q_token_entropy rule). */
+  private[graft] def fold(term: String): String =
+    s"aggregate(l, 0D, (a, p) -> a + ($term))"
+
+  /** σ(b0 + b1·x) for histogram element `p`, as SQL text. */
+  private[graft] val logitSig =
+    "1.0D / (1.0D + exp(-(b0 + b1 * CAST(p.x AS DOUBLE))))"
+
+  /** Shared logistic fit (q_logistic_newton + q_ipw_estimator — one
+    * Newton step, so the GLM and the propensity model never diverge):
+    * from b0 = b1 = 0, three Newton–Raphson steps over the x-sorted
+    * struct list `l` of (x, n, k) histogram cells, each five [[fold]]s
+    * (gradient, Hessian) and a closed-form 2×2 solve, unrolled into one
+    * lazy plan on the one-row `hist`. Returns `keep`, b0 and b1. */
+  private[graft] def logisticNewton(hist: DataFrame, keep: String*)
+      : DataFrame = {
+    val sig = logitSig
+    def step(d: DataFrame): DataFrame = d
+      .withColumn("g1", expr(fold(s"CAST(p.k AS DOUBLE) - p.n * $sig")))
+      .withColumn("g2", expr(fold(
+        s"(CAST(p.k AS DOUBLE) - p.n * $sig) * p.x")))
+      .withColumn("h11", expr(fold(s"p.n * $sig * (1.0D - $sig)")))
+      .withColumn("h12", expr(fold(
+        s"p.n * $sig * (1.0D - $sig) * p.x")))
+      .withColumn("h22", expr(fold(
+        s"p.n * $sig * (1.0D - $sig) * p.x * p.x")))
+      .withColumn("det", expr("h11 * h22 - h12 * h12"))
+      .select(keep.map(col) ++ Seq(
+        expr("b0 + (h22 * g1 - h12 * g2) / det").as("b0"),
+        expr("b1 + (h11 * g2 - h12 * g1) / det").as("b1")): _*)
+    (1 to 3).foldLeft(
+      hist.withColumn("b0", lit(0.0)).withColumn("b1", lit(0.0)))(
+      (d, _) => step(d))
+  }
+
+  /** Shared Shapley coalition mask (q_shapley_attribution +
+    * q_shapley_sampled — one game, so the sampled estimate is checked
+    * against the same exact values): per user, `mask` has bit 1/2/4/8
+    * set when the user had a click/view/signup/error event, and `conv`
+    * is 1 when the user purchased. */
+  private[graft] def shapleyUsers(s: SparkSession, dir: String)
+      : DataFrame =
+    t(s, dir, "events").groupBy("user_id").agg(
+      (max(when(col("event_type") === "click", 1L).otherwise(0L)) +
+        max(when(col("event_type") === "view", 2L).otherwise(0L)) +
+        max(when(col("event_type") === "signup", 4L).otherwise(0L)) +
+        max(when(col("event_type") === "error", 8L).otherwise(0L)))
+        .as("mask"),
+      max(when(col("event_type") === "purchase", 1L).otherwise(0L))
+        .as("conv"))
+
+  /** Coalition value v(st): the conversions `cv` of every mask that is a
+    * subset of coalition `st`, over the per-mask rollup `mc`. */
+  private[graft] def coalitionValues(sts: DataFrame, mc: DataFrame)
+      : DataFrame =
+    sts.join(broadcast(mc), expr("(mask & st) = mask"), "left")
+      .groupBy("st").agg(coalesce(sum("cv"), lit(0L)).as("v"))
+
+  /** Shared per-customer revenue ranking (q_gini + q_trimmed_mean): each
+    * customer's order total in exact BIGINT cents `rev`, its 1-based rank
+    * `r` by (rev, o_custkey), and the broadcast totals `n` customers and
+    * `s1` cents on every row. */
+  private[graft] def rankedRevenue(s: SparkSession, dir: String)
+      : DataFrame = {
+    val perCust = t(s, dir, "orders")
+      .groupBy("o_custkey")
+      .agg((sum(money(col("o_totalprice"))) * 100).cast(LongType)
+        .as("rev"))
+    val tot = perCust.agg(count(lit(1)).as("n"), sum("rev").as("s1"))
+    perCust
+      .withColumn("r",
+        row_number().over(Window.orderBy(col("rev"), col("o_custkey"))))
+      .crossJoin(broadcast(tot))
+  }
+
+  /** Shared daily event series (q_acf + q_yule_walker): one row holding
+    * the day-sorted event counts as DOUBLE `vals`, their count `n`, mean
+    * `m`, and `ss` = Σ(x − m)², every sum a left fold in day order. */
+  private[graft] def dailySeries(s: SparkSession, dir: String, ss: String)
+      : DataFrame =
+    t(s, dir, "events")
+      .groupBy(col("ts").cast(DateType).as("day"))
+      .agg(count(lit(1)).as("x"))
+      .agg(sort_array(collect_list(struct(col("day"), col("x")))).as("l"))
+      .withColumn("vals", expr("transform(l, e -> CAST(e.x AS DOUBLE))"))
+      .withColumn("n", size(col("vals")))
+      .withColumn("m", expr(
+        "aggregate(vals, 0.0D, (a, x) -> a + x) / CAST(n AS DOUBLE)"))
+      .withColumn(ss, expr("aggregate(transform(vals, " +
+        "x -> (x - m) * (x - m)), 0.0D, (a, x) -> a + x)"))
+
+  /** Shared CUSUM readout (q_cusum_changepoint + q_stream_cusum — one
+    * readout, so the stream flags exactly the periods the batch replay
+    * flags): over a series of (`key`, count x), μ and σ from exact sums
+    * (rounded to 6 dp), slack kk = 0.5σ and threshold hh = 4σ, then per
+    * period the two-sided CUSUM as slice-prefix greatest-folds over the
+    * key-sorted list, ordered by `key`. */
+  private[graft] def cusumReadout(series: DataFrame, key: String)
+      : DataFrame = {
+    val st = series
+      .agg(count(lit(1)).as("nd"), sum("x").as("sx"),
+        sum(col("x") * col("x")).as("sxx"))
+      .select(
+        round(col("sx").cast(DoubleType) / col("nd"), 6).as("mu"),
+        round(sqrt((col("nd").cast(DoubleType) * col("sxx") -
+          col("sx").cast(DoubleType) * col("sx")) /
+          (col("nd") * (col("nd") - 1))), 6).as("sd"))
+      .select(col("mu"),
+        round(col("sd") * 0.5, 6).as("kk"),
+        round(col("sd") * 4.0, 6).as("hh"))
+    series
+      .agg(sort_array(collect_list(struct(col(key), col("x")))).as("l"))
+      .crossJoin(broadcast(st))
+      .select(col("l"), col("mu"), col("kk"), col("hh"),
+        posexplode(col("l")))
+      .select(col(s"col.$key").as(key), col("col.x").as("n_events"),
+        round(expr(
+          """aggregate(slice(l, 1, pos + 1), 0.0D,
+            |  (acc, e) -> greatest(0.0D,
+            |    acc + (CAST(e.x AS DOUBLE) - mu - kk)))""".stripMargin),
+          6).as("cusum_pos"),
+        round(expr(
+          """aggregate(slice(l, 1, pos + 1), 0.0D,
+            |  (acc, e) -> greatest(0.0D,
+            |    acc + (mu - kk - CAST(e.x AS DOUBLE))))""".stripMargin),
+          6).as("cusum_neg"),
+        col("hh").as("threshold"))
+      .withColumn("is_change",
+        col("cusum_pos") > col("threshold") ||
+          col("cusum_neg") > col("threshold"))
+      .orderBy(key)
   }
 
   /** Shared scored-document derivation for the calibration family
@@ -2379,32 +2572,7 @@ object Relational {
     // users remain at risk). Scale: two user_id-keyed aggs sharing one
     // partitioning, a 1-row obs-end broadcast, then life-table-sized work.
     "q_kaplan_meier" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val obsEnd = ev.agg(max("ts").as("obs_end"))
-      val t0 = ev.groupBy("user_id").agg(min("ts").as("t0"))
-      val firstP = ev.filter(col("event_type") === "purchase")
-        .join(t0, "user_id").filter(col("ts") > col("t0"))
-        .groupBy("user_id").agg(min("ts").as("tp"))
-      val users = t0.join(firstP, Seq("user_id"), "left")
-        .crossJoin(broadcast(obsEnd))
-        .select(
-          when(col("tp").isNotNull, 1L).otherwise(0L).as("ev_flag"),
-          when(col("tp").isNotNull,
-            expr("(unix_micros(tp) - unix_micros(t0)) div 86400000000"))
-            .otherwise(
-              expr("(unix_micros(obs_end) - unix_micros(t0)) div 86400000000"))
-            .as("dur"))
-      val byDur = users.groupBy("dur").agg(
-        sum("ev_flag").as("d"),
-        sum(lit(1L) - col("ev_flag")).as("c"))
-      val total = users.agg(count(lit(1)).as("n_total"))
-      val wz = Window.orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val risk = byDur.crossJoin(broadcast(total))
-        .withColumn("n_risk", col("n_total") -
-          coalesce(sum(col("d") + col("c")).over(wz), lit(0L)))
-        .select("dur", "d", "n_risk", "c")
-      risk
+      lifeTable(s, dir).select("dur", "d", "n_risk", "c")
         .agg(sort_array(collect_list(
           struct(col("dur"), col("d"), col("n_risk"), col("c")))).as("l"))
         .select(col("l"), posexplode(col("l")))
@@ -2501,41 +2669,9 @@ object Relational {
     // only the daily rollup; the flag reads the ROUNDED statistic so a
     // last-ulp wobble can't flip it.
     "q_cusum_changepoint" -> { (s, dir) =>
-      val daily = t(s, dir, "events")
+      cusumReadout(t(s, dir, "events")
         .groupBy(col("ts").cast(DateType).as("day"))
-        .agg(count(lit(1)).as("x"))
-      val st = daily
-        .agg(count(lit(1)).as("nd"), sum("x").as("sx"),
-          sum(col("x") * col("x")).as("sxx"))
-        .select(
-          round(col("sx").cast(DoubleType) / col("nd"), 6).as("mu"),
-          round(sqrt((col("nd").cast(DoubleType) * col("sxx") -
-            col("sx").cast(DoubleType) * col("sx")) /
-            (col("nd") * (col("nd") - 1))), 6).as("sd"))
-        .select(col("mu"),
-          round(col("sd") * 0.5, 6).as("kk"),
-          round(col("sd") * 4.0, 6).as("hh"))
-      daily
-        .agg(sort_array(collect_list(struct(col("day"), col("x")))).as("l"))
-        .crossJoin(broadcast(st))
-        .select(col("l"), col("mu"), col("kk"), col("hh"),
-          posexplode(col("l")))
-        .select(col("col.day").as("day"), col("col.x").as("n_events"),
-          round(expr(
-            """aggregate(slice(l, 1, pos + 1), 0.0D,
-              |  (acc, e) -> greatest(0.0D,
-              |    acc + (CAST(e.x AS DOUBLE) - mu - kk)))""".stripMargin),
-            6).as("cusum_pos"),
-          round(expr(
-            """aggregate(slice(l, 1, pos + 1), 0.0D,
-              |  (acc, e) -> greatest(0.0D,
-              |    acc + (mu - kk - CAST(e.x AS DOUBLE))))""".stripMargin),
-            6).as("cusum_neg"),
-          col("hh").as("threshold"))
-        .withColumn("is_change",
-          col("cusum_pos") > col("threshold") ||
-            col("cusum_neg") > col("threshold"))
-        .orderBy("day")
+        .agg(count(lit(1)).as("x")), "day")
     },
 
     // SNAPSHOT DIFF — the incremental-ingestion audit every corpus refresh
@@ -2695,17 +2831,7 @@ object Relational {
     // array. A constant series (zero variance) yields NULL. Scale: the
     // corpus-sized work is only the daily rollup (the E65/E82 shape).
     "q_acf" -> { (s, dir) =>
-      val daily = t(s, dir, "events")
-        .groupBy(col("ts").cast(DateType).as("day"))
-        .agg(count(lit(1)).as("x"))
-      daily
-        .agg(sort_array(collect_list(struct(col("day"), col("x")))).as("l"))
-        .withColumn("vals", expr("transform(l, e -> CAST(e.x AS DOUBLE))"))
-        .withColumn("n", size(col("vals")))
-        .withColumn("m", expr(
-          "aggregate(vals, 0.0D, (a, x) -> a + x) / CAST(n AS DOUBLE)"))
-        .withColumn("den", expr("aggregate(transform(vals, " +
-          "x -> (x - m) * (x - m)), 0.0D, (a, x) -> a + x)"))
+      dailySeries(s, dir, "den")
         .select(col("vals"), col("n"), col("m"), col("den"),
           explode(expr("sequence(1, 7)")).as("lag"))
         .withColumn("num", expr(
@@ -3423,15 +3549,7 @@ object Relational {
     // prefix-rank the watermark-lateness audit uses, tree unchanged. Σr·x
     // ≈ 1e17 at sf0.1 — BIGINT-safe; DECIMAL(38,0) swap beyond.
     "q_gini" -> { (s, dir) =>
-      val perCust = t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg((sum(money(col("o_totalprice"))) * 100).cast(LongType)
-          .as("rev"))
-      val tot = perCust.agg(count(lit(1)).as("n"), sum("rev").as("s1"))
-      perCust
-        .withColumn("r",
-          row_number().over(Window.orderBy(col("rev"), col("o_custkey"))))
-        .crossJoin(broadcast(tot))
+      rankedRevenue(s, dir)
         .agg(
           max("n").as("n_customers"),
           max("s1").as("total_cents"),
@@ -3549,28 +3667,7 @@ object Relational {
     // pass, no shuffle beyond the 1-row final agg — adding measures grows
     // the stat count quadratically but the pass count not at all.
     "q_pearson_corr" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem").select(
-        col("l_quantity").cast(LongType).as("q"),
-        (money(col("l_extendedprice")) * 100).cast(LongType).as("p"),
-        (col("l_discount").cast(DecimalType(6, 2)) * 100).cast(LongType)
-          .as("d"),
-        (col("l_tax").cast(DecimalType(6, 2)) * 100).cast(LongType)
-          .as("x"))
-      val a = li.agg(
-        count(lit(1)).as("n"),
-        sum("q").as("sq"), sum("p").as("sp"),
-        sum("d").as("sd"), sum("x").as("sx"),
-        sum(col("q") * col("q")).as("sqq"),
-        sum(col("p").cast(DecimalType(18, 0)) *
-          col("p").cast(DecimalType(18, 0))).as("spp"),
-        sum(col("d") * col("d")).as("sdd"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("q") * col("p")).as("sqp"),
-        sum(col("q") * col("d")).as("sqd"),
-        sum(col("q") * col("x")).as("sqx"),
-        sum(col("p") * col("d")).as("spd"),
-        sum(col("p") * col("x")).as("spx"),
-        sum(col("d") * col("x")).as("sdx"))
+      val a = lineitemMoments(s, dir)
       def r(sa: String, sb: String, saa: String, sbb: String,
           sab: String): String =
         s"""CASE WHEN CAST(n AS DOUBLE) * $saa -
@@ -3608,30 +3705,7 @@ object Relational {
     // to the ≤|users| duration rollup, then everything runs on the
     // ≤|distinct durations| life table BY DESIGN.
     "q_nelson_aalen" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val obsEnd = ev.agg(max("ts").as("obs_end"))
-      val t0 = ev.groupBy("user_id").agg(min("ts").as("t0"))
-      val firstP = ev.filter(col("event_type") === "purchase")
-        .join(t0, "user_id").filter(col("ts") > col("t0"))
-        .groupBy("user_id").agg(min("ts").as("tp"))
-      val users = t0.join(firstP, Seq("user_id"), "left")
-        .crossJoin(broadcast(obsEnd))
-        .select(
-          when(col("tp").isNotNull, 1L).otherwise(0L).as("ev_flag"),
-          when(col("tp").isNotNull,
-            expr("(unix_micros(tp) - unix_micros(t0)) div 86400000000"))
-            .otherwise(
-              expr("(unix_micros(obs_end) - unix_micros(t0)) div 86400000000"))
-            .as("dur"))
-      val byDur = users.groupBy("dur").agg(
-        sum("ev_flag").as("d"),
-        sum(lit(1L) - col("ev_flag")).as("c"))
-      val total = users.agg(count(lit(1)).as("n_total"))
-      val wz = Window.orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      byDur.crossJoin(broadcast(total))
-        .withColumn("n_risk", col("n_total") -
-          coalesce(sum(col("d") + col("c")).over(wz), lit(0L)))
+      lifeTable(s, dir)
         .agg(sort_array(collect_list(
           struct(col("dur"), col("d"), col("n_risk")))).as("l"))
         .select(col("l"), posexplode(col("l")))
@@ -3752,28 +3826,7 @@ object Relational {
     // data size — this is exactly how a 100 TB PCA runs (stats pass +
     // driver-sized eigensolve), minus LAPACK.
     "q_pca_power" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem").select(
-        col("l_quantity").cast(LongType).as("q"),
-        (money(col("l_extendedprice")) * 100).cast(LongType).as("p"),
-        (col("l_discount").cast(DecimalType(6, 2)) * 100).cast(LongType)
-          .as("d"),
-        (col("l_tax").cast(DecimalType(6, 2)) * 100).cast(LongType)
-          .as("x"))
-      val a = li.agg(
-        count(lit(1)).as("n"),
-        sum("q").as("sq"), sum("p").as("sp"),
-        sum("d").as("sd"), sum("x").as("sx"),
-        sum(col("q") * col("q")).as("sqq"),
-        sum(col("p").cast(DecimalType(18, 0)) *
-          col("p").cast(DecimalType(18, 0))).as("spp"),
-        sum(col("d") * col("d")).as("sdd"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("q") * col("p")).as("sqp"),
-        sum(col("q") * col("d")).as("sqd"),
-        sum(col("q") * col("x")).as("sqx"),
-        sum(col("p") * col("d")).as("spd"),
-        sum(col("p") * col("x")).as("spx"),
-        sum(col("d") * col("x")).as("sdx"))
+      val a = lineitemMoments(s, dir)
       def cv(sab: String, sa: String, sb: String): String =
         s"(CAST($sab AS DOUBLE) - CAST($sa AS DOUBLE) * $sb / n) / (n - 1.0D)"
       val c = a.filter(col("n") > 1).select(
@@ -3828,18 +3881,10 @@ object Relational {
     // frames — channels beyond ~10 need the sampled permutation estimator,
     // disclosed here.
     "q_shapley_attribution" -> { (s, dir) =>
-      val u = t(s, dir, "events").groupBy("user_id").agg(
-        (max(when(col("event_type") === "click", 1L).otherwise(0L)) +
-          max(when(col("event_type") === "view", 2L).otherwise(0L)) +
-          max(when(col("event_type") === "signup", 4L).otherwise(0L)) +
-          max(when(col("event_type") === "error", 8L).otherwise(0L)))
-          .as("mask"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("conv"))
+      val u = shapleyUsers(s, dir)
       val mc = u.groupBy("mask").agg(sum("conv").as("cv"))
       val sets = s.range(16).select(col("id").as("st"))
-      val v = sets.join(broadcast(mc), expr("(mask & st) = mask"), "left")
-        .groupBy("st").agg(coalesce(sum("cv"), lit(0L)).as("v"))
+      val v = coalitionValues(sets, mc)
       val chan = s.range(4).select(col("id").as("ch"),
         expr("CASE id WHEN 0 THEN 1L WHEN 1 THEN 2L WHEN 2 THEN 4L ELSE 8L END")
           .as("bit"),
@@ -4088,8 +4133,6 @@ object Relational {
           sort_array(collect_list(struct(col("bin"), col("n"), col("sp"),
             col("pos")))).as("l"))
         .withColumn("ybar", expr("CAST(npos AS DOUBLE) / nd"))
-      def fold(term: String) =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
       val pb = "CAST(p.sp AS DOUBLE) / p.n"
       val yb = "CAST(p.pos AS DOUBLE) / p.n"
       one
@@ -4214,14 +4257,7 @@ object Relational {
     // masks the samples touch (never the 2ⁿ lattice) via a broadcast
     // containment join; everything after is ≤M·n rows.
     "q_shapley_sampled" -> { (s, dir) =>
-      val u = t(s, dir, "events").groupBy("user_id").agg(
-        (max(when(col("event_type") === "click", 1L).otherwise(0L)) +
-          max(when(col("event_type") === "view", 2L).otherwise(0L)) +
-          max(when(col("event_type") === "signup", 4L).otherwise(0L)) +
-          max(when(col("event_type") === "error", 8L).otherwise(0L)))
-          .as("mask"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("conv"))
+      val u = shapleyUsers(s, dir)
       val mc = u.groupBy("mask").agg(sum("conv").as("cv"))
       val chan = s.range(4).select(
         expr("CASE id WHEN 0 THEN 1L WHEN 1 THEN 2L WHEN 2 THEN 4L ELSE 8L END")
@@ -4237,8 +4273,7 @@ object Relational {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       val need = perm.select(col("pred").as("st"))
         .union(perm.select((col("pred") + col("bit")).as("st"))).distinct()
-      val v = need.join(broadcast(mc), expr("(mask & st) = mask"), "left")
-        .groupBy("st").agg(coalesce(sum("cv"), lit(0L)).as("v"))
+      val v = coalitionValues(need, mc)
       val marg = perm
         .join(broadcast(v.select(col("st").as("s0"), col("v").as("v0"))),
           col("s0") === col("pred"))
@@ -4246,8 +4281,7 @@ object Relational {
           col("s1") === col("pred") + col("bit"))
         .groupBy("channel").agg(sum(col("v1") - col("v0")).as("phi_sum"))
       val sets = s.range(16).select(col("id").as("st"))
-      val vx = sets.join(broadcast(mc), expr("(mask & st) = mask"), "left")
-        .groupBy("st").agg(coalesce(sum("cv"), lit(0L)).as("v"))
+      val vx = coalitionValues(sets, mc)
       val ex = chan
         .join(broadcast(vx.select(col("st").as("e0"), col("v").as("w0"))),
           expr("(e0 & bit) = 0"))
@@ -4289,29 +4323,11 @@ object Relational {
         .groupBy(col("l_quantity").cast(LongType).as("x"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("k"))
-      val base = hist
+      logisticNewton(hist
         .agg(sum("n").as("n_rows"),
           sort_array(collect_list(struct(col("x"), col("n"), col("k"))))
-            .as("l"))
-        .withColumn("b0", lit(0.0)).withColumn("b1", lit(0.0))
-      val sig = "1.0D / (1.0D + exp(-(b0 + b1 * CAST(p.x AS DOUBLE))))"
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
-      def step(d: DataFrame): DataFrame = d
-        .withColumn("g1", expr(fold(s"CAST(p.k AS DOUBLE) - p.n * $sig")))
-        .withColumn("g2", expr(fold(
-          s"(CAST(p.k AS DOUBLE) - p.n * $sig) * p.x")))
-        .withColumn("h11", expr(fold(s"p.n * $sig * (1.0D - $sig)")))
-        .withColumn("h12", expr(fold(
-          s"p.n * $sig * (1.0D - $sig) * p.x")))
-        .withColumn("h22", expr(fold(
-          s"p.n * $sig * (1.0D - $sig) * p.x * p.x")))
-        .withColumn("det", expr("h11 * h22 - h12 * h12"))
-        .select(col("n_rows"), col("l"),
-          expr("b0 + (h22 * g1 - h12 * g2) / det").as("b0"),
-          expr("b1 + (h11 * g2 - h12 * g1) / det").as("b1"))
-      val it = (1 to 3).foldLeft(base)((d, _) => step(d))
-      it.withColumn("ll", expr(fold(
+            .as("l")), "n_rows", "l")
+        .withColumn("ll", expr(fold(
           "CAST(p.k AS DOUBLE) * (b0 + b1 * CAST(p.x AS DOUBLE)) " +
             "- p.n * ln(1.0D + exp(b0 + b1 * CAST(p.x AS DOUBLE)))")))
         .select(col("n_rows"),
@@ -4377,15 +4393,7 @@ object Relational {
     // customer rollup, rank window on the rollup BY DESIGN with the
     // two-level prefix-rank swap at 1e9 customers.
     "q_trimmed_mean" -> { (s, dir) =>
-      val perCust = t(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg((sum(money(col("o_totalprice"))) * 100).cast(LongType)
-          .as("rev"))
-      val tot = perCust.agg(count(lit(1)).as("n"), sum("rev").as("s1"))
-      perCust
-        .withColumn("r",
-          row_number().over(Window.orderBy(col("rev"), col("o_custkey"))))
-        .crossJoin(broadcast(tot))
+      rankedRevenue(s, dir)
         .agg(max("n").as("n_customers"),
           max("s1").as("s1"),
           sum(when(expr("r > n div 10 AND r <= n - n div 10"), col("rev")))
@@ -4519,8 +4527,6 @@ object Relational {
         sum("y").as("sy"),
         sum(col("y").cast(DecimalType(18, 0)) *
           col("y").cast(DecimalType(18, 0))).as("syy"))
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
       gs.agg(sum("n").as("tn"), sum("sy").as("tsy"),
           count(lit(1)).as("k"),
           sort_array(collect_list(struct(col("g"), col("n"), col("sy"),
@@ -4612,8 +4618,6 @@ object Relational {
         sum("z").as("sz"),
         sum(col("z").cast(DecimalType(18, 0)) *
           col("z").cast(DecimalType(18, 0))).as("szz"))
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
       val st = gs
         .agg(sum("n").as("tn"), sum("sz").as("tsz"),
           count(lit(1)).as("k"),
@@ -4702,8 +4706,6 @@ object Relational {
         .filter(col("d0") + col("d1") > 0L)
         .select(col("dur"), (col("d0") + col("d1")).as("d"), col("d1"),
           (col("n0") + col("n1")).as("n"), col("n1"))
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
       lv.agg(sort_array(collect_list(struct(col("dur"), col("d"),
             col("d1"), col("n"), col("n1")))).as("l"),
           sum("d1").as("o1"))
@@ -4801,8 +4803,7 @@ object Relational {
       // trace: 838/877/21/41/2/6/0/0 changed labels per round), so the
       // fixed 8 rounds stay; an early exit would save at most one round.
       val lbl = Iterate.minLabelJump(und, und.select(col("w1").as("w"))
-        .distinct().select(col("w"), col("w").as("comp"))
-        .localCheckpoint(true), 8)
+        .distinct().select(col("w"), col("w").as("comp")), 8)
       val sz = lbl.groupBy("comp").agg(count(lit(1)).as("comp_size"))
       lbl.join(sz, "comp")
         .select(col("w").as("node"), col("comp"), col("comp_size"))
@@ -5253,13 +5254,12 @@ object Relational {
         .join(dense.select(col("cx").as("nx"), col("cy").as("ny"),
           col("w").as("w2")), Seq("nx", "ny"))
         .select("w1", "w2")
-        .localCheckpoint(true)
       // Fixpoint early-exit is NOT applicable here — the sf0.1 cell
       // chain has diameter right at the 2⁸ horizon (DuckDB trace: labels
       // still changing at round 8), so the declared output IS the 8-round
       // trajectory, not the components.
       val lbl = Iterate.minLabelJump(und,
-        dense.select(col("w"), col("w").as("comp")).localCheckpoint(true), 8)
+        dense.select(col("w"), col("w").as("comp")), 8)
       val sz = lbl.groupBy("comp").agg(count(lit(1)).as("n_cells"))
       val noise = cells.filter(col("n") < 4L)
         .agg(coalesce(sum("n"), lit(0L)).as("n_noise_points"))
@@ -5411,28 +5411,11 @@ object Relational {
           sum(when(trt, 1L).otherwise(0L)).as("k"),
           sum(when(trt, cents).otherwise(0L)).as("syt"),
           sum(when(trt, 0L).otherwise(cents)).as("syc"))
-      val base = hist
+      val sig = logitSig
+      logisticNewton(hist
         .agg(sort_array(collect_list(struct(col("x"), col("n"), col("k"),
-          col("syt"), col("syc")))).as("l"))
-        .withColumn("b0", lit(0.0)).withColumn("b1", lit(0.0))
-      val sig = "1.0D / (1.0D + exp(-(b0 + b1 * CAST(p.x AS DOUBLE))))"
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
-      def step(d: DataFrame): DataFrame = d
-        .withColumn("g1", expr(fold(s"CAST(p.k AS DOUBLE) - p.n * $sig")))
-        .withColumn("g2", expr(fold(
-          s"(CAST(p.k AS DOUBLE) - p.n * $sig) * p.x")))
-        .withColumn("h11", expr(fold(s"p.n * $sig * (1.0D - $sig)")))
-        .withColumn("h12", expr(fold(
-          s"p.n * $sig * (1.0D - $sig) * p.x")))
-        .withColumn("h22", expr(fold(
-          s"p.n * $sig * (1.0D - $sig) * p.x * p.x")))
-        .withColumn("det", expr("h11 * h22 - h12 * h12"))
-        .select(col("l"),
-          expr("b0 + (h22 * g1 - h12 * g2) / det").as("b0"),
-          expr("b1 + (h11 * g2 - h12 * g1) / det").as("b1"))
-      val it = (1 to 3).foldLeft(base)((d, _) => step(d))
-      it.withColumn("wt", expr(fold(s"CAST(p.k AS DOUBLE) / ($sig)")))
+          col("syt"), col("syc")))).as("l")), "l")
+        .withColumn("wt", expr(fold(s"CAST(p.k AS DOUBLE) / ($sig)")))
         .withColumn("wyt", expr(fold(s"CAST(p.syt AS DOUBLE) / ($sig)")))
         .withColumn("wc", expr(fold(
           s"CAST(p.n - p.k AS DOUBLE) / (1.0D - ($sig))")))
@@ -5478,8 +5461,6 @@ object Relational {
             .as("b0"))
         .withColumn("b1", lit(0.0))
       val lam = "exp(b0 + b1 * CAST(p.x AS DOUBLE))"
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
       def step(d: DataFrame): DataFrame = d
         .withColumn("g1", expr(fold(s"CAST(p.sy AS DOUBLE) - p.m * $lam")))
         .withColumn("g2", expr(fold(
@@ -5640,8 +5621,6 @@ object Relational {
       val phi2 = "exp(-(CAST(p.x AS DOUBLE) - m2) * (CAST(p.x AS DOUBLE)" +
         " - m2) / (2.0D * v2)) / sqrt(v2)"
       val g1 = s"(w1 * $phi1) / (w1 * $phi1 + (1.0D - w1) * $phi2)"
-      def fold(term: String): String =
-        s"aggregate(l, 0D, (a, p) -> a + ($term))"
       def step(d: DataFrame): DataFrame = d
         .withColumn("r1", expr(fold(s"p.n * $g1")))
         .withColumn("rx1", expr(fold(s"p.n * $g1 * p.x")))
@@ -6073,34 +6052,8 @@ object Relational {
     // expected steps t = N·1, absorption split B = N·R (rows sum to 1
     // — asserted). Scale: one corpus window pass + a 15-cell rollup.
     "q_absorbing_chain" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.{Window => W}
-      val w = W.partitionBy("user_id").orderBy("ts", "event_id")
-      val e = t(s, dir, "events").select(col("user_id"), col("ts"),
-          col("event_id"), col("event_type").as("src"),
-          when(col("event_type").isin("purchase", "error"), 1L)
-            .otherwise(0L).as("ab"))
-        .withColumn("dst", lead("src", 1).over(w))
-        .withColumn("abs_before", coalesce(sum("ab").over(
-          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .filter(col("dst").isNotNull && col("abs_before") === 0L &&
-          col("ab") === 0L)
-      val keys = Seq("click" -> "c", "signup" -> "s", "view" -> "v",
-        "error" -> "e", "purchase" -> "p")
-      val srcs = keys.take(3)
-      val cnts = for ((sn, sa) <- srcs; (dn, da) <- keys) yield
-        sum(when(col("src") === sn && col("dst") === dn, 1L)
-          .otherwise(0L)).as(s"c_$sa$da")
-      val one = e.agg(cnts.head, cnts.tail: _*)
-      val probs = srcs.zipWithIndex.flatMap { case ((_, sa), i) =>
-        val tot = s"CAST(c_${sa}c + c_${sa}s + c_${sa}v + c_${sa}e " +
-          s"+ c_${sa}p AS DOUBLE)"
-        keys.take(3).zipWithIndex.map { case ((_, da), j) =>
-          expr(s"CAST(c_$sa$da AS DOUBLE) / ($tot)").as(s"q${i + 1}${j + 1}")
-        } ++ Seq(
-          expr(s"CAST(c_${sa}e AS DOUBLE) / ($tot)").as(s"r${i + 1}1"),
-          expr(s"CAST(c_${sa}p AS DOUBLE) / ($tot)").as(s"r${i + 1}2"))
-      }
-      val base = one.select(probs: _*)
+      val srcs = chainStates.take(3)
+      val base = chainCounts(t(s, dir, "events")).select(chainProbs: _*)
       val fin = base.select(col("*") +:
         (1 to 3).flatMap(i => (1 to 3).map(j =>
           expr(fundN(i, j)).as(s"nn$i$j"))): _*)
@@ -6214,17 +6167,7 @@ object Relational {
     // Scale: corpus work is only the daily rollup; everything after is
     // one ≤|days| array on one row.
     "q_yule_walker" -> { (s, dir) =>
-      val daily = t(s, dir, "events")
-        .groupBy(col("ts").cast(DateType).as("day"))
-        .agg(count(lit(1)).as("x"))
-      daily
-        .agg(sort_array(collect_list(struct(col("day"), col("x")))).as("l"))
-        .withColumn("vals", expr("transform(l, e -> CAST(e.x AS DOUBLE))"))
-        .withColumn("n", size(col("vals")))
-        .withColumn("m", expr(
-          "aggregate(vals, 0.0D, (a, x) -> a + x) / CAST(n AS DOUBLE)"))
-        .withColumn("c0", expr("aggregate(transform(vals, " +
-          "x -> (x - m) * (x - m)), 0.0D, (a, x) -> a + x)"))
+      dailySeries(s, dir, "c0")
         .withColumn("c1", expr(
           """aggregate(transform(sequence(1, n - 1), i ->
             |  (element_at(vals, i) - m) *
@@ -6503,24 +6446,9 @@ object Relational {
     // both engines (fundN / markovRemoved). Scale: two corpus window
     // passes collapse to one 18-column row; everything after is scalar.
     "q_markov_attribution" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.{Window => W}
-      val w = W.partitionBy("user_id").orderBy("ts", "event_id")
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val ev = t(s, dir, "events")
-      val e = ev.select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("src"),
-          when(col("event_type").isin("purchase", "error"), 1L)
-            .otherwise(0L).as("ab"))
-        .withColumn("dst", lead("src", 1).over(w))
-        .withColumn("abs_before", coalesce(sum("ab").over(
-          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .filter(col("dst").isNotNull && col("abs_before") === 0L &&
-          col("ab") === 0L)
-      val keys = Seq("click" -> "c", "signup" -> "s", "view" -> "v",
-        "error" -> "e", "purchase" -> "p")
-      val srcs = keys.take(3)
-      val cnts = for ((sn, sa) <- srcs; (dn, da) <- keys) yield
-        sum(when(col("src") === sn && col("dst") === dn, 1L)
-          .otherwise(0L)).as(s"c_$sa$da")
+      val srcs = chainStates.take(3)
       val fc = ev
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -6531,16 +6459,8 @@ object Relational {
           sum(when(col("event_type") === sn, 1L).otherwise(0L))
             .as(s"f${i + 1}")
         }: _*)
-      val one = e.agg(cnts.head, cnts.tail: _*).crossJoin(broadcast(fc))
-      val probs = srcs.zipWithIndex.flatMap { case ((_, sa), i) =>
-        val tot = s"CAST(c_${sa}c + c_${sa}s + c_${sa}v + c_${sa}e " +
-          s"+ c_${sa}p AS DOUBLE)"
-        keys.take(3).zipWithIndex.map { case ((_, da), j) =>
-          expr(s"CAST(c_$sa$da AS DOUBLE) / ($tot)").as(s"q${i + 1}${j + 1}")
-        } ++ Seq(
-          expr(s"CAST(c_${sa}e AS DOUBLE) / ($tot)").as(s"r${i + 1}1"),
-          expr(s"CAST(c_${sa}p AS DOUBLE) / ($tot)").as(s"r${i + 1}2"))
-      } ++ (1 to 3).map(i =>
+      val one = chainCounts(ev).crossJoin(broadcast(fc))
+      val probs = chainProbs ++ (1 to 3).map(i =>
         expr(s"CAST(f$i AS DOUBLE) / CAST(f1 + f2 + f3 AS DOUBLE)")
           .as(s"pi$i"))
       val base = one.select(probs: _*)
@@ -6577,31 +6497,7 @@ object Relational {
     // tail term extends the last step to τ. Scale: identical to KM —
     // two user-keyed aggs, then life-table-sized scalar work.
     "q_rmst" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val obsEnd = ev.agg(max("ts").as("obs_end"))
-      val t0 = ev.groupBy("user_id").agg(min("ts").as("t0"))
-      val firstP = ev.filter(col("event_type") === "purchase")
-        .join(t0, "user_id").filter(col("ts") > col("t0"))
-        .groupBy("user_id").agg(min("ts").as("tp"))
-      val users = t0.join(firstP, Seq("user_id"), "left")
-        .crossJoin(broadcast(obsEnd))
-        .select(
-          when(col("tp").isNotNull, 1L).otherwise(0L).as("ev_flag"),
-          when(col("tp").isNotNull,
-            expr("(unix_micros(tp) - unix_micros(t0)) div 86400000000"))
-            .otherwise(
-              expr("(unix_micros(obs_end) - unix_micros(t0)) div 86400000000"))
-            .as("dur"))
-      val byDur = users.groupBy("dur").agg(
-        sum("ev_flag").as("d"),
-        sum(lit(1L) - col("ev_flag")).as("c"))
-      val total = users.agg(count(lit(1)).as("n_total"))
-      val wz = Window.orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val risk = byDur.crossJoin(broadcast(total))
-        .withColumn("n_risk", col("n_total") -
-          coalesce(sum(col("d") + col("c")).over(wz), lit(0L)))
-      val lrow = risk
+      val lrow = lifeTable(s, dir)
         .agg(sort_array(collect_list(array(
           col("dur").cast(DoubleType), col("d").cast(DoubleType),
           col("n_risk").cast(DoubleType)))).as("l"))
@@ -6995,6 +6891,48 @@ object Relational {
       (s"h${i}_$j", cell)
     }
   }
+
+  /** Absorbing-chain states as (event_type, tag): the three transient
+    * sources first, then the absorbing error and purchase. */
+  private[graft] val chainStates = Seq("click" -> "c", "signup" -> "s",
+    "view" -> "v", "error" -> "e", "purchase" -> "p")
+
+  /** Shared absorbing-chain transitions (q_absorbing_chain +
+    * q_markov_attribution — one censoring rule, so both readouts walk
+    * the same chain): each user's successor over the (ts, event_id)
+    * order, cut at the first absorption, counted into one row of
+    * c_<src><dst> for the 3 × 5 (transient, any) state pairs. */
+  private[graft] def chainCounts(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val srcs = chainStates.take(3)
+    val cnts = for ((sn, sa) <- srcs; (dn, da) <- chainStates) yield
+      sum(when(col("src") === sn && col("dst") === dn, 1L)
+        .otherwise(0L)).as(s"c_$sa$da")
+    events.select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type").as("src"),
+        when(col("event_type").isin("purchase", "error"), 1L)
+          .otherwise(0L).as("ab"))
+      .withColumn("dst", lead("src", 1).over(w))
+      .withColumn("abs_before", coalesce(sum("ab").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .filter(col("dst").isNotNull && col("abs_before") === 0L &&
+        col("ab") === 0L)
+      .agg(cnts.head, cnts.tail: _*)
+  }
+
+  /** Over [[chainCounts]]' row: transient-to-transient probabilities
+    * q<i><j> and absorption probabilities r<i>1 (error), r<i>2
+    * (purchase), each an exact count over its source's row total. */
+  private[graft] def chainProbs: Seq[Column] =
+    chainStates.take(3).zipWithIndex.flatMap { case ((_, sa), i) =>
+      val tot = s"CAST(c_${sa}c + c_${sa}s + c_${sa}v + c_${sa}e " +
+        s"+ c_${sa}p AS DOUBLE)"
+      chainStates.take(3).zipWithIndex.map { case ((_, da), j) =>
+        expr(s"CAST(c_$sa$da AS DOUBLE) / ($tot)").as(s"q${i + 1}${j + 1}")
+      } ++ Seq(
+        expr(s"CAST(c_${sa}e AS DOUBLE) / ($tot)").as(s"r${i + 1}1"),
+        expr(s"CAST(c_${sa}p AS DOUBLE) / ($tot)").as(s"r${i + 1}2"))
+    }
 
   /** q_absorbing_chain: entry (i, j) of N = (I−Q)⁻¹ via the closed
     * 3×3 adjugate/determinant, as ENGINE-NEUTRAL SQL text over the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -70,6 +70,89 @@ object Similarity {
       .select(col("vec_id").as("doc_id"), col("r_ann"))
   }
 
+  /** Shared retrieval system run (q_retrieval_metrics + q_ndcg — one
+    * system, so recall and nDCG grade the same ranking): the top 20 docs
+    * by cosine against the query vector (vec_id 0, self excluded), with
+    * candidates restricted to the query's own label cluster (the IVF
+    * tier). Returns (doc_id, r_sys). */
+  private[graft] def sysTop(s: SparkSession, dir: String): DataFrame = {
+    val e = vecs(s, dir)
+    val q = e.filter(col("vec_id") === 0)
+      .select(col("label").as("q_label"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    broadcast(q)
+      .join(e, col("label") === col("q_label") && col("vec_id") =!= 0)
+      .withColumn("cosine_raw", expr(dot) / (col("qn") * col("nrm")))
+      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
+      .limit(20)
+      .withColumn("r_sys", row_number().over(
+        Window.partitionBy(pmod(col("vec_id"), lit(1)))
+          .orderBy(col("cosine_raw").desc, col("vec_id").asc)).cast("long"))
+      .select(col("vec_id").as("doc_id"), col("r_sys"))
+  }
+
+  /** Shared KV ANN staging (q_kv_ann_topk, q_kv_ann_filtered,
+    * q_kv_ann_euclidean): stages `rows` in the KV registry as `name`,
+    * partitioned by label with `indexCols` indexed, and reads back the
+    * source's per-split top-10 candidates for the all-ones query, with
+    * `opts` added to the read. */
+  private[graft] def kvAnnCandidates(s: SparkSession, name: String,
+      rows: DataFrame, indexCols: Seq[String], opts: (String, String)*)
+      : DataFrame = {
+    graft.sources.KeyGroupedRegistry.stageMulti(name, rows, Seq("label"),
+      indexCols = indexCols)
+    s.read.format("graft.sources.KVDataSource")
+      .option("table", name)
+      .option("annColumn", "embedding")
+      .option("annQuery", Array.fill(64)("1.0").mkString(","))
+      .option("annK", "10")
+      .options(opts.toMap)
+      .load()
+  }
+
+  /** Cosine to the all-ones query (|q| = 8) over [[kvAnnTop10]]'s v, qv. */
+  private def kvAnnCosine: Column =
+    expr("graft_dot(qv, v)") / (sqrt(expr("graft_dot(v, v)")) * lit(8.0))
+
+  /** Shared KV ANN re-rank: the exact top 10 of [[kvAnnCandidates]]'
+    * `cand` by the last of the `score` columns (added in order over the
+    * DOUBLE vector v and the all-ones query qv), ties by vec_id. Returns
+    * (vec_id, label, `out` = the score rounded to 6 dp, rank). */
+  private[graft] def kvAnnTop10(cand: DataFrame, out: String,
+      score: (String, Column)*): DataFrame = {
+    val raw = score.last._1
+    score.foldLeft(cand
+        .withColumn("v", col("embedding").cast("array<double>"))
+        .withColumn("qv", expr("array_repeat(1.0d, 64)"))) {
+        case (d, (n, c)) => d.withColumn(n, c)
+      }
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col(raw).desc, col("vec_id").asc)))
+      .filter(col("rank") <= 10)
+      .select(col("vec_id"), col("label"),
+        round(col(raw), 6).as(out), col("rank"))
+      .orderBy("rank")
+  }
+
+  /** Shared PQ recall reference (q_pq_adc + q_ivf_pq — one reference, so
+    * both index tiers grade against the same neighbours): for each query
+    * vec_id < 10 of the milli-quantized vectors `x` (vec_id, x), its
+    * exact integer-L2 top 3, as (q_id, match_id, hit = 1). The same
+    * broadcast-NLJ shape as q_cosine_topk — constant |Q|, not a
+    * CartesianProduct. */
+  private[graft] def exactTop3(x: DataFrame): DataFrame = {
+    val q = x.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("x").as("qx"))
+    broadcast(q).crossJoin(x)
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("ed", expr(
+        "aggregate(zip_with(qx, x, (a, b) -> (a-b)*(a-b)), 0L, (acc, t) -> acc + t)"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("ed"), col("vec_id"))))
+      .filter(col("rn") <= 3)
+      .select(col("q_id"), col("vec_id").as("match_id"), lit(1).as("hit"))
+  }
+
   /** One q_graph_ann beam round, LAZY (the search loop checkpoints each
     * round's ≤|Q|·B frontier): expand the frontier over out-edges, union
     * with the kept set, dedup, re-score against the queries and keep
@@ -132,20 +215,7 @@ object Similarity {
     // round each.
     "q_retrieval_metrics" -> { (s, dir) =>
       val truth = annTop(s, dir, 20) // brute-force ground truth: (doc_id, r_ann)
-      val e = vecs(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("label").as("q_label"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val sys = broadcast(q)
-        .join(e, col("label") === col("q_label") && col("vec_id") =!= 0)
-        .withColumn("cosine_raw", expr(dot) / (col("qn") * col("nrm")))
-        .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-        .limit(20)
-        .withColumn("r_sys", row_number().over(
-          Window.partitionBy(pmod(col("vec_id"), lit(1)))
-            .orderBy(col("cosine_raw").desc, col("vec_id").asc)).cast("long"))
-        .select(col("vec_id").as("doc_id"), col("r_sys"))
-      truth.join(sys, Seq("doc_id"), "left")
+      truth.join(sysTop(s, dir), Seq("doc_id"), "left")
         .agg(count(lit(1)).as("n_truth"),
           sum(when(col("r_ann") <= 5 && col("r_sys") <= 5, 1L)
             .otherwise(0L)).as("h5"),
@@ -577,18 +647,7 @@ object Similarity {
           .filter(col("vec_id") =!= col("q_id"))
           .groupBy("q_id", "vec_id")
           .agg(sum("qdist").as("adist"))
-        // exact integer-L2 top-3 (the recall reference; same broadcast-NLJ
-        // shape as q_cosine_topk — constant |Q|, not a CartesianProduct)
-        val q = x.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("x").as("qx"))
-        val exact = broadcast(q).crossJoin(x)
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("ed", expr(
-            "aggregate(zip_with(qx, x, (a, b) -> (a-b)*(a-b)), 0L, (acc, t) -> acc + t)"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("ed"), col("vec_id"))))
-          .filter(col("rn") <= 3)
-          .select(col("q_id"), col("vec_id").as("match_id"), lit(1).as("hit"))
+        val exact = exactTop3(x)
         val w = Window.partitionBy("q_id").orderBy(col("adist"), col("vec_id"))
         adc.withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
@@ -668,15 +727,7 @@ object Similarity {
           .groupBy("q_id", "vec_id")
           .agg(sum("qdist").as("adist"))
         // unpruned exact top-3: the recall reference
-        val q = x.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("x").as("qx"))
-        val exact = broadcast(q).crossJoin(x)
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("ed", expr(sq.format("qx", "x")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("ed"), col("vec_id"))))
-          .filter(col("rn") <= 3)
-          .select(col("q_id"), col("vec_id").as("match_id"), lit(1).as("hit"))
+        val exact = exactTop3(x)
         val w = Window.partitionBy("q_id").orderBy(col("adist"), col("vec_id"))
         adc.withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
@@ -948,29 +999,10 @@ object Similarity {
     // direction (deterministic, |q| = 8 exactly). The global-rank window
     // runs over ≤ splits×k = 100 candidate rows, never the corpus.
     "q_kv_ann_topk" -> { (s, dir) =>
-      val name = s"embed_ann:$dir"
-      graft.sources.KeyGroupedRegistry.stageMulti(name,
+      val cand = kvAnnCandidates(s, s"embed_ann:$dir",
         Tables.load(s, dir, "embeddings")
-          .select(col("label"), col("vec_id"), col("embedding")),
-        Seq("label"))
-      val ones64 = Array.fill(64)("1.0").mkString(",")
-      val cand = s.read.format("graft.sources.KVDataSource")
-        .option("table", name)
-        .option("annColumn", "embedding")
-        .option("annQuery", ones64)
-        .option("annK", "10")
-        .load()
-      val w = Window.orderBy(col("cosine_raw").desc, col("vec_id").asc)
-      cand
-        .withColumn("v", col("embedding").cast("array<double>"))
-        .withColumn("qv", expr("array_repeat(1.0d, 64)"))
-        .withColumn("cosine_raw",
-          expr("graft_dot(qv, v)") / (sqrt(expr("graft_dot(v, v)")) * lit(8.0)))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("vec_id"), col("label"),
-          round(col("cosine_raw"), 6).as("cosine"), col("rank"))
-        .orderBy("rank")
+          .select(col("label"), col("vec_id"), col("embedding")), Nil)
+      kvAnnTop10(cand, "cosine", "cosine_raw" -> kvAnnCosine)
     },
 
     // Filtered ANN — Cassandra 5's `WHERE <indexed pred> ORDER BY emb ANN
@@ -982,31 +1014,13 @@ object Similarity {
     // at 100 TB the filter cuts the candidate scoring, not just the final
     // result.
     "q_kv_ann_filtered" -> { (s, dir) =>
-      val name = s"embed_annf:$dir"
-      graft.sources.KeyGroupedRegistry.stageMulti(name,
+      val cand = kvAnnCandidates(s, s"embed_annf:$dir",
         Tables.load(s, dir, "embeddings")
           .select(col("label"), col("vec_id"), col("embedding"),
             pmod(col("vec_id"), lit(4)).cast("long").as("bucket")),
-        Seq("label"), indexCols = Seq("bucket"))
-      val ones64 = Array.fill(64)("1.0").mkString(",")
-      val cand = s.read.format("graft.sources.KVDataSource")
-        .option("table", name)
-        .option("annColumn", "embedding")
-        .option("annQuery", ones64)
-        .option("annK", "10")
-        .load()
+        Seq("bucket"))
         .filter(col("bucket") === 1)
-      val w = Window.orderBy(col("cosine_raw").desc, col("vec_id").asc)
-      cand
-        .withColumn("v", col("embedding").cast("array<double>"))
-        .withColumn("qv", expr("array_repeat(1.0d, 64)"))
-        .withColumn("cosine_raw",
-          expr("graft_dot(qv, v)") / (sqrt(expr("graft_dot(v, v)")) * lit(8.0)))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("vec_id"), col("label"),
-          round(col("cosine_raw"), 6).as("cosine"), col("rank"))
-        .orderBy("rank")
+      kvAnnTop10(cand, "cosine", "cosine_raw" -> kvAnnCosine)
     },
 
     // the same ANN read under SAI's `similarity_function = 'euclidean'`
@@ -1016,31 +1030,14 @@ object Similarity {
     // re-score below element-for-element, so the global top-10 is always a
     // subset of the splits' candidate sets
     "q_kv_ann_euclidean" -> { (s, dir) =>
-      val name = s"embed_ann:$dir"
-      graft.sources.KeyGroupedRegistry.stageMulti(name,
+      val cand = kvAnnCandidates(s, s"embed_ann:$dir",
         Tables.load(s, dir, "embeddings")
-          .select(col("label"), col("vec_id"), col("embedding")),
-        Seq("label"))
-      val ones64 = Array.fill(64)("1.0").mkString(",")
-      val cand = s.read.format("graft.sources.KVDataSource")
-        .option("table", name)
-        .option("annColumn", "embedding")
-        .option("annQuery", ones64)
-        .option("annK", "10")
-        .option("annSim", "euclidean")
-        .load()
-      val w = Window.orderBy(col("euc_raw").desc, col("vec_id").asc)
-      cand
-        .withColumn("v", col("embedding").cast("array<double>"))
-        .withColumn("qv", expr("array_repeat(1.0d, 64)"))
-        .withColumn("d2", expr("aggregate(zip_with(qv, v, " +
-          "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"))
-        .withColumn("euc_raw", lit(1.0) / (lit(1.0) + col("d2")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("vec_id"), col("label"),
-          round(col("euc_raw"), 6).as("sim_euc"), col("rank"))
-        .orderBy("rank")
+          .select(col("label"), col("vec_id"), col("embedding")), Nil,
+        "annSim" -> "euclidean")
+      kvAnnTop10(cand, "sim_euc",
+        "d2" -> expr("aggregate(zip_with(qv, v, " +
+          "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"),
+        "euc_raw" -> lit(1.0) / (lit(1.0) + col("d2")))
     },
 
     // IN-BATCH NEGATIVE SAMPLING — the contrastive-training data prep
@@ -1096,21 +1093,7 @@ object Similarity {
       val rel = annTop(s, dir, 20)
         .withColumn("g", when(col("r_ann") <= 5, 3L)
           .when(col("r_ann") <= 10, 2L).otherwise(1L))
-      val e = vecs(s, dir)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("label").as("q_label"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val sys = broadcast(q)
-        .join(e, col("label") === col("q_label") && col("vec_id") =!= 0)
-        .withColumn("cosine_raw", expr(dot) / (col("qn") * col("nrm")))
-        .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-        .limit(20)
-        .withColumn("r_sys", row_number().over(
-          Window.partitionBy(pmod(col("vec_id"), lit(1)))
-            .orderBy(col("cosine_raw").desc, col("vec_id").asc))
-          .cast("long"))
-        .select(col("vec_id").as("doc_id"), col("r_sys"))
-      val dcg = sys.filter(col("r_sys") <= 10)
+      val dcg = sysTop(s, dir).filter(col("r_sys") <= 10)
         .join(rel.select("doc_id", "g"), Seq("doc_id"), "left")
         .withColumn("g", coalesce(col("g"), lit(0L)))
         .agg(sort_array(collect_list(struct(col("r_sys"), col("g"))))

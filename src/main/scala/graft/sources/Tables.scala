@@ -12,11 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * natively through the DSv1 file source (SURVEY.md §2.2).
   */
 object Tables {
-  val star: Seq[String] =
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-  val pipeline: Seq[String] = Seq("events", "documents", "embeddings")
-  val all: Seq[String] = star ++ pipeline
-
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = name match {
@@ -41,10 +36,6 @@ object Tables {
     case _ =>
       spark.read.parquet(path(dir, name))
   }
-
-  /** Register every table as a temp view so spark.sql(...) works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   /** Spread rows across all cores ONLY when the scan yields fewer splits
     * than the default parallelism (the local single-file-testdata case, where

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.Pipeline.hExpr
+import graft.operators.{Pipeline, Relational}
 import graft.sources.Tables
 
 /** Structured Streaming surface over the `events` table (SURVEY.md §2.4 /
@@ -241,10 +242,19 @@ object Streaming {
     * history. */
   private val FilesPerTrigger = 4L
 
-  private def stageRoot(tag: String, dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft-stream/$tag-$safe"
+  /** Parent of every staged dir: one child per JVM
+    * (`<tmpdir>/graft-stream/<pid>`), so JVMs sharing a host never
+    * overwrite each other's staged files; it goes, contents included,
+    * when the JVM exits. */
+  private lazy val StageRoot: String = {
+    val root = s"${sys.props("java.io.tmpdir")}/graft-stream/${ProcessHandle.current().pid()}"
+    sys.addShutdownHook(dropCkpt(root))
+    root
   }
+
+  /** Where [[replay]] stages `tag`'s files for the sf-dir `dir`. */
+  private[graft] def stagedPath(tag: String, dir: String): String =
+    s"$StageRoot/$tag-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
 
   /** Staged dirs already produced this session — queries without a `prep`
     * replay byte-identical data, so stage it once per sf-dir. */
@@ -263,7 +273,7 @@ object Streaming {
   private[streaming] def replay(s: SparkSession, dir: String, tag: String,
       chunks: Int = Chunks)(frame: => DataFrame,
       sentinel: java.sql.Timestamp => Row): DataFrame = {
-    val path = stageRoot(tag, dir)
+    val path = stagedPath(tag, dir)
     val schema = staged.getOrElseUpdate(path, {
       val df = frame
       val maxTs = df.agg(max("ts")).head().getTimestamp(0)
@@ -408,6 +418,37 @@ object Streaming {
   }
 
   /** Run `out` to its end into a memory sink and return the finished table. */
+  /** Shared purchase/signup stream sides (q_stream_left_join +
+    * q_stream_full_join): over the 30-minute-watermarked event stream,
+    * purchases (p_id, p_user, p_ts) joined `how` to the same user's
+    * signups (s_id, s_user, s_ts) of the 12 hours up to the purchase. */
+  private[graft] def purchaseSignupJoin(s: SparkSession, dir: String, how: String)
+      : DataFrame = {
+    val base = eventStream(s, dir, "events").withWatermark("ts", "30 minutes")
+    // The sentinel must survive the branch filters: Catalyst legally
+    // pushes an event_type predicate below EventTimeWatermark (it does
+    // not reference the event-time column), so a plain type filter
+    // strips the sentinel BEFORE the watermark accumulator on both scan
+    // instances and the final state eviction never fires — the inner
+    // q_stream_join never notices (matches emit immediately), but outer
+    // rows stayed pinned in state forever (observed: the last two
+    // unmatched purchases never flushed). Letting '__sentinel' through
+    // costs one self-match artifact row (user -1 joins itself), which
+    // each caller drops from the finished BATCH table, where pushdown
+    // can't reach back into the streaming plan.
+    val p = base.filter(col("event_type").isin("purchase", "__sentinel"))
+      .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"))
+    val sg = base.filter(col("event_type").isin("signup", "__sentinel"))
+      .select(col("event_id").as("s_id"), col("user_id").as("s_user"),
+        col("ts").as("s_ts"))
+    p.join(sg,
+      col("p_user") === col("s_user") &&
+        col("s_ts") <= col("p_ts") &&
+        col("s_ts") >= col("p_ts") - expr("INTERVAL 12 HOURS"),
+      how)
+  }
+
   private def runToMemory(out: DataFrame, name: String,
       mode: String = "append", provider: String = HdfsProvider): DataFrame = {
     runToEnd(out.sparkSession,
@@ -981,29 +1022,7 @@ object Streaming {
     // not a per-row cost — it does not scale with data volume (the
     // streaming scale probe pins exactly this).
     "q_stream_left_join" -> { (s, dir) =>
-      val base = eventStream(s, dir, "events").withWatermark("ts", "30 minutes")
-      // The sentinel must survive the branch filters: Catalyst legally
-      // pushes an event_type predicate below EventTimeWatermark (it does
-      // not reference the event-time column), so a plain type filter
-      // strips the sentinel BEFORE the watermark accumulator on both scan
-      // instances and the final state eviction never fires — the inner
-      // q_stream_join never notices (matches emit immediately), but outer
-      // rows stayed pinned in state forever (observed: the last two
-      // unmatched purchases never flushed). Letting '__sentinel' through
-      // costs one self-match artifact row (user -1 joins itself), dropped
-      // from the finished BATCH table below where pushdown can't reach
-      // back into the streaming plan.
-      val p = base.filter(col("event_type").isin("purchase", "__sentinel"))
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-      val sg = base.filter(col("event_type").isin("signup", "__sentinel"))
-        .select(col("event_id").as("s_id"), col("user_id").as("s_user"),
-          col("ts").as("s_ts"))
-      val joined = p.join(sg,
-        col("p_user") === col("s_user") &&
-          col("s_ts") <= col("p_ts") &&
-          col("s_ts") >= col("p_ts") - expr("INTERVAL 12 HOURS"),
-        "left_outer")
+      val joined = purchaseSignupJoin(s, dir, "left_outer")
         .select(col("p_id"), col("s_id"), col("p_user").as("user_id"),
           col("p_ts"), col("s_ts"))
       runToMemory(joined, "graft_stream_left_join")
@@ -1020,18 +1039,7 @@ object Streaming {
     // sentinel-self-match artifact row is dropped null-safely below —
     // `=!=` would silently drop every half-null OUTER row too.
     "q_stream_full_join" -> { (s, dir) =>
-      val base = eventStream(s, dir, "events").withWatermark("ts", "30 minutes")
-      val p = base.filter(col("event_type").isin("purchase", "__sentinel"))
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-      val sg = base.filter(col("event_type").isin("signup", "__sentinel"))
-        .select(col("event_id").as("s_id"), col("user_id").as("s_user"),
-          col("ts").as("s_ts"))
-      val joined = p.join(sg,
-        col("p_user") === col("s_user") &&
-          col("s_ts") <= col("p_ts") &&
-          col("s_ts") >= col("p_ts") - expr("INTERVAL 12 HOURS"),
-        "full_outer")
+      val joined = purchaseSignupJoin(s, dir, "full_outer")
         .select(col("p_id"), col("s_id"),
           coalesce(col("p_user"), col("s_user")).as("user_id"),
           col("p_ts"), col("s_ts"))
@@ -1050,7 +1058,7 @@ object Streaming {
     // The output dir is deleted up front: the sink's _spark_metadata log
     // lives in it, and a stale log would make a re-run's batches no-ops.
     "q_stream_sink_files" -> { (s, dir) =>
-      val outPath = stageRoot("sink-out", dir) + "/out"
+      val outPath = stagedPath("sink-out", dir) + "/out"
       val hp = new org.apache.hadoop.fs.Path(outPath)
       hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val agg = eventStream(s, dir, "events")
@@ -1363,10 +1371,9 @@ object Streaming {
     // FINISHED window table (≤ hours-of-history rows, localCheckpoint'd
     // so the two readout derivations — the stats row and the sorted
     // list — don't self-join the memory-sink lineage, the
-    // q_stream_percentiles lesson). Same (μ, 0.5σ slack, 4σ threshold)
-    // self-referential parameterization and the same slice-prefix
-    // greatest-folds as the batch operator — the stream must flag
-    // exactly the hours the batch replay flags. Scale: window state is
+    // q_stream_percentiles lesson). The readout is the batch operator's
+    // own (Relational.cusumReadout) — the stream must flag exactly the
+    // hours the batch replay flags. Scale: window state is
     // watermark-bounded; the readout frame grows one row per hour.
     "q_stream_cusum" -> { (s, dir) =>
       val agg = eventStream(s, dir, "cusumwin")
@@ -1379,40 +1386,7 @@ object Streaming {
         .filter(col("event_type") =!= "__sentinel")
         .groupBy("w_start").agg(sum("n").as("x"))
         .localCheckpoint(true)
-      val st = wins
-        .agg(count(lit(1)).as("nd"), sum("x").as("sx"),
-          sum(col("x") * col("x")).as("sxx"))
-        .select(
-          round(col("sx").cast(DoubleType) / col("nd"), 6).as("mu"),
-          round(sqrt((col("nd").cast(DoubleType) * col("sxx") -
-            col("sx").cast(DoubleType) * col("sx")) /
-            (col("nd") * (col("nd") - 1))), 6).as("sd"))
-        .select(col("mu"),
-          round(col("sd") * 0.5, 6).as("kk"),
-          round(col("sd") * 4.0, 6).as("hh"))
-      wins
-        .agg(sort_array(collect_list(struct(col("w_start"), col("x"))))
-          .as("l"))
-        .crossJoin(broadcast(st))
-        .select(col("l"), col("mu"), col("kk"), col("hh"),
-          posexplode(col("l")))
-        .select(col("col.w_start").as("w_start"),
-          col("col.x").as("n_events"),
-          round(expr(
-            """aggregate(slice(l, 1, pos + 1), 0.0D,
-              |  (acc, e) -> greatest(0.0D,
-              |    acc + (CAST(e.x AS DOUBLE) - mu - kk)))""".stripMargin),
-            6).as("cusum_pos"),
-          round(expr(
-            """aggregate(slice(l, 1, pos + 1), 0.0D,
-              |  (acc, e) -> greatest(0.0D,
-              |    acc + (mu - kk - CAST(e.x AS DOUBLE))))""".stripMargin),
-            6).as("cusum_neg"),
-          col("hh").as("threshold"))
-        .withColumn("is_change",
-          col("cusum_pos") > col("threshold") ||
-            col("cusum_neg") > col("threshold"))
-        .orderBy("w_start")
+      Relational.cusumReadout(wins, "w_start")
     },
 
     // STREAMING ENTITY MATCH — q_entity_match run as an online service:
@@ -1534,15 +1508,7 @@ object Streaming {
     // and every real window closes under the sentinel-advanced
     // watermark, so the sink equals the batch rollup the oracle runs.
     "q_stream_corpus_pipeline" -> { (s, dir) =>
-      import graft.operators.Pipeline.ngramExpr
-      val shingles =
-        s"array_distinct(transform(${ngramExpr(5)}, g -> ${hExpr("g")}))"
-      val bench = Tables.load(s, dir, "documents")
-        .filter(col("doc_id") % 50 === 0)
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 5)
-        .select(explode(expr(shingles)).as("sh")).distinct()
-        .agg(collect_set(col("sh")).as("bset"))
+      val bench = Pipeline.contamBench(Tables.load(s, dir, "documents"))
         .withColumn("k", lit(1))
       // Every pre-agg filter must PASS the sentinel doc (doc_id = -1):
       // Catalyst pushes deterministic filters below the EventTimeWatermark
@@ -1551,31 +1517,15 @@ object Streaming {
       // zero rows for exactly this reason). The sentinel's own window can
       // never be emitted — its end stays ahead of the final watermark —
       // so it needs no post-sink scrubbing.
-      val out = docStream(s, dir, "corpus-pipe",
+      val out = Pipeline.wordStats(docStream(s, dir, "corpus-pipe",
           prep = df => df.unionByName(df.filter(col("doc_id") % 37 === 0)))
         .withWatermark("ts", "1 hour")
         .filter(col("doc_id") % 50 =!= 0)
-        .withColumn("w", split(col("text"), " "))
-        .withColumn("tok", size(col("w")).cast("long"))
-        .withColumn("chars",
-          expr("aggregate(w, 0L, (a, x) -> a + length(x))"))
-        .withColumn("alpha",
-          expr("CAST(size(filter(w, x -> x rlike '[a-z]')) AS BIGINT)"))
-        .withColumn("sym", expr(
-          "CAST(size(filter(w, x -> x IN ('#', '...'))) AS BIGINT)"))
-        .withColumn("stop", expr(
-          "CAST(size(filter(w, x -> x IN ('the','be','to','of','and'," +
-            "'that','have','with'))) AS BIGINT)"))
-        .filter(col("doc_id") === -1L ||
-          (col("tok") >= 20L && col("tok") <= 1000L &&
-            col("chars") >= lit(3L) * col("tok") &&
-            col("chars") <= lit(10L) * col("tok") &&
-            lit(10L) * col("sym") <= col("tok") &&
-            lit(10L) * col("alpha") >= lit(8L) * col("tok") &&
-            col("stop") >= 2L))
+        .withColumn("w", split(col("text"), " ")), "tok")
+        .filter(col("doc_id") === -1L || Pipeline.gopherPass("tok"))
         .dropDuplicatesWithinWatermark("doc_id")
         .withColumn("sh_arr", expr(
-          s"CASE WHEN size(w) >= 5 THEN $shingles END"))
+          s"CASE WHEN size(w) >= 5 THEN ${Pipeline.shingleHashes} END"))
         .withColumn("k", lit(1))
         .join(broadcast(bench), Seq("k"), "left")
         .withColumn("contaminated",

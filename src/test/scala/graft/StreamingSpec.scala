@@ -147,8 +147,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // identical state: this is the at-least-once → exactly-once argument
     // the sink makes (no batchId ledger anywhere).
     val fqn = "graftcat.streamks.user_latest"
-    val staged = s"${sys.props("java.io.tmpdir")}/graft-stream/" +
-      s"events-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val staged = Streaming.stagedPath("events", sfDir)
     val schema = spark.read.parquet(staged).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2").parquet(staged)
@@ -176,8 +175,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     spark.sql("DROP TABLE IF EXISTS graftcat.streamks.cnt")
     spark.sql("CREATE TABLE graftcat.streamks.cnt (id BIGINT, hits BIGINT) " +
       "TBLPROPERTIES ('key'='id', 'counters'='hits')")
-    val staged = s"${sys.props("java.io.tmpdir")}/graft-stream/" +
-      s"events-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val staged = Streaming.stagedPath("events", sfDir)
     val schema = spark.read.parquet(staged).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2").parquet(staged)

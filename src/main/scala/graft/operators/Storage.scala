@@ -2557,7 +2557,7 @@ object Storage {
       val s2 = s.newSession()
       s2.conf.set("spark.sql.sources.useV1SourceList", "")
       s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      s2.read.parquet(Tables.path(dir, "lineitem"))
+      Tables.parquet(s2, Tables.path(dir, "lineitem"))
         .agg(count(lit(1)).as("n_rows"))
     },
 

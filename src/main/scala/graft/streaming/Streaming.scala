@@ -417,11 +417,11 @@ object Streaming {
     }
   }
 
-  /** Run `out` to its end into a memory sink and return the finished table. */
-  /** Shared purchase/signup stream sides (q_stream_left_join +
-    * q_stream_full_join): over the 30-minute-watermarked event stream,
-    * purchases (p_id, p_user, p_ts) joined `how` to the same user's
-    * signups (s_id, s_user, s_ts) of the 12 hours up to the purchase. */
+  /** Shared purchase/signup stream sides (q_stream_join,
+    * q_stream_left_join and q_stream_full_join): over the
+    * 30-minute-watermarked event stream, purchases (p_id, p_user, p_ts)
+    * joined `how` to the same user's signups (s_id, s_user, s_ts) of the
+    * 12 hours up to the purchase. */
   private[graft] def purchaseSignupJoin(s: SparkSession, dir: String, how: String)
       : DataFrame = {
     val base = eventStream(s, dir, "events").withWatermark("ts", "30 minutes")
@@ -429,9 +429,9 @@ object Streaming {
     // pushes an event_type predicate below EventTimeWatermark (it does
     // not reference the event-time column), so a plain type filter
     // strips the sentinel BEFORE the watermark accumulator on both scan
-    // instances and the final state eviction never fires — the inner
-    // q_stream_join never notices (matches emit immediately), but outer
-    // rows stayed pinned in state forever (observed: the last two
+    // instances and the final state eviction never fires — an inner
+    // join never notices (matches emit immediately), but outer rows
+    // stayed pinned in state forever (observed: the last two
     // unmatched purchases never flushed). Letting '__sentinel' through
     // costs one self-match artifact row (user -1 joins itself), which
     // each caller drops from the finished BATCH table, where pushdown
@@ -449,6 +449,7 @@ object Streaming {
       how)
   }
 
+  /** Run `out` to its end into a memory sink and return the finished table. */
   private def runToMemory(out: DataFrame, name: String,
       mode: String = "append", provider: String = HdfsProvider): DataFrame = {
     runToEnd(out.sparkSession,
@@ -982,22 +983,11 @@ object Streaming {
     // in the micro-batch where both sides have arrived, so chunked replay
     // converges to the batch join the oracle computes.
     "q_stream_join" -> { (s, dir) =>
-      // watermark BEFORE the type filters so the sentinel advances it on
-      // both branches of the self-joined stream
-      val base = eventStream(s, dir, "events").withWatermark("ts", "30 minutes")
-      val p = base.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-      val sg = base.filter(col("event_type") === "signup")
-        .select(col("event_id").as("s_id"), col("user_id").as("s_user"),
-          col("ts").as("s_ts"))
-      val joined = p.join(sg,
-        col("p_user") === col("s_user") &&
-          col("s_ts") <= col("p_ts") &&
-          col("s_ts") >= col("p_ts") - expr("INTERVAL 12 HOURS"))
+      val joined = purchaseSignupJoin(s, dir, "inner")
         .select(col("p_id"), col("s_id"), col("p_user").as("user_id"),
           col("p_ts"), col("s_ts"))
       runToMemory(joined, "graft_stream_join")
+        .filter(col("p_id") =!= -1L)
         .orderBy("p_id", "s_id")
     },
 

@@ -56,21 +56,23 @@ object QProf {
     spark.stop()
   }
 
-  /** Untimed runs of `name` until one is not faster than the run before
-    * it, at most [[MaxWarm]]; returns how many ran. One fixed warm run
+  /** Untimed runs of `name` until two in a row are within 5% of each
+    * other, at most [[MaxWarm]]; returns how many ran. One fixed warm run
     * left the session's first query colder (JIT, codegen, staged tables)
-    * than the ones after it, so min-of-N depended on query order. */
+    * than the ones after it, so min-of-N depended on query order; stopping
+    * at the first run not faster than the one before hit its cap of 5 on
+    * every query measured. */
   def warm(spark: SparkSession, name: String): Int = {
     @annotation.tailrec
     def loop(prev: Double, n: Int): Int =
       if (n == MaxWarm) n
       else {
         val t = Run(spark, name, Run.sfDir).get
-        if (t >= prev) n + 1 else loop(t, n + 1)
+        if (math.abs(t - prev) <= 0.05 * math.min(t, prev)) n + 1 else loop(t, n + 1)
       }
     loop(Double.PositiveInfinity, 0)
   }
-  private val MaxWarm = 5
+  private val MaxWarm = 10
 
   /** Scheduler numbers of one run: its jobs (by id: wall ns, call site), the
     * stages and tasks of those jobs, and its micro-batches' progress lines. */

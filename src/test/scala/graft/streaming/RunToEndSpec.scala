@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.{Run, SparkFixture}
 
@@ -52,25 +53,35 @@ class RunToEndSpec extends AnyFunSuite with SparkFixture {
     assert(ckptDirs() == before)
   }
 
-  test("a run of q_stream_kv_sink leaves no checkpoint dir behind") {
-    val staging = new java.io.File(sys.props("java.io.tmpdir"), "graft-stream")
-    def kvsink(): Set[String] = Option(staging.list()).fold(Set.empty[String])(
-      _.filter(_.startsWith("ckpt-kvsink-")).toSet)
-    val (sinkBefore, ckptBefore) = (kvsink(), ckptDirs())
-    val r = Run(spark, "q_stream_kv_sink", sfDir)
+  /** Every path under this JVM's staging root (the parent of each
+    * [[Streaming.stagedPath]]), relative to it. */
+  private def stagedFiles(): Set[String] = {
+    val root = new java.io.File(Streaming.stagedPath("any", sfDir)).getParentFile.toPath
+    if (!java.nio.file.Files.isDirectory(root)) Set.empty
+    else {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(root.relativize(_).toString).toSet finally walk.close()
+    }
+  }
+
+  /** Runs `name` once, which stages its replay, then again: the second run
+    * must leave the staging root and the checkpoint root as it found them. */
+  private def secondRunLeavesNothing(name: String): Unit = {
+    val first = Run(spark, name, sfDir)
+    assert(first.error.isEmpty, first.error)
+    val (stagedBefore, ckptBefore) = (stagedFiles(), ckptDirs())
+    assert(stagedBefore.nonEmpty, s"$name staged nothing")
+    val r = Run(spark, name, sfDir)
     assert(r.error.isEmpty, r.error)
-    assert(kvsink() == sinkBefore)
+    assert(stagedFiles() == stagedBefore)
     assert(ckptDirs() == ckptBefore)
   }
 
+  test("a run of q_stream_kv_sink leaves no checkpoint dir behind") {
+    secondRunLeavesNothing("q_stream_kv_sink")
+  }
+
   test("a run of q_stream_state_reader leaves no checkpoint dir behind") {
-    val staging = new java.io.File(sys.props("java.io.tmpdir"), "graft-stream")
-    def stateCkpts(): Set[String] = Option(staging.list()).fold(Set.empty[String])(
-      _.filter(_.startsWith("stateckpt-")).toSet)
-    val (stateBefore, ckptBefore) = (stateCkpts(), ckptDirs())
-    val r = Run(spark, "q_stream_state_reader", sfDir)
-    assert(r.error.isEmpty, r.error)
-    assert(stateCkpts() == stateBefore)
-    assert(ckptDirs() == ckptBefore)
+    secondRunLeavesNothing("q_stream_state_reader")
   }
 }

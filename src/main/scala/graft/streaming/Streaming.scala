@@ -434,8 +434,8 @@ object Streaming {
     // stayed pinned in state forever (observed: the last two
     // unmatched purchases never flushed). Letting '__sentinel' through
     // costs one self-match artifact row (user -1 joins itself), which
-    // each caller drops from the finished BATCH table, where pushdown
-    // can't reach back into the streaming plan.
+    // each outer caller drops from the finished BATCH table, where
+    // pushdown can't reach back into the streaming plan.
     val p = base.filter(col("event_type").isin("purchase", "__sentinel"))
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"))
@@ -981,13 +981,19 @@ object Streaming {
     // once the other side's watermark passes their ts + 12 h; without it,
     // stream-stream join state grows forever. Inner-join results emit eagerly
     // in the micro-batch where both sides have arrived, so chunked replay
-    // converges to the batch join the oracle computes.
+    // converges to the batch join the oracle computes. Unlike the outer
+    // joins, the inner join drops the sentinel INSIDE the streaming plan,
+    // from both sides: Catalyst pushes each id predicate below its side's
+    // EventTimeWatermark, so the watermark never jumps past the buffered
+    // rows and no eviction-only batch runs (an inner join emits nothing on
+    // eviction). With one side's sentinel left in, the min policy still
+    // moves the watermark up to the other side's max.
     "q_stream_join" -> { (s, dir) =>
       val joined = purchaseSignupJoin(s, dir, "inner")
+        .filter(col("p_id") =!= -1L && col("s_id") =!= -1L)
         .select(col("p_id"), col("s_id"), col("p_user").as("user_id"),
           col("p_ts"), col("s_ts"))
       runToMemory(joined, "graft_stream_join")
-        .filter(col("p_id") =!= -1L)
         .orderBy("p_id", "s_id")
     },
 

@@ -64,12 +64,14 @@ class RunToEndSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  /** Runs `name` once, which stages its replay, then again: the second run
-    * must leave the staging root and the checkpoint root as it found them. */
+  /** Runs `name` once, which stages its replay, then again: neither run
+    * may leave a checkpoint dir behind, and the second must leave the
+    * staging root as the first left it. */
   private def secondRunLeavesNothing(name: String): Unit = {
+    val ckptBefore = ckptDirs()
     val first = Run(spark, name, sfDir)
     assert(first.error.isEmpty, first.error)
-    val (stagedBefore, ckptBefore) = (stagedFiles(), ckptDirs())
+    val stagedBefore = stagedFiles()
     assert(stagedBefore.nonEmpty, s"$name staged nothing")
     val r = Run(spark, name, sfDir)
     assert(r.error.isEmpty, r.error)
